@@ -10,8 +10,10 @@ Usage: bench_tripwire.py <fresh BENCH_LOCAL.json> <prev record.json> [factor]
 Compares PROBE-NORMALIZED per-query times (cal_norm_queries: seconds /
 calibration probe, so two records from drifted environments compare
 directly). Queries slower than `factor` (default 3.0) x their previous
-normalized time are listed and the script exits 1. Sub-100ms-normalized
-entries are skipped (scheduler noise band, not a regression signal).
+normalized time are listed and the script exits 1. A query whose current
+normalized time is within the 0.1 noise band never trips; one that leaves
+the band trips against max(prev, 0.1 / factor), so a fast query that
+blows up (0.05 -> 50) is caught.
 """
 import json
 import sys
@@ -23,9 +25,16 @@ cur = json.load(open(sys.argv[1]))["cal_norm_queries"]
 prev = json.load(open(sys.argv[2]))["cal_norm_queries"]
 
 shared = sorted(set(cur) & set(prev))
-tripped = [(q, prev[q], cur[q], cur[q] / prev[q])
+BASE_FLOOR = NOISE_FLOOR / FACTOR  # a prev below this compares as this
+
+
+def base(q):
+    return max(prev[q], BASE_FLOOR)
+
+
+tripped = [(q, prev[q], cur[q], cur[q] / base(q))
            for q in shared
-           if prev[q] > NOISE_FLOOR and cur[q] > prev[q] * FACTOR]
+           if cur[q] > NOISE_FLOOR and cur[q] > base(q) * FACTOR]
 removed = sorted(set(prev) - set(cur))
 
 if removed:

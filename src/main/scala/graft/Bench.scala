@@ -1,34 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    require(args.isEmpty, "Bench times every query; time named ones with graft.Dev run")
+    val sfDir = LocalSession.sfDir
     // samples per query; medians are reported. 3 by default — enough to
     // reject one bad sample (GC pause, JIT recompile) per query, which is
     // exactly the failure mode a single-sample record could not arbitrate
     // (round-5 record showed 4 "regressions" >=2x on unchanged code).
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the suite compiles 60+ distinct plans several times (warm-up +
-      // timed passes), each plan producing SEVERAL generated classes (one
-      // per codegen stage); the default 100-entry generated-class cache
-      // evicts across the pass and recompiles — a service with a standing
-      // query set wants the whole set resident
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional args: run only the named queries (local profiling aid).
+    val spark = LocalSession.create()
     // benchOnlyQueries ride along: no oracle row, but their timings are
     // the record for the codedKeys shuffle-mode claims
-    val all = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
-    val selected =
-      if (args.nonEmpty) all.filter(q => args.contains(q._1))
-      else all
-    val ordered = selected.toSeq.sortBy(_._1)
+    val ordered = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries).toSeq.sortBy(_._1)
+    // A query that throws is recorded here and never timed: a caught
+    // failure must not read as a fast query. The bench exits non-zero
+    // when this is not empty.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def attempt(name: String)(body: => Unit): Unit =
+      if (!failed(name)) try body catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+      }
     // Warm-up pass: run every query once untimed so the timed passes
     // measure steady-state execution — what a long-running service
     // delivers — instead of charging each query its one-off Janino
@@ -38,8 +30,8 @@ object Bench {
     // output work (similarities, rounded series, redactions) the query
     // exists to produce. toRdd materializes every output column — what
     // a real consumer (parquet sink, API layer) pays.
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, sfDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
+    ordered.foreach { case (name, fn) =>
+      attempt(name)(fn(spark, sfDir).queryExecution.toRdd.count())
     }
     def med(v: Vector[Double]): Double = {
       val s = v.sorted
@@ -93,16 +85,20 @@ object Bench {
     val calibC = scala.collection.mutable.ArrayBuffer[Double]()
     (1 to samples).foreach { _ =>
       ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        timings(name) = timings.getOrElse(name, Vector.empty) :+ dt
+        attempt(name) {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).queryExecution.toRdd.count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          timings(name) = timings.getOrElse(name, Vector.empty) :+ dt
+        }
       }
       calib += calibrationOnce()
       calibC += calComputeOnce()
     }
-    val results = timings.map { case (k, v) => k -> med(v) }.toMap
-    val spreads = timings.map { case (k, v) => k -> (v.max - v.min) }.toMap
+    // a query that failed in a later pass keeps no timing at all
+    val timed = timings.toMap -- failed
+    val results = timed.map { case (k, v) => k -> med(v) }
+    val spreads = timed.map { case (k, v) => k -> (v.max - v.min) }
     val calibrationSec = med(calib.toVector)
     val calComputeSec = med(calibC.toVector)
     def jmap(m: Map[String, Double]) =
@@ -130,17 +126,20 @@ object Bench {
       (col("id") % 1000).cast("string"), lit(" "),
       (lit(1700000000L) + col("id") % 86400).cast("string")).as("line")).as[String]
     val parsePipe = new graft.streaming.IngestPipeline(dataPath = "/tmp/x", treePath = "/tmp/y")
-    val ingestRate = try {
+    // a failing tier reads 0 and is named in `failed`
+    var ingestRate, e2eRate = 0L
+    attempt("ingest_points_per_sec") {
       parsePipe.parseBatch(lines, 1700000000).queryExecution.toRdd.count() // warm-up
       val rates = (1 to samples).map { _ =>
         val t0 = System.nanoTime()
         val parsed = parsePipe.parseBatch(lines, 1700000000).queryExecution.toRdd.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        if (parsed == n) n / dt else 0.0
+        require(parsed == n, s"parsed $parsed of $n lines")
+        n / dt
       }.toVector
-      med(rates).toLong // never block the JSON line
-    } catch { case _: Throwable => 0L }
-    val e2eRate = try {
+      ingestRate = med(rates).toLong
+    }
+    attempt("ingest_e2e_points_per_sec") {
       val base = java.nio.file.Files.createTempDirectory("graft_bench_ingest").toString
       val pipe = new graft.streaming.IngestPipeline(
         dataPath = s"$base/data", treePath = s"$base/tree")
@@ -169,17 +168,16 @@ object Bench {
         Files.walk(Paths.get(base)).iterator().asScala.toSeq.reverse
           .foreach(p => Files.deleteIfExists(p))
       } catch { case _: Throwable => () }
-      med(rates).toLong
-    } catch { case _: Throwable => 0L }
+      e2eRate = med(rates).toLong
+    }
     // stdout line: SHORT query keys ("q106" for "q106_image_hash_dedup",
     // "q76b" for its bench twin) and no spread dict, so the whole line
     // fits the driver's 2 kB tail capture and parses (BENCH_r04/r05/r06
     // all recorded parsed:null because the full-name line was truncated
     // mid-dict). The FILE record below keeps full names + spread.
     val shortKey = "^(q\\d+[a-z]?)_.*$".r
-    val shortResults = results.map { case (k, v) =>
-      (k match { case shortKey(p) => p; case other => other }) -> v
-    }
+    def short(k: String) = k match { case shortKey(p) => p; case other => other }
+    val shortResults = results.map { case (k, v) => short(k) -> v }
     def num(v: Double) = f"$v%.4f"
     // env-sourced strings (paths) ride into the JSON lines that exist to
     // ALWAYS parse — escape them, or a quote/backslash in a path breaks
@@ -200,10 +198,17 @@ object Bench {
     // calibration_sec / cal_norm_total keep their r8 meanings (shuffle
     // probe) so records stay comparable across rounds; the compute probe
     // rides alongside as cal_compute_sec / cal_norm_compute_total
+    def jlist(names: Seq[String]) = names.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")
+    // stdout lists at most 30 short names, so the last line stays < 2 kB
+    // however many queries fail; the file record lists them all
+    val failedShort = failed.toSeq.map(short) match {
+      case f if f.size > 30 => f.take(30) :+ s"+${f.size - 30} more"
+      case f => f
+    }
     val common =
       s""""unit":"sec","samples":$samples,"calibration_sec":${num(calibrationSec)},"cal_compute_sec":${num(calComputeSec)},"cal_norm_total":${num(total * calNorm)},"cal_norm_compute_total":${num(total * calNormC)},"ingest_points_per_sec":$ingestRate,"ingest_e2e_points_per_sec":$e2eRate,"timing":"warm-median","sf":"${jstr(sfDir)}""""
     val stdoutJson =
-      s"""{"metric":"total","value":${num(total)},$common,"key_style":"short","queries":${jmap(shortResults)}}"""
+      s"""{"metric":"total","value":${num(total)},$common,"key_style":"short","failed":${jlist(failedShort)},"queries":${jmap(shortResults)}}"""
     println(stdoutJson)
     // LAST line = a short, complete summary JSON. The driver records the
     // final 2 kB of stdout: the full-dict line above is ~4 kB, so its
@@ -211,19 +216,18 @@ object Bench {
     // driver recorded parsed:null (r6 AND r7). This line carries the
     // totals plus only the 20 most expensive queries, total length
     // < 1 kB — it sits whole inside any 2 kB tail.
-    val top20 = results.toSeq.sortBy(-_._2).take(20).map { case (k, v) =>
-      (k match { case shortKey(p) => p; case other => other }) -> v
-    }.toMap
+    val top20 = results.toSeq.sortBy(-_._2).take(20).map { case (k, v) => short(k) -> v }.toMap
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     println(
-      s"""{"metric":"total","value":${num(total)},$common,"key_style":"short","queries_shown":"top20_of_${results.size}","full_record":"${jstr(out)}","queries":${jmap(top20)}}""")
+      s"""{"metric":"total","value":${num(total)},$common,"key_style":"short","queries_shown":"top20_of_${results.size}","full_record":"${jstr(out)}","failed":${jlist(failedShort)},"queries":${jmap(top20)}}""")
     // the complete, parseable copy: full query names, spread dict. stdout
     // rides through sbt's log pipeline, which truncates long lines.
     val fileJson =
-      s"""{"metric":"total","value":${num(total)},$common,"key_style":"full","queries":${jmap(results)},"cal_norm_queries":${jmap(results.map { case (k, v) => k -> v * calNorm })},"spread":${jmap(spreads)}}"""
+      s"""{"metric":"total","value":${num(total)},$common,"key_style":"full","failed":${jlist(failed.toSeq)},"queries":${jmap(results)},"cal_norm_queries":${jmap(results.map { case (k, v) => k -> v * calNorm })},"spread":${jmap(spreads)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (fileJson + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // never fail the bench over the copy
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

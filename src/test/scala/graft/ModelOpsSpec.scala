@@ -29,6 +29,18 @@ class ModelOpsSpec extends AnyFunSuite {
     assert(w.view.filterKeys(k => k != 16 && k != 45 && k != -1).values.forall(_ == 0.0))
   }
 
+  test("logRegTrain: all-null labels give a null bias gradient, read as zero, not an NPE") {
+    // A null-label doc keeps only its bias row (its term rows drop at the
+    // (__id, __y) join), so the bias bucket sums no terms when every
+    // label is null: weights stay at their start value of 0.
+    val docs = Seq((1L, "good", None), (2L, "spam", Option.empty[Int]))
+      .toDF("doc_id", "text", "y")
+    val w = ModelOps.logRegTrain(docs, col("y") === 1)
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(w.size === 65)
+    assert(w.values.forall(_ == 0.0))
+  }
+
   test("logRegScored: held-out fifth is scored, train split is not, labels thresholded at 0.5") {
     // ids 5,10 are held out (mod 5); the training split is separable
     // on 'good'/'spam' so held-out copies score on the right side.
