@@ -13,20 +13,26 @@
 #                                      depend on partition count or merge
 #                                      order — the whole-suite form of the
 #                                      order-free-banking claim)
+#   6. perfbench self-test, then the ingest and dashboard workloads at
+#      seed 1                         (processBatch + metricData checked
+#                                      against the benchmark's independent
+#                                      model: each must report
+#                                      "correct": true and "failed": 0)
 #
 # Usage: scripts/gate_all.sh [fast]
 #   fast  skips sbt test (when it already ran this session) and runs only
-#         the three oracle scales + the CPUS=3 axis.
+#         the three oracle scales, the CPUS=3 axis and perfbench.
 #
-# Each axis prints its own "N ok, 0 failed" line; the script exits nonzero
-# on the first failing axis. Budget ~35 min for the full matrix.
+# Each oracle axis prints its own "N ok, 0 failed" line, each perfbench
+# workload its "correct"/"failed" pair; the script exits nonzero on the
+# first failing axis. Budget ~40 min for the full matrix.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 MODE="${1:-full}"
 
 if [ "$MODE" != "fast" ]; then
-  echo "=== gate 1/5: sbt test ==="
+  echo "=== gate 1/6: sbt test ==="
   sbt -batch test
 fi
 
@@ -39,5 +45,17 @@ done
 echo "=== gate: oracle replay @ sf0.01, SPARK_GRAFT_CPUS=3 ==="
 SPARK_GRAFT_CPUS=3 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_gate_cpus3"
 python3 scripts/check_oracle.py /root/testdata/sf0.01 /tmp/graft_gate_cpus3
+
+echo "=== gate: perfbench self-test ==="
+python3 perfbench/run.py --selftest
+
+for W in ingest dashboard; do
+  echo "=== gate: perfbench $W @ seed 1 ==="
+  python3 perfbench/run.py --workload "$W" --seed 1 | tail -n 1 | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+print("correct: %s, failed: %s" % (r["correct"], r["failed"]))
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)'
+done
 
 echo "=== gate matrix: ALL AXES GREEN ==="

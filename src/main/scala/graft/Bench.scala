@@ -113,7 +113,8 @@ object Bench {
     // points/s for the FULL write path, BASELINE.md):
     //  - parse+validate only (the hot boundary, core-count-sensitive)
     //  - end-to-end processBatch: parse -> date-partitioned data append
-    //    -> tree upsert (left_anti vs current tree) — the number that
+    //    -> tree upsert (one status lookup of the batch's names and their
+    //    dirs, new nodes decided on the driver) — the number that
     //    actually faces the reference's envelope. Median-of-`samples`
     //    batches against a seeded on-disk tree (batch 0 creates it and
     //    is excluded: first-batch tree creation is a one-off).

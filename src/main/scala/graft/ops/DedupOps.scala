@@ -699,18 +699,12 @@ object DedupOps {
     // double join + (id_a, id_b, jaccard)-keyed aggregate over the 8×
     // fan-out. Same xor/bit_count terms, order-free integer adds.
     def bandVecs(bands: DataFrame, idAs: String, vecAs: String): DataFrame =
-      bands.groupBy(col(bandIdCol))
-        .agg(transform(array_sort(collect_list(struct(col("band"), col("byte")))),
-          s => s.getField("byte")).as(vecAs))
-        .select(col(bandIdCol).as(idAs), col(vecAs))
-    val hammingExpr = aggregate(
-      zip_with(col("__bva"), col("__bvb"),
-        (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, v) => acc + v).cast("int")
+      MultimodalOps.bandVectors(bands, bandIdCol).select(col(bandIdCol).as(idAs), col("__bv").as(vecAs))
     val scored = withJac
       .join(bandVecs(newBands, "id_a", "__bva"), Seq("id_a"))
       .join(bandVecs(corpusBands, "id_b", "__bvb"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"), hammingExpr.as("hamming"))
+      .select(col("id_a"), col("id_b"), col("jaccard"),
+        MultimodalOps.bandHamming(col("__bva"), col("__bvb")).as("hamming"))
     val passes = col("jaccard") >= jaccardThreshold && col("hamming") <= maxHamming
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id_a").orderBy(passes.desc, col("jaccard").desc,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.ops.Rounding.round // binary rounding, DuckDB-consistent (shadows functions.round)
 
@@ -254,6 +254,25 @@ object MultimodalOps {
     pixels.select(col(idCol), col("r").cast("int").as("band"), byte.cast("int").as("byte"))
   }
 
+  /** Per-id band vector: the `byte`s of `bands` in band order, as `__bv`. */
+  def bandVectors(bands: DataFrame, idCol: String): DataFrame =
+    bands.groupBy(col(idCol))
+      .agg(transform(array_sort(collect_list(struct(col("band"), col("byte")))),
+        s => s.getField("byte")).as("__bv"))
+
+  /** Hamming distance of two band vectors: Σ bit_count(xor) per band,
+    * integer adds (order-free). Vectors of different lengths fail the
+    * query: `zip_with` would pad the shorter with null, the distance
+    * would be null and the pair would vanish from any `<=` filter, so a
+    * missing or duplicated band row must not pass silently.
+    */
+  def bandHamming(a: Column, b: Column): Column =
+    when(size(a) =!= size(b), raise_error(concat(lit("band vectors differ in length ("),
+        size(a).cast("string"), lit(" vs "), size(b).cast("string"),
+        lit("): a (id, band) row is missing or duplicated"))))
+      .otherwise(aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
+        lit(0L), (acc, v) => acc + v).cast("int"))
+
   /** Hamming-bucketed perceptual near-dup pairs over dHash bands: docs
     * sharing ANY (band, byte) bucket are candidates (8 bands of 8 bits —
     * a near-dup differing in d bits has ≥ 1 untouched band whenever
@@ -287,17 +306,11 @@ object MultimodalOps {
     // no post-join aggregate. Same 8 xor/bit_count terms, integer adds
     // (order-free) — values identical, MultimodalSpec + the q106 oracle
     // pin it.
-    val vecs = bands.groupBy(col(idCol))
-      .agg(transform(array_sort(collect_list(struct(col("band"), col("byte")))),
-        s => s.getField("byte")).as("__bv"))
-    val hamming = aggregate(
-      zip_with(col("__bva"), col("__bvb"),
-        (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, v) => acc + v).cast("int")
+    val vecs = bandVectors(bands, idCol)
     cand
       .join(vecs.select(col(idCol).as("id_a"), col("__bv").as("__bva")), Seq("id_a"))
       .join(vecs.select(col(idCol).as("id_b"), col("__bv").as("__bvb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
+      .select(col("id_a"), col("id_b"), bandHamming(col("__bva"), col("__bvb")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

@@ -165,6 +165,10 @@ object MetricQuery {
       .filter(col("metric").isin(metrics: _*))
       .filter(col("timestamp") >= p.startSeconds && col("timestamp") < p.endSeconds)
       .filter(col("date").between(dateLo, dateHi))
+      // one shuffle for the whole chain: HashPartitioning(metric)
+      // satisfies the dedup, rollup and gap-fill groupings below, which
+      // would otherwise shuffle one after another
+      .repartition(col("metric"))
     val deduped = filtered
       .groupBy(col("metric"), col("timestamp"))
       .agg(max_by(col("value"), col("updated")).as("value"), max(col("updated")).as("updated"))

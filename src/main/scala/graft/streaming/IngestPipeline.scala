@@ -25,9 +25,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   at-least-once insert + version collapse).
   * - No watermark: arbitrarily-late points are accepted by design
   *   (reference T3, `server/BaseMetricFactory.java:70-73`).
-  * - Tree updates append only NEW names per batch (left_anti against
-  *   the current tree), with SIMPLE status; status semantics stay
-  *   read-side (`max_by(status, updated)`).
+  * - The tree upsert is one lookup plus driver decisions: the batch's
+  *   distinct names and their ancestor dirs are looked up in the tree
+  *   in one filtered `max_by(status, updated)` aggregate, and the ban
+  *   gate, the new nodes and the AUTO_HIDDEN revivals are decided on
+  *   the driver (the reference's in-memory `MetricTree` check). Driver
+  *   memory is bounded by the batch's distinct names plus their
+  *   ancestors, never by the tree. Status semantics stay read-side.
   */
 final class IngestPipeline(
     parser: LineParser = new LineParser(),
@@ -81,22 +85,14 @@ final class IngestPipeline(
     lines.flatMap(l => p.parse(l, updatedSeconds))
   }
 
-  /** Tree rows (name, level, parent, status, updated) for every metric
-    * AND its ancestor dirs — the trie-node creation of
-    * `MetricTree.modify` (`search/tree/MetricTree.java:300-328`)
-    * expressed relationally.
+  /** SIMPLE tree rows (name, level, parent, status, updated) for
+    * `names`, as a local frame — the trie-node creation of
+    * `MetricTree.modify` (`search/tree/MetricTree.java:300-328`).
     */
-  def treeNodesFor(points: DataFrame): DataFrame = {
-    val names = points.select(col("metric").as("name")).distinct()
-    // explode each name into itself + all ancestor dirs
-    val withAncestors = names.select(explode(ancestorsCol(col("name"))).as("name")).distinct()
-    withAncestors.select(
-      col("name"),
-      levelCol(col("name")).as("level"),
-      parentCol(col("name")).as("parent"),
-      lit("SIMPLE").as("status"),
-      unix_timestamp().cast("long").as("updated")
-    )
+  def treeNodes(spark: SparkSession, names: Seq[String], updated: Long): DataFrame = {
+    import spark.implicits._
+    names.toDF("name").select(col("name"), levelCol(col("name")).as("level"),
+      parentCol(col("name")).as("parent"), lit("SIMPLE").as("status"), lit(updated).as("updated"))
   }
 
   /** "a.b.c" → ["a.", "a.b.", "a.b.c"] as a pure column expression. */
@@ -107,6 +103,10 @@ final class IngestPipeline(
       when(i < n, concat(array_join(slice(parts, lit(1), i), "."), lit(".")))
         .otherwise(name))
   }
+
+  /** The driver twin of [[ancestorsCol]]: every dir prefix, then the name. */
+  def ancestors(name: String): Seq[String] =
+    name.indices.collect { case i if name.charAt(i) == '.' => name.substring(0, i + 1) } :+ name
 
   def levelCol(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val dots = size(split(name, "\\.")) - 1
@@ -181,6 +181,27 @@ final class IngestPipeline(
     (accepted, refused)
   }
 
+  /** The tree table, or None before its first committed write.
+    * Explicit existence check, NOT a catch-all: a transient read error
+    * (corrupt file, FS hiccup) must fail the batch so streaming retry
+    * semantics stay visible, instead of silently re-appending the whole
+    * tree every batch.
+    */
+  private def readTree(spark: SparkSession): Option[DataFrame] = {
+    val treeP = new org.apache.hadoop.fs.Path(treePath)
+    if (!treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)) None
+    else
+      try Some(spark.read.parquet(treePath))
+      catch {
+        // dir exists but holds no committed parquet (crash mid-first-
+        // write left only _temporary/_SUCCESS): a PERMANENT state the
+        // retry loop can never clear — treat as first batch. Other
+        // read errors still fail the batch (retry stays visible).
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getMessage.contains("Unable to infer schema") => None
+      }
+  }
+
   /** One micro-batch: drop banned metrics, append points, upsert new
     * tree names, revive AUTO_HIDDEN metrics that are sending again.
     * Idempotency: replayed batches re-append (duplicates resolved by
@@ -190,91 +211,65 @@ final class IngestPipeline(
     * (`MetricTree.java:306-309`), a written metric's status goes through
     * the transition graph where AUTO_HIDDEN → SIMPLE is allowed (T6
     * "reopens on new data").
+    *
+    * The tree is read once: the current status of the batch's names and
+    * their ancestor dirs comes back in one collect, and every per-name
+    * decision is made on the driver. A first batch is an empty status map.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
+    import spark.implicits._
     val df = points.toDF().cache()
     try {
-      // explicit existence check, NOT a catch-all: a transient read error
-      // (corrupt file, FS hiccup) must fail the batch so streaming retry
-      // semantics stay visible, instead of silently re-appending the
-      // whole tree every batch
-      val treeP = new org.apache.hadoop.fs.Path(treePath)
-      val treeExists =
-        treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)
-      val tree =
-        if (!treeExists) None
-        else
-          try Some(spark.read.parquet(treePath))
-          catch {
-            // dir exists but holds no committed parquet (crash mid-first-
-            // write left only _temporary/_SUCCESS): a PERMANENT state the
-            // retry loop can never clear — treat as first batch. Other
-            // read errors still fail the batch (retry stays visible).
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("Unable to infer schema") => None
-          }
-      tree match {
-        case None =>
-          // per-dir caps apply even on the first batch (ranks within the
-          // batch, zero existing children); points of refused metrics
-          // are dropped like the reference's factory path (a null tree
-          // add drops the point, `server/BaseMetricFactory.java`)
-          val (acceptedNodes, refused) = applyTreeLimits(treeNodesFor(df), None)
-          val refusedMetrics = refused.filter(!col("name").endsWith("."))
-            .withColumnRenamed("name", "metric")
-          // sort each written part by (metric, timestamp) — MergeTree
-          // sorts every inserted part the same way; parquet row-group
-          // min/max stats then give key-range skipping on fresh data,
-          // not just compacted partitions
-          df.join(refusedMetrics, Seq("metric"), "left_anti")
-            .sortWithinPartitions("metric", "timestamp")
-            .write.mode("append").partitionBy("date").parquet(dataPath)
-          acceptedNodes.write.mode("append").parquet(treePath)
-          if (limits.enabled && limitStatsPath.nonEmpty)
-            recordRefusals(spark, refused.count(), batchId)
-        case Some(treeDf) =>
-          // current status of THIS batch's names AND their ancestor dirs
-          // (semi-join bounds the aggregation by batch size, not tree
-          // size): the reference ban gate rejects a metric when ANY dir
-          // on its path is banned (`MetricTree.java:300-328`), so a
-          // banned subtree blocks new children too, not just exact names
-          val batchPaths = df.select(col("metric")).distinct()
-            .select(col("metric"), explode(ancestorsCol(col("metric"))).as("name"))
-          val current = treeDf
-            .join(batchPaths.select("name").distinct(), Seq("name"), "left_semi")
-            .groupBy("name")
-            .agg(max_by(col("status"), col("updated")).as("status"))
-          val banned = batchPaths
-            .join(current.filter(col("status") === "BAN"), Seq("name"), "left_semi")
-            .select("metric").distinct()
-          val accepted = df.join(banned, Seq("metric"), "left_anti")
-          val nodes = treeNodesFor(accepted)
-          val newNodes =
-            nodes.join(treeDf.select("name").distinct(), Seq("name"), "left_anti")
-          // per-dir caps on the NEW nodes only (existing nodes always
-          // pass, reference returns the existing entry before the size
-          // check); existing child counts bounded to the batch's parents
-          val existingCounts =
-            if (!limits.enabled) None
-            else Some(treeDf
-              .join(nodes.select("parent").distinct(), Seq("parent"), "left_semi")
-              .select(col("parent"), col("name")).distinct()
-              .groupBy(col("parent"), col("name").endsWith(".").as("__is_dir"))
-              .agg(count(lit(1)).as("__children")))
-          val (acceptedNodes, refused) = applyTreeLimits(newNodes, existingCounts)
-          val refusedMetrics = refused.filter(!col("name").endsWith("."))
-            .withColumnRenamed("name", "metric")
-          accepted.join(refusedMetrics, Seq("metric"), "left_anti")
-            .sortWithinPartitions("metric", "timestamp")
-            .write.mode("append").partitionBy("date").parquet(dataPath)
-          val revived = nodes.join(
-            current.filter(col("status") === "AUTO_HIDDEN").select("name"),
-            Seq("name"), "left_semi")
-          acceptedNodes.unionByName(revived).write.mode("append").parquet(treePath)
-          if (limits.enabled && limitStatsPath.nonEmpty)
-            recordRefusals(spark, refused.count(), batchId)
+      // per-partition distinct, merged on the driver: one job, no shuffle
+      val names = df.select("metric").as[String].mapPartitions(_.toSet.iterator).collect().distinct.toSeq
+      val paths = names.map(n => n -> ancestors(n)).toMap
+      val tree = readTree(spark)
+      // the batch's paths as a set filter: the aggregation is bounded by
+      // the batch, not the tree
+      val status: Map[String, String] = tree.fold(Map.empty[String, String]) { t =>
+        t.filter(col("name").isin(paths.values.flatten.toSeq.distinct: _*))
+          .groupBy("name").agg(max_by(col("status"), col("updated")))
+          .as[(String, String)].collect().toMap
       }
+      // the reference ban gate rejects a metric when ANY dir on its path
+      // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
+      // new children too, not just exact names
+      val (banned, accepted) = names.partition(n => paths(n).exists(status.get(_).contains("BAN")))
+      val nodes = accepted.flatMap(paths).distinct
+      val now = System.currentTimeMillis() / 1000
+      val fresh = nodes.filterNot(status.contains)
+      val newNodes = treeNodes(spark, fresh, now)
+      // per-dir caps on the NEW nodes only (existing nodes always pass,
+      // reference returns the existing entry before the size check);
+      // existing child counts bounded to the new nodes' parents. Points
+      // of refused metrics are dropped like the reference's factory path
+      // (a null tree add drops the point, `server/BaseMetricFactory.java`)
+      val existingCounts = if (!limits.enabled) None else tree.map(_
+        .join(broadcast(newNodes.select("parent").distinct()), Seq("parent"), "left_semi")
+        .select(col("parent"), col("name")).distinct()
+        .groupBy(col("parent"), col("name").endsWith(".").as("__is_dir"))
+        .agg(count(lit(1)).as("__children")))
+      val (acceptedNodes, refusedFrame) = applyTreeLimits(newNodes, existingCounts)
+      val refused = refusedFrame.as[String].collect()
+      val dropped = banned ++ refused.filterNot(_.endsWith("."))
+      // sort each written part by (metric, timestamp) — MergeTree sorts
+      // every inserted part the same way; parquet row-group min/max
+      // stats then give key-range skipping on fresh data, not just
+      // compacted partitions. No exchange before the write: hashing by
+      // metric would give every file a min/max range over nearly all names.
+      if (dropped.size < names.size)
+        (if (dropped.isEmpty) df else df.filter(!col("metric").isin(dropped: _*)))
+          .sortWithinPartitions("metric", "timestamp")
+          .write.mode("append").partitionBy("date").parquet(dataPath)
+      val revived = nodes.filter(status.get(_).contains("AUTO_HIDDEN"))
+      // one file per batch, in name order: siblings share their parent
+      // and level, which then compress to runs
+      if (fresh.nonEmpty || revived.nonEmpty)
+        acceptedNodes.unionByName(treeNodes(spark, revived, now))
+          .coalesce(1).sortWithinPartitions("name").write.mode("append").parquet(treePath)
+      if (limits.enabled && limitStatsPath.nonEmpty)
+        recordRefusals(spark, refused.length.toLong, batchId)
     } finally df.unpersist()
   }
 

@@ -159,6 +159,28 @@ class MultimodalSpec extends AnyFunSuite {
     assert(!out(15L), "image match with a different caption must NOT be a dup")
   }
 
+  test("Hamming verify fails loudly on a missing band row instead of dropping the pair") {
+    import graft.ops.DedupOps
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    }
+    val caption = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
+    val docs = Seq((0L, caption, "imgA"), (1L, caption, "imgA")).toDF("doc_id", "text", "payload")
+    val bands = MultimodalOps.dHashBands(MultimodalOps.stubPixels(
+      docs.select(col("doc_id").as("media_id"), col("payload"))))
+    // the copy shares every band bucket with the original but lost band 7
+    val holed = bands.filter(!(col("media_id") === 1 && col("band") === 7))
+    assert(MultimodalOps.imageHashNearDup(bands).collect().length === 1, "intact bands pair")
+    assert(failure(MultimodalOps.imageHashNearDup(holed).collect())
+      .contains("band vectors differ in length (8 vs 7)"))
+    val fresh = docs.filter(col("doc_id") === 1)
+    val corpus = docs.filter(col("doc_id") === 0)
+    assert(failure(DedupOps.crossModalAdmission(fresh, corpus,
+        holed.filter(col("media_id") === 1), holed.filter(col("media_id") === 0)).collect())
+      .contains("band vectors differ in length (7 vs 8)"))
+  }
+
   // ---- real-decoder path: actual PNG bytes through the same boundary ----
 
   /** In-memory PNG via the JDK's own encoder: pixel (x, y) colored by

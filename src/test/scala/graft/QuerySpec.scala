@@ -2,6 +2,8 @@ package graft
 
 import graft.query.{MetricQuery, QueryParams}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,6 +77,28 @@ class QuerySpec extends AnyFunSuite {
     assert(out(0).getAs[scala.collection.Seq[Any]]("points") == Seq(12.0, 7.0, null))
     assert(out(1).getAs[String]("metric") == "a.z")
     assert(out(1).getAs[scala.collection.Seq[Any]]("points") == Seq(null, null, null))
+  }
+
+  test("metricData: dedup → rollup → gap fill share one shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_query_plan").toString
+    // several files: a single-partition scan would need no shuffle at all
+    val day = java.sql.Date.valueOf("1970-01-01")
+    (0 until 40).map(i => (s"a.${"xyzw"(i % 4)}", i.toDouble, 60 + i * 4, day, i))
+      .toDF("metric", "value", "timestamp", "date", "updated")
+      .repartition(4).write.partitionBy("date").parquet(s"$dir/data")
+    val frame = MetricQuery.metricData(spark.read.parquet(s"$dir/data"), Seq("a.x", "a.y"), "avg",
+      QueryParams(60, 240, 60))
+    val plan = frame.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    // one repartition per scan of the data (the series, and the padding's
+    // anti-join side) plus the padding's distinct: the series chain's
+    // three groupings add none
+    assert(shuffles.size === 3, s"\n$plan")
+    assert(shuffles.count(_.shuffleOrigin == REPARTITION_BY_COL) === 2, s"\n$plan")
+    assert(frame.collect().length === 2)
   }
 
   test("bucket arithmetic matches intDiv semantics") {
