@@ -232,14 +232,9 @@ final class Graft(
                nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame = {
     val candidates = MetricSearchOps.autoHideCandidates(
       data, maxValues, nowSeconds - missingSeconds)
-    MetricSearchOps.currentTree(tree)
-      .join(candidates.select(col("metric").as("name")), Seq("name"), "left_semi")
-      .select(col("name"), col("level"), col("parent"), col("status").as("__old"),
-        MetricSearchOps.selectStatusCol(col("status"), lit(MetricStatus.AutoHidden.name)).as("status"),
-        lit(nowSeconds).as("updated"))
-      // already-hidden candidates append nothing (daily sweeps over a
-      // stable junk set must not grow the tree table)
-      .filter(col("status") =!= col("__old"))
-      .drop("__old")
+    MetricSearchOps.transitionRows(
+      MetricSearchOps.currentTree(tree)
+        .join(candidates.select(col("metric").as("name")), Seq("name"), "left_semi"),
+      MetricStatus.AutoHidden, nowSeconds)
   }
 }

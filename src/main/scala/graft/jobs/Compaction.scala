@@ -58,9 +58,8 @@ final class Compaction(resolver: RetentionResolver) extends Serializable {
     val res = resolver
     val fnFor = udf((m: String) => res.resolve(m).function)
     val withFn = withStep.withColumn("fn", fnFor(col("metric")))
-    val deduped = withFn
-      .groupBy(col("metric"), col("fn"), col("step"), col("timestamp"))
-      .agg(max_by(col("value"), col("updated")).as("value"), max(col("updated")).as("updated"))
+    val deduped = MetricQuery.dedupLatest(withFn, Seq("metric", "fn", "step", "timestamp"),
+      "value", "updated")
     // one grouped pass per distinct function present (reference runs one
     // query per function group, MetricDataService.java:49-51)
     val fns = deduped.select("fn").distinct().as[String].collect().toSeq

@@ -96,7 +96,7 @@ object MetricStatus {
     * silently reopened by automatic SIMPLE/AUTO_HIDDEN updates — only an
     * explicit APPROVED (or HIDDEN) lifts a ban.
     */
-  private val restricted: Map[MetricStatus, Set[MetricStatus]] = Map(
+  private[graft] val restricted: Map[MetricStatus, Set[MetricStatus]] = Map(
     Ban      -> Set[MetricStatus](Simple, AutoHidden),
     AutoBan  -> Set[MetricStatus](Simple, AutoHidden),
     Hidden   -> Set[MetricStatus](AutoHidden),

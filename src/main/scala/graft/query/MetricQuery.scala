@@ -44,12 +44,15 @@ object MetricQuery {
 
   /** A1/A2 — latest-write-wins: one row per key set, taking `valueCol` of
     * the row with the greatest `versionCol` (reference `argMax(value,
-    * updated)`, `data/MetricDataService.java:73`). Single hash-aggregate:
-    * partial max_by map-side, final reduce after one shuffle on the keys.
+    * updated)`, `data/MetricDataService.java:73`) and keeping that
+    * greatest version under `versionCol`, so a rollup's `last` and a
+    * rewritten partition still order later-arriving duplicates. Single
+    * hash-aggregate: partial max_by map-side, final reduce after one
+    * shuffle on the keys.
     */
   def dedupLatest(df: DataFrame, keys: Seq[String], valueCol: String, versionCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(max_by(col(valueCol), col(versionCol)).as(valueCol))
+      .agg(max_by(col(valueCol), col(versionCol)).as(valueCol), max(col(versionCol)).as(versionCol))
 
   /** Rollup aggregation dispatch (reference string-spliced agg names,
     * `data/MetricDataService.java:72` + `retention/MetricRetention.java:33-35`).
@@ -169,10 +172,8 @@ object MetricQuery {
       // satisfies the dedup, rollup and gap-fill groupings below, which
       // would otherwise shuffle one after another
       .repartition(col("metric"))
-    val deduped = filtered
-      .groupBy(col("metric"), col("timestamp"))
-      .agg(max_by(col("value"), col("updated")).as("value"), max(col("updated")).as("updated"))
-    val rolled = rollup(deduped, fn, p.stepSeconds)
+    val rolled = rollup(dedupLatest(filtered, Seq("metric", "timestamp"), "value", "updated"),
+      fn, p.stepSeconds)
     val series = gapFillSeries(rolled, p)
     import series.sparkSession.implicits._
     withEmptySeries(series, padNames.toDF("metric"), p)

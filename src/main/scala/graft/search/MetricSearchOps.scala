@@ -122,42 +122,42 @@ object MetricSearchOps {
     else limitNotifications(tree, query, limits).unionByName(search(tree, query))
 
   /** Status change (ban/approve/hide...): returns the rows to APPEND to the
-    * tree table. The restricted transition graph
-    * (`MetricStatus.selectStatus`) is applied against each node's current
-    * status, so e.g. a BAN survives an automatic SIMPLE update.
+    * tree table for the names matching `namePattern`.
     */
   def setStatus(tree: DataFrame, namePattern: String, newStatus: MetricStatus,
                 updatedSeconds: Long): DataFrame = {
     val re = Glob.queryToRegex(namePattern)
       .getOrElse("^" + java.util.regex.Pattern.quote(namePattern) + "$")
-    val target = currentTree(tree).filter(col("name").rlike(re))
-    val select = selectStatusCol(col("status"), lit(newStatus.name))
+    transitionRows(currentTree(tree).filter(col("name").rlike(re)), newStatus, updatedSeconds)
+  }
+
+  /** Tree rows moving each node of `target` (rows of [[currentTree]])
+    * to `newStatus`. The restricted transition graph
+    * (`MetricStatus.selectStatus`) is applied against each node's
+    * current status, so e.g. a BAN survives an automatic SIMPLE update.
+    * No-op transitions (effective status unchanged) append nothing:
+    * repeated sweeps over a stable set must not grow the append-only
+    * tree table.
+    */
+  private[graft] def transitionRows(target: DataFrame, newStatus: MetricStatus,
+                                    updatedSeconds: Long): DataFrame =
     target.select(
       col("name"), col("level"), col("parent"),
       col("status").as("__old"),
-      select.as("status"),
+      selectStatusCol(col("status"), lit(newStatus.name)).as("status"),
       lit(updatedSeconds).as("updated")
     )
-      // no-op transitions (effective status unchanged) append nothing:
-      // repeated sweeps over a stable set must not grow the append-only
-      // tree table
       .filter(col("status") =!= col("__old"))
       .drop("__old")
-  }
 
-  /** Column form of MetricStatus.selectStatus (restricted-edge table from
-    * reference `MetricStatus.java:48-57`).
+  /** Column form of [[MetricStatus.selectStatus]], folded from the same
+    * restricted-edge table (reference `MetricStatus.java:48-57`).
     */
-  def selectStatusCol(oldStatus: Column, newStatus: Column): Column = {
-    def restrictedFrom(from: String, to: Seq[String]): Column =
-      oldStatus === from && newStatus.isin(to: _*)
-    when(oldStatus === newStatus, oldStatus)
-      .when(restrictedFrom("BAN", Seq("SIMPLE", "AUTO_HIDDEN")), oldStatus)
-      .when(restrictedFrom("AUTO_BAN", Seq("SIMPLE", "AUTO_HIDDEN")), oldStatus)
-      .when(restrictedFrom("HIDDEN", Seq("AUTO_HIDDEN")), oldStatus)
-      .when(restrictedFrom("APPROVED", Seq("SIMPLE", "AUTO_HIDDEN")), oldStatus)
-      .otherwise(newStatus)
-  }
+  def selectStatusCol(oldStatus: Column, newStatus: Column): Column =
+    MetricStatus.restricted.foldLeft(when(oldStatus === newStatus, oldStatus)) {
+      case (c, (from, to)) =>
+        c.when(oldStatus === from.name && newStatus.isin(to.map(_.name).toSeq: _*), oldStatus)
+    }.otherwise(newStatus)
 
   /** T6 — declarative dir visibility: a directory is auto-hidden when all
     * of its children are invisible (reference counter-based

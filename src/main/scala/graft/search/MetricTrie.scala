@@ -41,26 +41,26 @@ final class MetricTrie private (root: MetricTrie.Node,
     // (3); the relational filter can match nothing there, so neither may
     // the trie
     if (MetricNames.level(query) != levels.length) return Nil
-    // pre-validate every level: one invalid level → empty result
-    val matchers = levels.map { seg =>
-      if (Glob.hasWildcards(seg)) Glob.levelToRegex(seg) match {
-        case Some(re) => Right(java.util.regex.Pattern.compile(re))
-        case None     => return Nil
-      }
-      else Left(seg)
-    }
-    var frontier = List(root)
-    matchers.foreach { m =>
-      frontier = m match {
-        case Left(lit) => frontier.flatMap(n => n.children.get(lit))
-        case Right(p)  => frontier.flatMap(_.children.collect {
-          case (seg, child) if p.matcher(seg).matches() => child
-        })
-      }
-      if (frontier.isEmpty) return Nil
-    }
-    frontier.flatMap(n => n.metricRow.toSeq ++ n.dirRow.toSeq)
+    walk(levels.toSeq).flatMap(n => n.metricRow.toSeq ++ n.dirRow.toSeq)
       .filter { case (_, status) => MetricSearchOps.visibleStatus(status) }
+  }
+
+  /** The nodes reached from the root by matching `levels` one level at
+    * a time: a hash hit for a literal level, a compiled-regex scan of the
+    * children for a wildcard one. Any invalid glob level → no nodes.
+    */
+  private def walk(levels: Seq[String]): List[MetricTrie.Node] = {
+    val matchers: Seq[Option[Either[String, java.util.regex.Pattern]]] = levels.map { seg =>
+      if (!Glob.hasWildcards(seg)) Some(Left(seg))
+      else Glob.levelToRegex(seg).map(re => Right(java.util.regex.Pattern.compile(re)))
+    }
+    if (matchers.contains(None)) Nil
+    else matchers.flatten.foldLeft(List(root)) {
+      case (frontier, Left(lit)) => frontier.flatMap(_.children.get(lit))
+      case (frontier, Right(p))  => frontier.flatMap(_.children.collect {
+        case (seg, child) if p.matcher(seg).matches() => child
+      })
+    }
   }
 
   /** The `updated` high-water mark this snapshot has folded in — a
@@ -72,8 +72,8 @@ final class MetricTrie private (root: MetricTrie.Node,
 
   /** Node count (diagnostics / capacity checks). */
   def size: Long = {
-    def walk(n: MetricTrie.Node): Long = 1L + n.children.valuesIterator.map(walk).sum
-    walk(root) - 1 // don't count the synthetic root
+    def count(n: MetricTrie.Node): Long = 1L + n.children.valuesIterator.map(count).sum
+    count(root) - 1 // don't count the synthetic root
   }
 
   /** Incremental refresh: returns a NEW trie with only the tree rows
@@ -144,22 +144,8 @@ final class MetricTrie private (root: MetricTrie.Node,
     val levels = MetricNames.splitToLevels(query)
     if (levels.isEmpty || levels.last != "*" ||
       MetricNames.level(query) != levels.length) return search(query)
-    // walk to the parent frontier with the same per-level matching as
-    // search; the synthetic root (query "*") is always visible
-    var frontier = List(root)
-    levels.init.foreach { seg =>
-      frontier =
-        if (Glob.hasWildcards(seg)) Glob.levelToRegex(seg) match {
-          case Some(re) =>
-            val p = java.util.regex.Pattern.compile(re)
-            frontier.flatMap(_.children.collect {
-              case (s, child) if p.matcher(s).matches() => child
-            })
-          case None => Nil
-        }
-        else frontier.flatMap(_.children.get(seg))
-    }
-    val notifs = frontier.flatMap { n =>
+    // the parent frontier; the synthetic root (query "*") is always visible
+    val notifs = walk(levels.init.toSeq).flatMap { n =>
       val parentVisible = (n eq root) ||
         n.dirRow.exists { case (_, st) => MetricSearchOps.visibleStatus(st) }
       if (!parentVisible) Nil

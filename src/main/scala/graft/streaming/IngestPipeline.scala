@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.ingest.LineParser
-import graft.model.{MetricPoint, TreeLimits}
+import graft.model.{MetricPoint, MetricStatus, TreeLimits, TreeNode}
 import graft.names.MetricNames
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.search.MetricSearchOps
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -28,10 +28,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * - The tree upsert is one lookup plus driver decisions: the batch's
   *   distinct names and their ancestor dirs are looked up in the tree
   *   in one filtered `max_by(status, updated)` aggregate, and the ban
-  *   gate, the new nodes and the AUTO_HIDDEN revivals are decided on
-  *   the driver (the reference's in-memory `MetricTree` check). Driver
-  *   memory is bounded by the batch's distinct names plus their
-  *   ancestors, never by the tree. Status semantics stay read-side.
+  *   gate, the new nodes, the per-dir caps and the AUTO_HIDDEN revivals
+  *   are decided on the driver (the reference's in-memory `MetricTree`
+  *   check). With caps on, the new nodes' parents add one child-count
+  *   collect. Driver memory is bounded by the batch's distinct names
+  *   plus their ancestors, never by the tree. Status semantics stay
+  *   read-side.
   */
 final class IngestPipeline(
     parser: LineParser = new LineParser(),
@@ -45,9 +47,7 @@ final class IngestPipeline(
     * (same self-metric schema as [[IngestStatsListener]], so a full-dir
     * ingest pathology is visible on a dashboard, not just in logs —
     * the reference counts these through its statistics service). Only
-    * called when limits are on AND a stats path is configured; the
-    * count is cheap because [[applyTreeLimits]] checkpoints its flagged
-    * frame.
+    * called when limits are on AND a stats path is configured.
     *
     * `timestamp` is WALL CLOCK (so timestamp-ranged reads and
     * timestamp-based retention see the series at its true age) and the
@@ -85,51 +85,11 @@ final class IngestPipeline(
     lines.flatMap(l => p.parse(l, updatedSeconds))
   }
 
-  /** SIMPLE tree rows (name, level, parent, status, updated) for
-    * `names`, as a local frame — the trie-node creation of
-    * `MetricTree.modify` (`search/tree/MetricTree.java:300-328`).
-    */
-  def treeNodes(spark: SparkSession, names: Seq[String], updated: Long): DataFrame = {
-    import spark.implicits._
-    names.toDF("name").select(col("name"), levelCol(col("name")).as("level"),
-      parentCol(col("name")).as("parent"), lit("SIMPLE").as("status"), lit(updated).as("updated"))
-  }
-
-  /** "a.b.c" → ["a.", "a.b.", "a.b.c"] as a pure column expression. */
-  def ancestorsCol(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val parts = split(name, "\\.")
-    val n = size(parts)
-    transform(sequence(lit(1), n), i =>
-      when(i < n, concat(array_join(slice(parts, lit(1), i), "."), lit(".")))
-        .otherwise(name))
-  }
-
-  /** The driver twin of [[ancestorsCol]]: every dir prefix, then the name. */
+  /** The dir prefixes of a name, then the name: "a.b.c" → ["a.", "a.b.", "a.b.c"]. */
   def ancestors(name: String): Seq[String] =
     name.indices.collect { case i if name.charAt(i) == '.' => name.substring(0, i + 1) } :+ name
 
-  def levelCol(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val dots = size(split(name, "\\.")) - 1
-    when(name.endsWith("."), dots).otherwise(dots + 1)
-  }
-
-  def parentCol(name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val stripped = when(name.endsWith("."), name.substr(lit(1), length(name) - 1)).otherwise(name)
-    val plen = length(stripped) - length(substring_index(stripped, ".", -1))
-    when(plen > 0, stripped.substr(lit(1), plen)).otherwise(lit(""))
-  }
-
-  /** Dir prefixes of a parent-dir name: "a.b." → ["a.", "a.b."]; "" → [].
-    * (Every ancestor dir of a node, the node's parent included.)
-    */
-  private def dirPrefixesCol(parent: Column): Column = {
-    val parts = split(parent, "\\.")
-    when(length(parent) === 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(parts) - 1), i =>
-        concat(array_join(slice(parts, lit(1), i), "."), lit("."))))
-  }
-
-  /** Per-dir growth caps on candidate NEW tree rows (reference
+  /** Per-dir growth caps on the batch's NEW tree nodes (reference
     * `MetricDir.getOrCreateDir/getOrCreateMetric`,
     * `search/tree/MetricDir.java:59-95`): a dir holding >= max children
     * of a kind refuses further NEW ones, and a refused dir refuses its
@@ -137,48 +97,28 @@ final class IngestPipeline(
     * under a refused dir is refused too). Within a batch, siblings are
     * admitted in name order (the reference admits in arrival order; a
     * relational batch has no arrival order, so name order is the
-    * deterministic, replay-stable tie-break).
+    * deterministic, replay-stable tie-break). Existing nodes are never
+    * refused (the reference returns the existing entry before the size
+    * check).
     *
-    * Returns (accepted new nodes, refused names — dirs AND metrics).
-    * Existing nodes are never refused (the reference returns the
-    * existing entry before the size check); callers pass only NEW rows.
-    * `existingCounts` is (parent, __is_dir, __children) for affected
-    * parents, absent on the first batch.
-    *
-    * Scale: every frame is bounded by the batch's name count, not the
-    * tree; the window partitions by (parent, kind) within the batch.
+    * Returns the refused names, dirs and metrics. The existing child
+    * counts come back in one collect bounded by the fresh nodes'
+    * parents, not the tree.
     */
-  def applyTreeLimits(newNodes: DataFrame, existingCounts: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val spark = newNodes.sparkSession
-    import spark.implicits._
-    if (!limits.enabled) return (newNodes, Seq.empty[String].toDF("name"))
-    val ranked = newNodes
-      .withColumn("__is_dir", col("name").endsWith("."))
-      .withColumn("__rk",
-        row_number().over(Window.partitionBy(col("parent"), col("__is_dir")).orderBy(col("name"))))
-    val withCounts = existingCounts match {
-      case Some(c) => ranked.join(broadcast(c), Seq("parent", "__is_dir"), "left")
-        .na.fill(0L, Seq("__children"))
-      case None => ranked.withColumn("__children", lit(0L))
+  private def refusedByLimits(tree: Option[DataFrame], fresh: Seq[String]): Set[String] = {
+    val parents = fresh.map(MetricNames.parent).distinct
+    val existing: Map[(String, Boolean), Long] = tree.fold(Map.empty[(String, Boolean), Long]) { t =>
+      MetricSearchOps.childCounts(t.filter(col("parent").isin(parents: _*)))
+        .collect().map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2)).toMap
     }
-    val maxFor = when(col("__is_dir"), lit(limits.maxSubDirsPerDir.toLong))
-      .otherwise(lit(limits.maxMetricsPerDir.toLong))
-    // refuse when the dir already holds max (existing + earlier batch
-    // siblings): existing + rank > max ⟺ reference's size() >= max gate
-    val flagged = withCounts
-      .withColumn("__over", maxFor > 0 && (col("__children") + col("__rk")) > maxFor)
-      .localCheckpoint() // the window + join feed BOTH outputs below; don't recompute
-    val overNames = flagged.filter(col("__over")).select("name")
-    // cascade: every node under a refused dir is refused with it
-    val refusedByAncestor = flagged.filter(!col("__over"))
-      .select(col("name"), explode(dirPrefixesCol(col("parent"))).as("__anc"))
-      .join(overNames.select(col("name").as("__anc")), Seq("__anc"), "left_semi")
-      .select("name").distinct()
-    val refused = overNames.unionByName(refusedByAncestor)
-    val accepted = flagged.filter(!col("__over"))
-      .join(refusedByAncestor, Seq("name"), "left_anti")
-      .drop("__is_dir", "__rk", "__children", "__over")
-    (accepted, refused)
+    // existing + rank > max ⟺ the reference's size() >= max gate
+    val over = fresh.groupBy(n => (MetricNames.parent(n), MetricNames.isDir(n))).flatMap {
+      case (key @ (_, isDir), siblings) =>
+        val max = if (isDir) limits.maxSubDirsPerDir else limits.maxMetricsPerDir
+        val children = existing.getOrElse(key, 0L)
+        siblings.sorted.zipWithIndex.collect { case (n, i) if max > 0 && children + i + 1 > max => n }
+    }.toSet
+    fresh.filter(n => ancestors(n).exists(over.contains)).toSet
   }
 
   /** The tree table, or None before its first committed write.
@@ -215,6 +155,7 @@ final class IngestPipeline(
     * The tree is read once: the current status of the batch's names and
     * their ancestor dirs comes back in one collect, and every per-name
     * decision is made on the driver. A first batch is an empty status map.
+    * Per-dir caps add one child-count collect for the new nodes' parents.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
@@ -235,24 +176,16 @@ final class IngestPipeline(
       // the reference ban gate rejects a metric when ANY dir on its path
       // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
       // new children too, not just exact names
-      val (banned, accepted) = names.partition(n => paths(n).exists(status.get(_).contains("BAN")))
+      val (banned, accepted) =
+        names.partition(n => paths(n).exists(status.get(_).contains(MetricStatus.Ban.name)))
       val nodes = accepted.flatMap(paths).distinct
-      val now = System.currentTimeMillis() / 1000
       val fresh = nodes.filterNot(status.contains)
-      val newNodes = treeNodes(spark, fresh, now)
-      // per-dir caps on the NEW nodes only (existing nodes always pass,
-      // reference returns the existing entry before the size check);
-      // existing child counts bounded to the new nodes' parents. Points
-      // of refused metrics are dropped like the reference's factory path
-      // (a null tree add drops the point, `server/BaseMetricFactory.java`)
-      val existingCounts = if (!limits.enabled) None else tree.map(_
-        .join(broadcast(newNodes.select("parent").distinct()), Seq("parent"), "left_semi")
-        .select(col("parent"), col("name")).distinct()
-        .groupBy(col("parent"), col("name").endsWith(".").as("__is_dir"))
-        .agg(count(lit(1)).as("__children")))
-      val (acceptedNodes, refusedFrame) = applyTreeLimits(newNodes, existingCounts)
-      val refused = refusedFrame.as[String].collect()
-      val dropped = banned ++ refused.filterNot(_.endsWith("."))
+      val refused =
+        if (limits.enabled && fresh.nonEmpty) refusedByLimits(tree, fresh) else Set.empty[String]
+      // points of refused metrics are dropped like the reference's
+      // factory path (a null tree add drops the point,
+      // `server/BaseMetricFactory.java`)
+      val dropped = banned ++ accepted.filter(refused)
       // sort each written part by (metric, timestamp) — MergeTree sorts
       // every inserted part the same way; parquet row-group min/max
       // stats then give key-range skipping on fresh data, not just
@@ -262,14 +195,18 @@ final class IngestPipeline(
         (if (dropped.isEmpty) df else df.filter(!col("metric").isin(dropped: _*)))
           .sortWithinPartitions("metric", "timestamp")
           .write.mode("append").partitionBy("date").parquet(dataPath)
-      val revived = nodes.filter(status.get(_).contains("AUTO_HIDDEN"))
+      val revived = nodes.filter(status.get(_).contains(MetricStatus.AutoHidden.name))
+      val now = System.currentTimeMillis() / 1000
+      // the trie-node creation of `MetricTree.modify`
+      // (`search/tree/MetricTree.java:300-328`) as SIMPLE rows
+      val delta = (fresh.filterNot(refused) ++ revived).map(n =>
+        TreeNode(n, MetricNames.level(n), MetricNames.parent(n), MetricStatus.Simple.name, now))
       // one file per batch, in name order: siblings share their parent
       // and level, which then compress to runs
-      if (fresh.nonEmpty || revived.nonEmpty)
-        acceptedNodes.unionByName(treeNodes(spark, revived, now))
-          .coalesce(1).sortWithinPartitions("name").write.mode("append").parquet(treePath)
+      if (delta.nonEmpty)
+        delta.toDS().coalesce(1).sortWithinPartitions("name").write.mode("append").parquet(treePath)
       if (limits.enabled && limitStatsPath.nonEmpty)
-        recordRefusals(spark, refused.length.toLong, batchId)
+        recordRefusals(spark, refused.size.toLong, batchId)
     } finally df.unpersist()
   }
 
@@ -291,24 +228,15 @@ final class IngestPipeline(
       .start()
   }
 
-  /** Wire a line stream end-to-end. Caller supplies the streaming source
-    * (the custom TCP `MicroBatchStream` in production via
-    * [[startStamped]]; any `Dataset[String]` here).
+  /** Wire a line stream end-to-end, stamping each line with the wall
+    * clock when it is parsed. Caller supplies the streaming source (the
+    * custom TCP `MicroBatchStream` in production goes to [[startStamped]]
+    * directly; any `Dataset[String]` here).
     */
   def start(lines: Dataset[String], checkpoint: String,
             trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery = {
     import lines.sparkSession.implicits._
-    val p = parser
-    lines
-      .flatMap { l =>
-        val now = (System.currentTimeMillis() / 1000).toInt
-        p.parse(l, now)
-      }
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[MetricPoint], id: Long) => processBatch(batch, id) }
-      .start()
+    startStamped(lines.map(l => (l, (System.currentTimeMillis() / 1000).toInt)).toDF("line", "updated"),
+      checkpoint, trigger)
   }
 }

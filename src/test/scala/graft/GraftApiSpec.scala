@@ -2,6 +2,7 @@ package graft
 
 import graft.api.Graft
 import graft.model.MetricStatus
+import graft.streaming.GraphiteServerRegistry
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -121,5 +122,43 @@ class GraftApiSpec extends AnyFunSuite {
     g.setStatus("a.y", MetricStatus.Ban, nowSeconds = 10050L)
     g.refreshSearchCache()
     assert(g.searchCached("a.*").isEmpty)
+  }
+
+  test("graphite lines pushed over TCP are searchable and readable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_tcp").toString
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    val q = g.ingestTcp(0, s"$dir/ckpt")
+    try {
+      var port = Option.empty[Int]
+      val bindDeadline = System.currentTimeMillis() + 10000
+      while (port.isEmpty && System.currentTimeMillis() < bindDeadline) {
+        port = GraphiteServerRegistry.boundPort("graphite")
+        if (port.isEmpty) Thread.sleep(50)
+      }
+      assert(port.nonEmpty, "server did not bind")
+      val sock = new java.net.Socket("127.0.0.1", port.get)
+      val out = new java.io.PrintWriter(sock.getOutputStream, true)
+      Seq("one_min.tcp.host1.requests 10.0 1700000000",
+        "one_min.tcp.host1.requests 20.0 1700000060",
+        "one_min.tcp.host2.requests 5.0 1700000000").foreach(out.println)
+      out.flush(); sock.close()
+      // lines land in the source's buffer asynchronously
+      def written(): Long =
+        try spark.read.parquet(s"$dir/data").count() catch { case _: Exception => 0L }
+      val deadline = System.currentTimeMillis() + 20000
+      while (written() < 3 && System.currentTimeMillis() < deadline) {
+        q.processAllAvailable(); Thread.sleep(100)
+      }
+      assert(written() === 3L)
+    } finally q.stop()
+
+    assert(g.search("one_min.tcp.*.requests").select("name").as[String].collect().toSet ===
+      Set("one_min.tcp.host1.requests", "one_min.tcp.host2.requests"))
+    val series = g.metricData(Seq("one_min.tcp.*.requests"), 1700000000, 1700000180,
+      nowSeconds = 1700000200).collect().map(r =>
+      r.getAs[String]("metric") -> r.getAs[scala.collection.Seq[Any]]("points")).toMap
+    assert(series === Map(
+      "one_min.tcp.host1.requests" -> Seq(10.0, 20.0, null),
+      "one_min.tcp.host2.requests" -> Seq(5.0, null, null)))
   }
 }

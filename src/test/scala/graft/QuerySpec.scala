@@ -41,8 +41,9 @@ class QuerySpec extends AnyFunSuite {
       ("n", 100, 1.0, 9)
     ).toDF("metric", "ts", "value", "updated")
     val got = MetricQuery.dedupLatest(df, Seq("metric", "ts"), "value", "updated")
-      .orderBy("metric", "ts").as[(String, Int, Double)].collect().toSeq
-    assert(got == Seq(("m", 100, 12.0), ("m", 160, 7.5), ("n", 100, 1.0)))
+      .orderBy("metric", "ts").select("metric", "ts", "value", "updated")
+      .as[(String, Int, Double, Int)].collect().toSeq
+    assert(got == Seq(("m", 100, 12.0, 5), ("m", 160, 7.5, 2), ("n", 100, 1.0, 9)))
   }
 
   test("rollup dispatch: avg/min/max/sum/any/last") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.model.MetricStatus
 import graft.model.MetricStatus._
+import graft.search.MetricSearchOps
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Restricted transition graph goldens (reference MetricStatus.java:48-103). */
@@ -38,5 +39,17 @@ class StatusSpec extends AnyFunSuite {
 
   test("round-trip names") {
     MetricStatus.all.foreach(s => assert(MetricStatus.of(s.name) == s))
+  }
+
+  test("the column form equals selectStatus on every (old, new) pair") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val pairs = for (o <- MetricStatus.all; n <- MetricStatus.all) yield (o.name, n.name)
+    assert(pairs.size === 36)
+    val got = pairs.toDF("old", "new")
+      .select($"old", $"new", MetricSearchOps.selectStatusCol($"old", $"new").as("status"))
+      .as[(String, String, String)].collect().toSet
+    val want = pairs.map { case (o, n) => (o, n, selectStatus(MetricStatus.of(o), MetricStatus.of(n)).name) }
+    assert(got === want.toSet)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.names.MetricNames
 import graft.streaming.IngestPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -121,17 +122,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(!names.contains("one_min.spam.brandnew.requests"))
   }
 
-  test("ancestor/level/parent column expressions") {
+  test("ancestor/level/parent name arithmetic") {
     val pipe = new IngestPipeline(dataPath = "/tmp/x", treePath = "/tmp/y")
-    val df = Seq("a.b.c", "solo").toDF("name")
-    val anc = df.select($"name", pipe.ancestorsCol($"name").as("a"))
-      .as[(String, Seq[String])].collect().toMap
-    assert(anc("a.b.c") == Seq("a.", "a.b.", "a.b.c"))
-    assert(anc("solo") == Seq("solo"))
-    val lv = df.select($"name", pipe.levelCol($"name").as("l")).as[(String, Int)].collect().toMap
-    assert(lv("a.b.c") == 3 && lv("solo") == 1)
-    val par = Seq("a.b.c", "a.b.", "a.", "a").toDF("name")
-      .select($"name", pipe.parentCol($"name").as("p")).as[(String, String)].collect().toMap
+    assert(pipe.ancestors("a.b.c") == Seq("a.", "a.b.", "a.b.c"))
+    assert(pipe.ancestors("solo") == Seq("solo"))
+    assert(MetricNames.level("a.b.c") == 3 && MetricNames.level("solo") == 1)
+    val par = Seq("a.b.c", "a.b.", "a.", "a").map(n => n -> MetricNames.parent(n)).toMap
     assert(par("a.b.c") == "a.b." && par("a.b.") == "a." && par("a.") == "" && par("a") == "")
   }
 }
