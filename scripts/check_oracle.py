@@ -19,13 +19,16 @@ BOTH sides as pandas frames and fails a query on any per-column dtype-KIND
 mismatch (int vs float vs bool vs object/Decimal ...), which is exactly
 the class the driver's renderer distinguishes, BEFORE the value compare.
 """
-import json, math, sys
+import json, math, sys, time
 from pathlib import Path
 
 import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
+
+# each result line reaches a pipe or a log as soon as it is known
+sys.stdout.reconfigure(line_buffering=True)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -64,6 +67,7 @@ def dtype_kinds(df):
 
 
 def main():
+    t0 = time.monotonic()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
@@ -117,7 +121,7 @@ def main():
         else:
             print(f"OK       {name} ({len(s_rows)} rows)")
             ok += 1
-    print(f"\n{ok} ok, {fail} failed")
+    print(f"\n{ok} ok, {fail} failed in {time.monotonic() - t0:.0f} s")
     sys.exit(1 if fail else 0)
 
 

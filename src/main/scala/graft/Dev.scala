@@ -146,7 +146,7 @@ object Dev {
     }
   }
 
-  private def deleteTree(root: Path): Unit =
+  private[graft] def deleteTree(root: Path): Unit =
     Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
 
   private val usage =

@@ -25,13 +25,19 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // a query's old dump goes before it runs: a query that fails now
+    // must leave no parquet for the oracle check to pass on
+    val failed = SparkEntry.queries.filter(kv => selected(kv._1)).flatMap { case (name, fn) =>
+      val dump = Paths.get(s"$outDir/$name")
+      if (Files.exists(dump)) Dev.deleteTree(dump)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(dump.toString)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
-    }
+    }.toSeq.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -47,6 +53,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] ${failed.size} failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
     spark.stop()
   }
 }

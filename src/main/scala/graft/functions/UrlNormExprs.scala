@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One-walk native form of the `UrlOps.urlNormalize` regex chain —
   * the canonical-URL map work every URL-tier consumer (dedup, caps,
   * robots, frontier, fetch plan) pays per row. The Column chain stays
-  * the specification (`UrlOps.urlNormalizeRegex`): `UrlNormSpec` runs
-  * BOTH forms through Spark over the fixture's hostile dimensions and
+  * the specification (`RegexChains.urlNormalizeRegex`, in src/test):
+  * `UrlNormSpec` runs BOTH forms through Spark over the fixture's hostile dimensions and
   * random URLs and asserts row equality, and the DuckDB oracles
   * replay the regex semantics — so native-vs-chain parity is oracle
   * parity.
@@ -190,7 +190,8 @@ object UrlNorm extends Serializable {
 }
 
 /** `url_norm_host(url)` → struct(url_norm, host), ≡ the
-  * `UrlOps.urlNormalizeRegex` chain with kill keys `extraKill`.
+  * `RegexChains.urlNormalizeRegex` chain (src/test) with kill keys
+  * `extraKill`.
   */
 case class UrlNormHostExpression(child: Expression, extraKill: Seq[String])
     extends UnaryExpression {
@@ -240,9 +241,9 @@ case class UrlNormHostExpression(child: Expression, extraKill: Seq[String])
 /** RFC 3986 §5.2 resolution + host extraction as native walks — the
   * per-LINK hot path of the link tier (one resolveRef + up to two
   * hostOf per extracted href). Same contract as [[UrlNorm]]: the
-  * Column chains (`UrlOps.resolveRefRegex` / `hostOfRegex`) stay the
-  * executable spec, `UrlNormSpec` pins equality through Spark, and
-  * `UrlOpsSpec`'s complete §5.4 normal/abnormal golden tables run
+  * Column chains (`RegexChains.resolveRefRegex` / `hostOfRegex`, in
+  * src/test) stay the executable spec, `UrlNormSpec` pins equality
+  * through Spark, and `UrlOpsSpec`'s complete §5.4 normal/abnormal golden tables run
   * against THIS implementation.
   */
 object UrlResolve extends Serializable {
@@ -300,7 +301,7 @@ object UrlResolve extends Serializable {
     j < n && r.charAt(j) == ':'
   }
 
-  /** ≡ `UrlOps.resolveRefRegex(base, ref)`; null when base carries no
+  /** ≡ `RegexChains.resolveRefRegex(base, ref)`; null when base carries no
     * `scheme://`.
     */
   def resolveRef(baseU: UTF8String, refU: UTF8String): UTF8String = {
@@ -338,7 +339,7 @@ object UrlResolve extends Serializable {
 
   @inline private def baseWithoutChange(b: UTF8String): UTF8String = b
 
-  /** ≡ `UrlOps.hostOfRegex(url)`: authority → userinfo strip →
+  /** ≡ `RegexChains.hostOfRegex(url)`: authority → userinfo strip →
     * Unicode lower → host prefix (before ':'/'[') → trailing-dot
     * strip; '' when the value has no `scheme://` form.
     */

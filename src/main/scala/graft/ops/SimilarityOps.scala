@@ -181,28 +181,59 @@ object SimilarityOps {
     }.toSeq.toDF("cell", "dim", "value")
   }
 
-  /** The Lloyd training loop over a pre-cleaned (non-null-vector,
-    * ideally persisted) frame — shared by [[kmeans]] (centroid output)
-    * and [[semDedup]] (assignment reuse). Deterministic per the kmeans
-    * contract above.
+  /** The flat trainers' Lloyd run over a pre-cleaned (non-null-vector,
+    * ideally persisted) frame: one [[lloyd]] key seeded with the `k`
+    * lowest-id vectors. Shared by [[kmeans]] (centroid output) and every
+    * trainer that reuses the assignment ([[semDedup]] and the rest).
     */
   private def trainCentroids(clean: DataFrame, k: Int, iters: Int,
-                             idCol: String, vecCol: String): Array[Array[Double]] = {
-    var cents: Array[Array[Double]] = clean.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
+                             idCol: String, vecCol: String): Array[Array[Double]] =
+    lloyd(clean.select(lit(0).as("key"), col(vecCol).as("vec")),
+      Map(0 -> lowestIdVecs(clean, k, idCol, vecCol)), iters)(0)
+
+  /** The flat and PQ init: the `k` lowest-id vectors, 4dp-rounded. A
+    * top-k, not a window: the sort stays distributed.
+    */
+  private def lowestIdVecs(clean: DataFrame, k: Int,
+                           idCol: String, vecCol: String): Array[Array[Double]] =
+    clean.orderBy(col(idCol)).limit(k).select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).toArray.map(f => round4(f.toDouble)))
-    for (_ <- 1 to iters) {
-      val means = clean
-        .select(assignCell(cents, vecCol).as("cell"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
+
+  /** The one Lloyd loop, per the [[kmeans]] contract. `rows` carry
+    * (key int, vec array<float>), and every key trains its own
+    * centroids from `init(key)`: [[trainCentroids]] passes one key,
+    * [[semDedupAdaptive]] one per oversized cell, [[pqTrain]] one per
+    * subspace slice. An iteration is ONE partial-aggregated collect
+    * grouped by (key, cell, pos), so the job count does not grow with
+    * the number of keys; only Σ k_key × dims means return, rounded by
+    * [[round4]] on the driver. Empty cells keep their centroid; a null
+    * cell (length-mismatched vector) is skipped.
+    */
+  private def lloyd(rows: DataFrame, init: Map[Int, Array[Array[Double]]],
+                    iters: Int): Map[Int, Array[Array[Double]]] =
+    (1 to iters).foldLeft(init) { (cents, _) =>
+      val means = rows
+        .select(col("key"), keyedCell(col("key"), col("vec"), cents).as("cell"),
+          posexplode(col("vec")).as(Seq("pos", "v")))
+        .groupBy("key", "cell", "pos")
         .agg(avg(col("v").cast("double")).as("m"))
         .collect()
-      val next = cents.map(_.clone())
-      means.foreach(r => if (!r.isNullAt(0)) next(r.getInt(0))(r.getInt(1)) = round4(r.getDouble(2)))
-      cents = next
+      val next = cents.map { case (key, c) => key -> c.map(_.clone()) }
+      means.foreach { r =>
+        if (!r.isNullAt(1)) next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = round4(r.getDouble(3))
+      }
+      next
     }
-    cents
-  }
+
+  /** Nearest cell of `vec` among `cents(key)` — a when-chain of
+    * per-key [[graft.functions.VectorExprs.nearestCell]] literals,
+    * map-only, no join; 0 for a key without centroids.
+    */
+  private def keyedCell(key: Column, vec: Column,
+                        cents: Map[Int, Array[Array[Double]]]): Column =
+    cents.foldLeft(lit(0)) { case (acc, (k, c)) =>
+      when(key === k, graft.functions.VectorExprs.nearestCell(vec, c)).otherwise(acc)
+    }
 
   /** Trained Lloyd state — the cluster family's first-class artifact,
     * mirroring [[PcaState]]/[[ivfTrain]]: the `iters` corpus passes of
@@ -354,7 +385,7 @@ object SimilarityOps {
     try {
       val kEff = if (k >= 1) k else semDedupK(clean.count(), targetCellRows)
       val cents = trainCentroids(clean, kEff, iters, idCol, vecCol)
-      semDedupFromAsg(assignFrame(clean, cents, idCol, vecCol), threshold)
+      semDedupFromAsg(assignFrame(clean, cents, idCol, vecCol), threshold, Seq("cell"))
     } finally clean.unpersist(blocking = false)
   }
 
@@ -367,7 +398,7 @@ object SimilarityOps {
                idCol: String, vecCol: String): DataFrame =
     semDedupFromAsg(
       assignFrame(DedupOps.widen(emb.filter(col(vecCol).isNotNull)),
-        state.centroids, idCol, vecCol), threshold)
+        state.centroids, idCol, vecCol), threshold, Seq("cell"))
 
   /** The shared assignment frame (vec_id, vec, cell, nrm),
     * CHECKPOINTED, not transiently persisted: the operators that
@@ -386,27 +417,29 @@ object SimilarityOps {
       assignCell(cents, vecCol).as("cell"), norm(col(vecCol)).as("nrm"))
       .localCheckpoint(true)
 
-  /** The semDedup drop rule over a materialized [[assignFrame]]:
-    * within-cell pairs, max-cosine-per-loser aggregation barrier
-    * (the NOTES_r3 trap-#2 single-eval discipline), losers at/above
-    * `threshold` marked. Output: (vec_id, cell, dropped).
+  /** The SemDeDup drop rule over a materialized assignment (vec_id,
+    * vec, nrm and the `keys` columns): pairs within a group of equal
+    * `keys`, max-cosine-per-loser aggregation barrier (the NOTES_r3
+    * trap-#2 single-eval discipline), losers at/above `threshold`
+    * marked. [[semDedup]] groups by (cell), [[semDedupAdaptive]] by
+    * (cell, subcell). Output: (vec_id, keys..., dropped).
     */
-  private def semDedupFromAsg(asg: DataFrame, threshold: Double): DataFrame = {
-    val a = asg.select(col("cell"), col("vec_id").as("id_a"),
-      col("vec").as("va"), col("nrm").as("na"))
-    val b = asg.select(col("cell"), col("vec_id").as("id_b"),
-      col("vec").as("vb"), col("nrm").as("nb"))
-    val dropped = a.join(b, Seq("cell"))
+  private def semDedupFromAsg(asg: DataFrame, threshold: Double, keys: Seq[String]): DataFrame = {
+    val a = asg.select(keys.map(col) ++ Seq(col("vec_id").as("id_a"),
+      col("vec").as("va"), col("nrm").as("na")): _*)
+    val b = asg.select(keys.map(col) ++ Seq(col("vec_id").as("id_b"),
+      col("vec").as("vb"), col("nrm").as("nb")): _*)
+    val dropped = a.join(b, keys)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_b"),
         round(cosinePre(col("va"), col("vb"), col("na"), col("nb")), 6).as("cos_sim"))
       .groupBy("id_b").agg(max(col("cos_sim")).as("max_sim"))
       .filter(col("max_sim") >= threshold)
       .select(col("id_b").as("vec_id"), lit(true).as("is_dup"))
-    asg.select(col("vec_id"), col("cell"))
+    val out = col("vec_id") +: keys.map(col)
+    asg.select(out: _*)
       .join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("is_dup"), lit(false)).as("dropped"))
+      .select(out :+ coalesce(col("is_dup"), lit(false)).as("dropped"): _*)
   }
 
   /** [[semDedup]]'s k(n) policy: enough cells to hold expected cell size
@@ -440,18 +473,17 @@ object SimilarityOps {
     * is the per-cell re-cluster — IVF_PQ's layout, applied only where
     * the data needs it.
     *
-    * Cost shape: ONE JOINT sub-Lloyd over all oversized cells at once —
+    * Cost shape: ONE [[lloyd]] run keyed by oversized cell —
     * `iters + 1` Spark jobs total regardless of how many cells refine
     * (refining per cell in a driver loop would cost #cells × iters jobs
     * and re-scan the corpus each time; under heavy skew the job count
     * itself would track the skew). In a uniform corpus nothing is
     * oversized and this degrades to exactly [[semDedup]] plus one
-    * cell-count aggregate. The refined assignment rides a when-chain of
-    * per-cell [[graft.functions.VectorExprs.nearestCell]] literals —
-    * map-only, no join. Semantics note: refinement narrows the
-    * comparison scope
-    * exactly like the flat cells already do (SemDeDup accepts cross-cell
-    * misses by design); `SimilaritySpec` pins the uniform-corpus
+    * cell-count aggregate. The refined assignment is [[keyedCell]] —
+    * map-only, no join — and the pair rule is [[semDedup]]'s, over
+    * (cell, subcell). Semantics note: refinement narrows the comparison
+    * scope exactly like the flat cells already do (SemDeDup accepts
+    * cross-cell misses by design); `PipelineOpsSpec` pins the uniform-corpus
     * degenerate case equal to [[semDedup]] and the skew case's bounded
     * cells.
     *
@@ -464,14 +496,11 @@ object SimilarityOps {
     require(oversizeFactor >= 2, s"oversizeFactor must be >= 2: $oversizeFactor")
     val spark = emb.sparkSession
     import spark.implicits._
-    val t0 = System.nanoTime(); def mark(s: String): Unit = if (sys.env.contains("GRAFT_PHASE_TIMING")) println(f"  [adaptive] $s: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val clean = DedupOps.widen(emb.filter(col(vecCol).isNotNull))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val kEff = semDedupK(clean.count(), targetCellRows)
-      mark("count")
       val cents = trainCentroids(clean, kEff, iters, idCol, vecCol)
-      mark("flat lloyd")
       val asg = clean.select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
           assignCell(cents, vecCol).as("cell"), norm(col(vecCol)).as("nrm"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -479,79 +508,35 @@ object SimilarityOps {
         val oversized: Array[(Int, Long)] = asg.groupBy("cell").count()
           .filter(col("count") > oversizeFactor.toLong * targetCellRows)
           .select(col("cell"), col("count")).as[(Int, Long)].collect()
-        mark("oversized collect")
         val sub: Column =
           if (oversized.isEmpty) lit(0)
           else {
             val kByCell: Map[Int, Int] =
               oversized.map { case (c, n) => c -> semDedupK(n, targetCellRows) }.toMap
-            val bigCells: Array[Int] = oversized.map(_._1)
-            // the joint sub-Lloyd only ever touches oversized-cell rows
-            val brows = asg.filter(col("cell").isin(bigCells.toSeq: _*))
-              .select(col("cell"), col("vec_id"), col("vec"))
+            // the joint sub-Lloyd only ever touches oversized-cell rows,
+            // keyed by their cell
+            val brows = asg.filter(col("cell").isin(oversized.map(_._1).toSeq: _*))
+              .select(col("cell").as("key"), col("vec_id"), col("vec"))
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
               // per-cell init = the cell's k(cellCount) lowest-id vectors
               // (sub = 0-based rank), same contract as the flat init
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy("cell").orderBy("vec_id")
-              val maxK = kByCell.values.max
+              val w = Window.partitionBy("key").orderBy("vec_id")
               val initRows = brows
-                .select(col("cell"), col("vec"), (row_number().over(w) - 1).as("sub"))
-                .filter(col("sub") < maxK)
+                .select(col("key"), col("vec"), (row_number().over(w) - 1).as("sub"))
+                .filter(col("sub") < kByCell.values.max)
                 .collect()
-              mark("sub init")
-              var subCents: Map[Int, Array[Array[Double]]] = initRows
+              val init: Map[Int, Array[Array[Double]]] = initRows
                 .groupBy(_.getInt(0))
                 .map { case (c, rows) =>
                   c -> rows.filter(_.getInt(2) < kByCell(c)).sortBy(_.getInt(2))
                     .map(_.getSeq[Float](1).toArray.map(f => round4(f.toDouble)))
                 }
-              def jointAssign(cents: Map[Int, Array[Array[Double]]]): Column =
-                bigCells.foldLeft(lit(0)) { (acc, c) =>
-                  when(col("cell") === c,
-                    graft.functions.VectorExprs.nearestCell(col("vec"), cents(c)))
-                    .otherwise(acc)
-                }
-              // joint Lloyd: one partial-agg job per iteration covers
-              // EVERY oversized cell (keyed by (cell, sub)); only
-              // Σ k_cell × dims means return to the driver. Empty
-              // subcells keep their previous centroid, like the flat pass.
-              for (_ <- 1 to iters) {
-                val means = brows
-                  .select(col("cell"), jointAssign(subCents).as("sub"),
-                    posexplode(col("vec")).as(Seq("pos", "v")))
-                  .groupBy("cell", "sub", "pos")
-                  .agg(avg(col("v").cast("double")).as("m"))
-                  .collect()
-                val next = subCents.map { case (c, arr) => c -> arr.map(_.clone()) }
-                means.foreach { r =>
-                  if (!r.isNullAt(1))
-                    next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = round4(r.getDouble(3))
-                }
-                subCents = next
-                mark("sub iter")
-              }
-              jointAssign(subCents)
+              keyedCell(col("cell"), col("vec"), lloyd(brows, init, iters))
             } finally brows.unpersist(blocking = false)
           }
-        val refined = asg.withColumn("subcell", sub).localCheckpoint(true)
-        mark("refined checkpoint")
-        val a = refined.select(col("cell"), col("subcell"), col("vec_id").as("id_a"),
-          col("vec").as("va"), col("nrm").as("na"))
-        val b = refined.select(col("cell"), col("subcell"), col("vec_id").as("id_b"),
-          col("vec").as("vb"), col("nrm").as("nb"))
-        val dropped = a.join(b, Seq("cell", "subcell"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_b"),
-            round(cosinePre(col("va"), col("vb"), col("na"), col("nb")), 6).as("cos_sim"))
-          .groupBy("id_b").agg(max(col("cos_sim")).as("max_sim"))
-          .filter(col("max_sim") >= threshold)
-          .select(col("id_b").as("vec_id"), lit(true).as("is_dup"))
-        refined.select(col("vec_id"), col("cell"), col("subcell"))
-          .join(dropped, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cell"), col("subcell"),
-            coalesce(col("is_dup"), lit(false)).as("dropped"))
+        semDedupFromAsg(asg.withColumn("subcell", sub).localCheckpoint(true), threshold,
+          Seq("cell", "subcell"))
       } finally asg.unpersist(blocking = false)
     } finally clean.unpersist(blocking = false)
   }
@@ -573,12 +558,17 @@ object SimilarityOps {
     */
   // ---- product quantization (PQ) -----------------------------------------
 
-  /** Product-quantization codebooks: `m` INDEPENDENT Lloyd runs, one
-    * per contiguous `subDim`-wide slice of the embedding — the exact
-    * [[kmeans]] recipe (lowest-id init, 4dp-rounded means, lowest-cell
-    * ties) per subspace, so the full training trace replays in SQL.
-    * Returns books(s)(cell)(dim). The corpus is persisted once and
-    * shared by all m runs (each run is iters+1 driver jobs over it).
+  /** Product-quantization codebooks: one [[kmeans]] per contiguous
+    * `subDim`-wide slice of the embedding — the exact recipe
+    * (lowest-id init, 4dp-rounded means, lowest-cell ties) per
+    * subspace, so the full training trace replays in SQL. Returns
+    * books(s)(cell)(dim).
+    *
+    * All m subspaces train in ONE [[lloyd]] run keyed by subspace over
+    * each vector's m slices: iters+1 jobs in total, where m sequential
+    * runs would pay m·(iters+1) corpus passes for the same arithmetic.
+    * The init slices the k lowest-id vectors (round4 commutes with
+    * slicing).
     *
     * This is the memory layout that makes billion-vector ANN feasible:
     * m codes of log2(k) bits replace dims floats — 8 bytes instead of
@@ -587,45 +577,15 @@ object SimilarityOps {
     */
   def pqTrain(corpus: DataFrame, m: Int = 8, subDim: Int = 8, k: Int = 16, iters: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    // ONE joint keyed Lloyd for all m subspaces (the q100 sub-Lloyd
-    // shape): per iteration, every vector computes its m nearest-cell
-    // ids in one projection, the exploded dims key by (per-subspace
-    // cell, global pos), and a single m·k·subDim-row collect updates
-    // every codebook. Job count is iters+1 TOTAL — the sequential
-    // per-subspace form paid m·(iters+1) full-corpus jobs for the same
-    // arithmetic (measured 8×: ~6.9 s → ~1.7 s for the q112/q120
-    // chain at sf0.1). Output is bit-identical: same first-k init rows
-    // (round4 commutes with slicing), same per-subspace assignment
-    // expression, same per-(cell, dim) means, same round4.
     val clean = corpus.filter(col(vecCol).isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val initRows = clean.orderBy(col(idCol)).limit(k)
-        .select(col(vecCol)).collect()
-        .map(_.getSeq[Float](0).toArray.map(f => round4(f.toDouble)))
-      var books: Array[Array[Array[Double]]] =
-        Array.tabulate(m)(s => initRows.map(v => v.slice(s * subDim, (s + 1) * subDim)))
-      for (_ <- 1 to iters) {
-        val cellCols = array((0 until m).map(s =>
-          graft.functions.VectorExprs.nearestCell(
-            slice(col(vecCol), s * subDim + 1, subDim), books(s))): _*)
-        val means = clean
-          .select(cellCols.as("__cells"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-          .select(element_at(col("__cells"), (col("pos") / subDim).cast("int") + 1).as("cell"),
-            col("pos"), col("v"))
-          .groupBy("cell", "pos")
-          .agg(avg(col("v").cast("double")).as("m"))
-          .collect()
-        val next = books.map(_.map(_.clone()))
-        means.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val pos = r.getInt(1)
-            next(pos / subDim)(r.getInt(0))(pos % subDim) = round4(r.getDouble(2))
-          }
-        }
-        books = next
-      }
-      books
+      val init = lowestIdVecs(clean, k, idCol, vecCol)
+      val slices = clean.select(posexplode(array((0 until m).map(s =>
+        slice(col(vecCol), s * subDim + 1, subDim)): _*)).as(Seq("key", "vec")))
+      val books = lloyd(slices,
+        (0 until m).map(s => s -> init.map(_.slice(s * subDim, (s + 1) * subDim))).toMap, iters)
+      Array.tabulate(m)(books)
     } finally clean.unpersist(blocking = false)
   }
 
@@ -2386,7 +2346,7 @@ object SimilarityOps {
       val kEff = if (k >= 1) k else semDedupK(clean.count(), targetCellRows)
       val cents = trainCentroids(clean, kEff, iters, idCol, vecCol)
       val asg = assignFrame(clean, cents, idCol, vecCol)
-      val ded = semDedupFromAsg(asg, threshold)
+      val ded = semDedupFromAsg(asg, threshold, Seq("cell"))
       val w = Window.partitionBy("cell")
         .orderBy(SampleOps.seededHash(col("vec_id"), seed), col("vec_id"))
       val lay = asg.select(col("vec_id"), col("cell"))

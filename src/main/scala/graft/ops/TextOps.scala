@@ -112,38 +112,6 @@ object TextOps {
   private[graft] def htmlLines(html: Column): Column =
     graft.functions.HtmlTextExprs.htmlLines(html)
 
-  /** The regex-chain SPECIFICATION of [[htmlLines]] — r14 keeps it as
-    * the executable spec the native walk is property-pinned against
-    * (`HtmlLinesSpec`); the DuckDB extraction oracles replay this
-    * chain verbatim, so native-vs-regex parity here IS oracle parity.
-    */
-  private[graft] def htmlLinesRegex(html: Column): Column = {
-    val noScript = regexp_replace(html,
-      "(?is)<script\\b[^>]*>.*?</script\\s*>", " ")
-    val noStyle = regexp_replace(noScript,
-      "(?is)<style\\b[^>]*>.*?</style\\s*>", " ")
-    val noComment = regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
-    // tag BODIES are quote-aware (attribute values may contain '>':
-    // <a title="a>b"> must strip whole, not truncate at the quoted '>')
-    val blockNl = regexp_replace(noComment,
-      "(?i)</?(p|div|br|li|ul|ol|h[1-6]|tr|td|th|table|section|article" +
-        "|header|footer|nav|blockquote|title|pre)\\b" + tagBody + ">", "\n")
-    val noTags = regexp_replace(blockNl, "(?s)<" + tagBody + ">", " ")
-    val named = Seq("&nbsp;" -> " ", "&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"")
-      .foldLeft(noTags) { case (c, (from, to)) => replace(c, lit(from), lit(to)) }
-    // bounded numeric-entity decode (dec + hex forms, leading zeros,
-    // case-insensitive hex) — the &-family LAST and in ONE single-pass
-    // regex, so decoded '&' cannot re-form an entity and double-encoded
-    // text ('&amp;#38;' -> the literal text '&#38;') cannot double-decode
-    val decoded = regexp_replace(
-      numericEntities.foldLeft(named) { case (c, (pat, to)) =>
-        regexp_replace(c, pat, to)
-      }, "(?i)&(?:amp|#0*38|#x0*26);", "&")
-    filter(
-      transform(split(decoded, "\n", -1), l => trim(regexp_replace(l, "\\s+", " "))),
-      l => l =!= "")
-  }
-
   /** The boilerplate-DENSITY filter over [[htmlLines]]' output. */
   private def htmlKeptLines(lines: Column, minLineTokens: Int): Column =
     filter(lines, l => size(split(l, " ")) >= lit(minLineTokens))

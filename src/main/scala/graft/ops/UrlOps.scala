@@ -165,44 +165,6 @@ object UrlOps {
         col("__nh").getField("url_norm").as("url_norm"),
         col("__nh").getField("host").as("host"))
 
-  /** The regex-chain SPECIFICATION of [[urlNormalize]] — r14 keeps it
-    * as the executable spec the native walk (`UrlNormExprs`) is
-    * property-pinned against (`UrlNormSpec`); the DuckDB URL oracles
-    * replay this chain verbatim, so native-vs-chain parity here IS
-    * oracle parity.
-    */
-  private[graft] def urlNormalizeRegex(docs: DataFrame, idCol: String = "doc_id",
-                                       urlCol: String = "url",
-                                       extraKill: Seq[String] = Nil): DataFrame = {
-    val u = trim(col(urlCol))
-    // fragment FIRST: a '?' inside '#/view?sid=1' must not become the query
-    val uNoFrag = regexp_replace(u, fragmentRe, "")
-    val scheme = lower(regexp_extract(u, schemeRe, 1))
-    val hostport = lower(regexp_replace(regexp_extract(u, authRe, 1), userinfoRe, ""))
-    val host = regexp_replace(regexp_extract(hostport, hostRe, 1), trailingDotsRe, "")
-    val port = regexp_extract(hostport, portRe, 1)
-    val keepPort = port =!= "" &&
-      !((scheme === "http" && port === "80") || (scheme === "https" && port === "443"))
-    val path = regexp_replace(pctCanon(regexp_extract(u, pathRe, 1)), "/+$", "")
-    // '+' -> %20 BEFORE pctCanon (both spell a space in a query); then
-    // canonicalize escapes BEFORE the tracking filter, so an encoded
-    // spelling of a tracking key ('utm%5Fsource') cannot evade the kill
-    val qraw = pctCanon(replace(regexp_extract(uNoFrag, queryRe, 1), lit("+"), lit("%20")))
-    val killExtra = (p: Column) =>
-      if (extraKill.isEmpty) lit(false)
-      else regexp_extract(p, "^([^=]*)", 1).isin(extraKill: _*)
-    val qs = array_join(array_sort(filter(split(qraw, "&", -1),
-      p => p =!= "" && !p.rlike(trackingRe) && !killExtra(p))), "&")
-    val norm = concat(scheme, lit("://"), host,
-      when(keepPort, concat(lit(":"), port)).otherwise(lit("")),
-      path,
-      when(qs =!= "", concat(lit("?"), qs)).otherwise(lit("")))
-    val invalid = scheme === "" || host === ""
-    docs.select(col(idCol), col(urlCol),
-      when(invalid, lit(null).cast("string")).otherwise(norm).as("url_norm"),
-      when(invalid, lit(null).cast("string")).otherwise(host).as("host"))
-  }
-
   /** Exact URL dedup over [[urlNormalize]]'s output: the first id (by
     * value) per normalized URL keeps, the rest drop — the frontier
     * dedup that kills re-crawls before fetch/parse cost. Invalid rows
@@ -613,16 +575,6 @@ object UrlOps {
   private[graft] def hostOf(url: Column): Column =
     graft.functions.UrlNormExprs.hostOf(url)
 
-  /** The regex-chain SPECIFICATION of [[hostOf]] (see
-    * [[urlNormalizeRegex]]'s parity contract).
-    */
-  private[graft] def hostOfRegex(url: Column): Column =
-    regexp_replace(
-      regexp_extract(
-        lower(regexp_replace(regexp_extract(url, authRe, 1), userinfoRe, "")),
-        hostRe, 1),
-      trailingDotsRe, "")
-
   /** RFC 3986 §5.2 reference resolution: the absolute URL a reference
     * found on page `base` points at. `base` must be a normalized
     * absolute URL ([[urlNormalize]]'s url_norm — the pipeline seat
@@ -640,29 +592,6 @@ object UrlOps {
     */
   def resolveRef(base: Column, ref: Column): Column =
     graft.functions.UrlNormExprs.resolveRef(base, ref)
-
-  /** The regex-chain SPECIFICATION of [[resolveRef]] (see
-    * [[urlNormalizeRegex]]'s parity contract; the §5.4 goldens in
-    * `UrlOpsSpec` run against the NATIVE form).
-    */
-  private[graft] def resolveRefRegex(base: Column, ref: Column): Column = {
-    val rr = regexp_replace(ref, fragmentRe, "")
-    val scheme = lower(regexp_extract(base, schemeRe, 1))
-    val auth = regexp_extract(base, authRe, 1)
-    val origin = concat(scheme, lit("://"), auth)
-    val basePath = regexp_extract(base, pathRe, 1)
-    val baseDir = when(basePath === "", lit("/"))
-      .otherwise(regexp_replace(basePath, "[^/]*$", ""))
-    val rp = regexp_replace(rr, refQueryStripRe, "")
-    val rq = regexp_extract(rr, refQueryRe, 1)
-    when(scheme === "", lit(null).cast("string"))
-      .when(rr === "", base)
-      .when(rr.rlike(absRefRe), rr)
-      .when(rr.startsWith("//"), concat(scheme, lit(":"), rr))
-      .when(rr.startsWith("?"), concat(origin, basePath, rr))
-      .when(rr.startsWith("/"), concat(origin, removeDotSegments(rp), rq))
-      .otherwise(concat(origin, removeDotSegments(concat(baseDir, rp)), rq))
-  }
 
   /** RFC 9309 (robots.txt) rule pattern → anchored regex, evaluated
     * identically by java.util.regex and RE2: '*' matches any octet

@@ -24,13 +24,13 @@ object MetricSearchOps {
 
   /** S6/A2 — current state of the append-only tree table: latest status per
     * name by `updated` (reference `SELECT name, argMax(status, updated) ...
-    * GROUP BY name`, `search/MetricSearch.java:319-324`).
+    * GROUP BY name`, `search/MetricSearch.java:319-324`). `level` and
+    * `parent` are functions of `name`, so they group with it: a filter on
+    * name, level or parent then pushes below the aggregation.
     */
   def currentTree(tree: DataFrame): DataFrame =
-    tree.groupBy("name")
+    tree.groupBy("name", "level", "parent")
       .agg(
-        first(col("level")).as("level"),
-        first(col("parent")).as("parent"),
         max_by(col("status"), col("updated")).as("status"),
         max(col("updated")).as("updated")
       )

@@ -30,9 +30,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   in one filtered `max_by(status, updated)` aggregate, and the ban
   *   gate, the new nodes, the per-dir caps and the AUTO_HIDDEN revivals
   *   are decided on the driver (the reference's in-memory `MetricTree`
-  *   check). With caps on, the new nodes' parents add one child-count
-  *   collect. Driver memory is bounded by the batch's distinct names
-  *   plus their ancestors, never by the tree. Status semantics stay
+  *   check). Driver memory is bounded by the batch's distinct names plus
+  *   their ancestors, never by the tree; with caps on, the same lookup
+  *   also returns the existing children of the batch's dirs and of the
+  *   root, so the bound grows by those children. Status semantics stay
   *   read-side.
   */
 final class IngestPipeline(
@@ -101,21 +102,15 @@ final class IngestPipeline(
     * refused (the reference returns the existing entry before the size
     * check).
     *
-    * Returns the refused names, dirs and metrics. The existing child
-    * counts come back in one collect bounded by the fresh nodes'
-    * parents, not the tree.
+    * Returns the refused names, dirs and metrics. `existing` is the
+    * current child count per (parent, is-dir), from the status lookup.
     */
-  private def refusedByLimits(tree: Option[DataFrame], fresh: Seq[String]): Set[String] = {
-    val parents = fresh.map(MetricNames.parent).distinct
-    val existing: Map[(String, Boolean), Long] = tree.fold(Map.empty[(String, Boolean), Long]) { t =>
-      MetricSearchOps.childCounts(t.filter(col("parent").isin(parents: _*)))
-        .collect().map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2)).toMap
-    }
+  private def refusedByLimits(existing: Map[(String, Boolean), Int], fresh: Seq[String]): Set[String] = {
     // existing + rank > max ⟺ the reference's size() >= max gate
     val over = fresh.groupBy(n => (MetricNames.parent(n), MetricNames.isDir(n))).flatMap {
       case (key @ (_, isDir), siblings) =>
         val max = if (isDir) limits.maxSubDirsPerDir else limits.maxMetricsPerDir
-        val children = existing.getOrElse(key, 0L)
+        val children = existing.getOrElse(key, 0)
         siblings.sorted.zipWithIndex.collect { case (n, i) if max > 0 && children + i + 1 > max => n }
     }.toSet
     fresh.filter(n => ancestors(n).exists(over.contains)).toSet
@@ -155,7 +150,8 @@ final class IngestPipeline(
     * The tree is read once: the current status of the batch's names and
     * their ancestor dirs comes back in one collect, and every per-name
     * decision is made on the driver. A first batch is an empty status map.
-    * Per-dir caps add one child-count collect for the new nodes' parents.
+    * With per-dir caps on, the same collect also returns the existing
+    * children of the batch's dirs, which the caps count.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
@@ -165,14 +161,21 @@ final class IngestPipeline(
       // per-partition distinct, merged on the driver: one job, no shuffle
       val names = df.select("metric").as[String].mapPartitions(_.toSet.iterator).collect().distinct.toSeq
       val paths = names.map(n => n -> ancestors(n)).toMap
-      val tree = readTree(spark)
+      val lookup = paths.values.flatten.toSeq.distinct
       // the batch's paths as a set filter: the aggregation is bounded by
-      // the batch, not the tree
-      val status: Map[String, String] = tree.fold(Map.empty[String, String]) { t =>
-        t.filter(col("name").isin(paths.values.flatten.toSeq.distinct: _*))
-          .groupBy("name").agg(max_by(col("status"), col("updated")))
-          .as[(String, String)].collect().toMap
+      // the batch, not the tree. With caps on, the lookup also returns
+      // the existing children of the batch's dirs and of the root, so
+      // the per-dir counts come from the same collect
+      val wanted =
+        if (limits.enabled) col("name").isin(lookup: _*) ||
+          col("parent").isin("" +: lookup.filter(MetricNames.isDir): _*)
+        else col("name").isin(lookup: _*)
+      // (name, parent, status) rows of the current tree
+      val current: Seq[(String, String, String)] = readTree(spark).toSeq.flatMap { t =>
+        MetricSearchOps.currentTree(t.filter(wanted)).select("name", "parent", "status")
+          .as[(String, String, String)].collect()
       }
+      val status: Map[String, String] = current.map { case (n, _, st) => n -> st }.toMap
       // the reference ban gate rejects a metric when ANY dir on its path
       // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
       // new children too, not just exact names
@@ -181,7 +184,10 @@ final class IngestPipeline(
       val nodes = accepted.flatMap(paths).distinct
       val fresh = nodes.filterNot(status.contains)
       val refused =
-        if (limits.enabled && fresh.nonEmpty) refusedByLimits(tree, fresh) else Set.empty[String]
+        if (limits.enabled && fresh.nonEmpty)
+          refusedByLimits(current.groupBy { case (n, p, _) => (p, MetricNames.isDir(n)) }
+            .map { case (key, children) => key -> children.size }, fresh)
+        else Set.empty[String]
       // points of refused metrics are dropped like the reference's
       // factory path (a null tree add drops the point,
       // `server/BaseMetricFactory.java`)

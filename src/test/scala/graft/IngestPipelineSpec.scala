@@ -153,7 +153,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val treeRows = spark.read.parquet(s"$dir/tree").count()
     val probe = new Dev.Probe(spark.sparkContext)
     val m = try probe.measure(pipe.processBatch(next, 1L)) finally probe.close()
-    assert(m.jobs === 9L, m.toString)
+    assert(m.jobs === 6L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 4 * 2 * 2, "8 new hosts: a dir and a metric each")
   }
 

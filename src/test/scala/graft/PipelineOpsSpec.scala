@@ -361,6 +361,50 @@ class PipelineOpsSpec extends AnyFunSuite {
       "every refined group of the identical cluster keeps exactly its lowest id")
   }
 
+  test("pqTrain's books equal kmeans run on each slice with the same k and iters") {
+    import graft.ops.SimilarityOps
+    val (m, subDim, k, iters) = (3, 8, 4, 3)
+    val emb = (0L until 40L).map(i =>
+      (i, (0 until m * subDim).map(d => (math.sin(i * 1.7 + d * 0.9) * 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val books = SimilarityOps.pqTrain(emb, m = m, subDim = subDim, k = k, iters = iters)
+    assert(books.map(_.map(_.toSeq).toSeq).toSeq !=
+      SimilarityOps.pqTrain(emb, m = m, subDim = subDim, k = k, iters = 0).map(_.map(_.toSeq).toSeq).toSeq,
+      "the fixture must move the centroids off their init")
+    (0 until m).foreach { s =>
+      val sub = emb.select(col("vec_id"), slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
+      val model = Array.fill(k, subDim)(Double.NaN)
+      SimilarityOps.kmeans(sub, k, iters).collect()
+        .foreach(r => model(r.getInt(0))(r.getInt(1) - 1) = r.getDouble(2))
+      assert(books(s).map(_.toSeq).toSeq === model.map(_.toSeq).toSeq, s"subspace $s")
+    }
+  }
+
+  test("pqTrain with m = 8 runs a pinned number of Spark jobs") {
+    import graft.ops.SimilarityOps
+    val emb = (0L until 64L).map(i => (i, (0 until 64).map(d => math.sin(i * 1.3 + d * 0.7).toFloat)))
+      .toDF("vec_id", "embedding")
+    val probe = new Dev.Probe(spark.sparkContext)
+    val got = try probe.measure(SimilarityOps.pqTrain(emb, m = 8, subDim = 8, k = 4, iters = 2))
+      finally probe.close()
+    assert(got.jobs === 5L, got.toString)
+  }
+
+  test("semDedupAdaptive on the skewed corpus runs a pinned number of Spark jobs") {
+    import graft.ops.SimilarityOps
+    // the skewed corpus of the semDedupAdaptive test above: one
+    // near-identical cluster of 150 and 50 spread vectors
+    def v(seed: Long): Seq[Float] =
+      (0 until 8).map(d => math.sin(seed * 7.0 + d * 3.1).toFloat * 10f)
+    val skewed = ((0L until 150L).map(i => (i, Seq.fill(8)(1f + i * 1e-5f))) ++
+      (150L until 200L).map(i => (i, v(i)))).toDF("vec_id", "embedding")
+    val probe = new Dev.Probe(spark.sparkContext)
+    val got = try probe.measure(
+        SimilarityOps.semDedupAdaptive(skewed, targetCellRows = 20, oversizeFactor = 2).collect())
+      finally probe.close()
+    assert(got.jobs === 28L, got.toString)
+  }
+
   test("recallAtK: exact-vs-exact is 1.0; approximate recall is bounded and consistent") {
     import graft.ops.SimilarityOps
     val dir = "/root/testdata/sf0.001"

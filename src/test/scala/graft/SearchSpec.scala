@@ -53,6 +53,25 @@ class SearchSpec extends AnyFunSuite {
     assert(names.nonEmpty)
   }
 
+  test("a two-pattern searchMany filters on glob_match below the tree aggregation") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
+    // a parquet scan, so the optimizer cannot fold the filter into local rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_search_plan").toString
+    tree.write.mode("overwrite").parquet(dir)
+    // patterns at two levels: the OR has no common level conjunct to factor out
+    val plan = MetricSearchOps.searchMany(spark.read.parquet(dir), Seq("five_sec.int_874?.x1", "one_min.*"))
+      .queryExecution.optimizedPlan
+    def globFilter(p: LogicalPlan): Boolean = p match {
+      case f: Filter => f.condition.exists(_.isInstanceOf[graft.functions.GlobMatchExpression])
+      case _ => false
+    }
+    val aggs = plan.collect { case a: Aggregate => a }
+    assert(aggs.size == 1, plan.toString)
+    assert(aggs.head.exists(globFilter), s"glob_match is not below the Aggregate:\n$plan")
+    assert(!plan.exists(p => globFilter(p) && p.exists(_.isInstanceOf[Aggregate])),
+      s"glob_match is still above the Aggregate:\n$plan")
+  }
+
   test("setStatus honors the restricted transition graph") {
     val updates = MetricSearchOps.setStatus(tree, "five_sec.int_874?.x1", MetricStatus.AutoHidden, 10L)
     val got = updates.select("name", "status").as[(String, String)].collect().toMap

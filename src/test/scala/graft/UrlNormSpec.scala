@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native URL normalization walk (`UrlNormExprs.urlNormHost`) vs
-  * the regex chain it replaces (`UrlOps.urlNormalizeRegex`) — BOTH run
+  * the regex chain it replaces (`RegexChains.urlNormalizeRegex`) — BOTH run
   * through Spark over one batch of adversarial URLs covering every
   * hostile dimension of the fixtures and the RFC edge cases: case,
   * userinfo with multiple '@', default and non-default ports, ports
@@ -62,7 +62,7 @@ class UrlNormSpec extends AnyFunSuite {
     for (kill <- Seq(Nil, Seq("sid", "ref"))) {
       val a = UrlOps.urlNormalize(df, extraKill = kill)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val b = UrlOps.urlNormalizeRegex(df, extraKill = kill)
+      val b = RegexChains.urlNormalizeRegex(df, extraKill = kill)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(a == b, s"extraKill=$kill:\n" +
         a.zip(b).filter(p => p._1 != p._2).map(p => s"native=${p._1}\n regex=${p._2}")
@@ -95,9 +95,9 @@ class UrlNormSpec extends AnyFunSuite {
         UrlOps.hostOf(col("base")).as("hb"),
         UrlOps.hostOf(UrlOps.resolveRef(col("base"), col("ref"))).as("hl"))
       .orderBy("rid").collect().map(_.toSeq).toSeq
-    val b = df.select(col("rid"), UrlOps.resolveRefRegex(col("base"), col("ref")).as("l"),
-        UrlOps.hostOfRegex(col("base")).as("hb"),
-        UrlOps.hostOfRegex(UrlOps.resolveRefRegex(col("base"), col("ref"))).as("hl"))
+    val b = df.select(col("rid"), RegexChains.resolveRefRegex(col("base"), col("ref")).as("l"),
+        RegexChains.hostOfRegex(col("base")).as("hb"),
+        RegexChains.hostOfRegex(RegexChains.resolveRefRegex(col("base"), col("ref"))).as("hl"))
       .orderBy("rid").collect().map(_.toSeq).toSeq
     assert(a == b, a.zip(b).filter(p => p._1 != p._2).take(5)
       .map(p => s"native=${p._1}\n regex=${p._2}").mkString("\n"))
@@ -112,7 +112,7 @@ class UrlNormSpec extends AnyFunSuite {
     val kill = Seq("sid")
     val a = UrlOps.urlNormalize(fx, extraKill = kill)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = UrlOps.urlNormalizeRegex(fx, extraKill = kill)
+    val b = RegexChains.urlNormalizeRegex(fx, extraKill = kill)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(a == b)
   }
