@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.model.MetricStatus
+import graft.model.{MetricPoint, MetricStatus, TreeNode}
 import graft.query.{MetricQuery, QueryParams}
 import graft.retention.{Retention, RetentionResolver, RetentionRule}
 import graft.search.MetricSearchOps
@@ -39,9 +39,11 @@ final class Graft(
   // glob_match SQL function + sargable-glob optimizer rule (P2 range reads)
   graft.plans.GraftExtensions.enable(spark)
 
-  /** Raw append-only tables. */
-  def data: DataFrame = spark.read.parquet(dataPath)
-  def tree: DataFrame = spark.read.parquet(treePath)
+  /** Raw append-only tables, read with the model's schema (no
+    * schema-inference job per read).
+    */
+  def data: DataFrame = spark.read.schema(MetricPoint.tableSchema).parquet(dataPath)
+  def tree: DataFrame = spark.read.schema(TreeNode.tableSchema).parquet(treePath)
 
   /** Current logical tree state (latest status per name). */
   def currentTree: DataFrame = MetricSearchOps.currentTree(tree)
@@ -131,11 +133,17 @@ final class Graft(
     * `data/MetricDataService.java:49-51,86-98`), pad unmatched names
     * with all-null series. Returns `Dataset[Series]`-shaped rows
     * (metric, start, end, step, points).
+    *
+    * Spark jobs per request: one collect for the expansion
+    * ([[MetricSearchOps.currentStatus]]), one per function group for the
+    * map stage of that group's one shuffle in [[MetricQuery.metricData]]
+    * (which also carries the padding), and one for the result: 3 for a
+    * single group. Both tables are read with the model's schema, so no
+    * read infers one.
     */
   def metricData(patterns: Seq[String], startSeconds: Int, endSeconds: Int,
                  maxPointsPerMetric: Int = -1,
                  nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame = {
-    import spark.implicits._
     // request cap BEFORE any expansion or scan — one fat dashboard
     // request must not fan an unbounded IN-list into the data scan
     // (reference refuses with 413, MetricDataServiceServlet.java:58-64)
@@ -143,16 +151,16 @@ final class Graft(
       throw new TooManyMetricsException(patterns.size, maxMetricsPerQuery)
     val distinctPatterns = patterns.distinct
     val exactNames = distinctPatterns.filterNot(graft.names.Glob.hasWildcards)
-    // ONE search pass serves both glob expansion and the exact-name
+    // ONE tree lookup serves both glob expansion and the exact-name
     // visibility gate (an exact name is a literal glob): a banned/
     // hidden/unknown metric is not readable by naming it directly — it
     // keeps its all-null series (reference resolves every requested
-    // name through the tree, J4 pads the rest). Previously this was two
-    // sequential currentTree aggregations per request.
+    // name through the tree, J4 pads the rest)
     val matchedVisible: Seq[String] =
       if (distinctPatterns.isEmpty) Seq.empty
-      else MetricSearchOps.searchMany(tree, distinctPatterns)
-        .select("name").as[String].collect().filterNot(_.endsWith(".")).toSeq
+      else MetricSearchOps.currentStatus(tree, MetricSearchOps.matchesAny(distinctPatterns))
+        .collect { case (n, (_, st)) if MetricSearchOps.visibleStatus(st) && !n.endsWith(".") => n }
+        .toSeq.sorted
     val readable = matchedVisible.toSet
     val requested = (matchedVisible ++ exactNames).distinct
     val ageSeconds = (nowSeconds - startSeconds).toInt

@@ -186,9 +186,15 @@ case class Bank6ArrayExpression(child: Expression) extends UnaryExpression {
   * evaluated interpreted per row — q245 4.2 s → 147 s. One opaque
   * native expression is immune to alias substitution by construction
   * and does the entire bank → project → subtract walk in ~3n flops.
+  *
+  * `m6`/`v6` are `Seq`s so that two expressions over equal arrays are
+  * equal (and `semanticEquals`), which lets Catalyst dedupe them; the
+  * walk reads them as arrays.
   */
-case class AbttTransformExpression(child: Expression, m6: Array[Long], v6: Array[Long],
+case class AbttTransformExpression(child: Expression, m6: Seq[Long], v6: Seq[Long],
                                    banked: Boolean) extends UnaryExpression {
+  @transient private lazy val m6Arr: Array[Long] = m6.toArray
+  @transient private lazy val v6Arr: Array[Long] = v6.toArray
 
   private def elemType(dt: DataType): Option[DataType] = dt match {
     case ArrayType(FloatType, _)  => Some(FloatType)
@@ -208,12 +214,12 @@ case class AbttTransformExpression(child: Expression, m6: Array[Long], v6: Array
   private def isFloat: Boolean = elemType(child.dataType).contains(FloatType)
 
   override def nullSafeEval(input: Any): Any =
-    AbttCompute.abttY(input.asInstanceOf[ArrayData], isFloat, m6, v6, banked)
+    AbttCompute.abttY(input.asInstanceOf[ArrayData], isFloat, m6Arr, v6Arr, banked)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val helper = AbttCompute.getClass.getName + ".MODULE$"
-    val m6Ref = ctx.addReferenceObj("m6", m6, "long[]")
-    val v6Ref = ctx.addReferenceObj("v6", v6, "long[]")
+    val m6Ref = ctx.addReferenceObj("m6", m6Arr, "long[]")
+    val v6Ref = ctx.addReferenceObj("v6", v6Arr, "long[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""
          |${ev.value} = $helper.abttY($c, $isFloat, $m6Ref, $v6Ref, $banked);
@@ -234,9 +240,9 @@ object AbttExprs {
 
   /** Codegen'd all-but-the-top transform → array<double> (6dp values). */
   def abttY(vec: Column, m6: Array[Long], v6: Array[Long]): Column =
-    Bridge.column(AbttTransformExpression(Bridge.expression(vec), m6, v6, banked = false))
+    Bridge.column(AbttTransformExpression(Bridge.expression(vec), m6.toSeq, v6.toSeq, banked = false))
 
   /** Codegen'd all-but-the-top transform → array<bigint> (re-banked 6dp). */
   def abttB6(vec: Column, m6: Array[Long], v6: Array[Long]): Column =
-    Bridge.column(AbttTransformExpression(Bridge.expression(vec), m6, v6, banked = true))
+    Bridge.column(AbttTransformExpression(Bridge.expression(vec), m6.toSeq, v6.toSeq, banked = true))
 }

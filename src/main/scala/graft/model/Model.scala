@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
+
 /** Core data model (SURVEY.md §1.1).
   *
   * A metric point is one time-series sample; the `updated` column is the
@@ -16,6 +19,18 @@ final case class MetricPoint(
     updated: Int
 )
 
+object MetricPoint {
+  /** The data table's read schema: the fields of [[MetricPoint]] in the
+    * order the writers put them on disk, with the `date` partition
+    * column last, where a partitioned parquet read places it. Reading
+    * with it skips parquet's schema-inference job.
+    */
+  val tableSchema: StructType = {
+    val fields = Encoders.product[MetricPoint].schema
+    StructType(fields.filterNot(_.name == "date") :+ fields("date"))
+  }
+}
+
 /** One node of the metric-name tree (reference `doc/install.md:158-170`).
   * Directory names carry a trailing dot ("a.b."); `parent` is "" for roots.
   * `updated` is epoch seconds; latest status per `name` wins.
@@ -27,6 +42,11 @@ final case class TreeNode(
     status: String,
     updated: Long
 )
+
+object TreeNode {
+  /** The tree table's read schema, the fields of [[TreeNode]]. */
+  val tableSchema: StructType = Encoders.product[TreeNode].schema
+}
 
 /** Dense gap-filled output series (reference
   * `data/MetricDataRowCallbackHandler.java:96-105`): exactly

@@ -91,15 +91,6 @@ object MetricQuery {
       .agg(aggFor(fn, col(valueCol), versioned).as(valueCol))
   }
 
-  /** W3/W4 — gap fill to the dense per-metric grid (reference
-    * `data/MetricDataRowCallbackHandler.java:37-105`): exactly
-    * `(end-start)/step` points per metric; missing buckets and non-finite
-    * values become null. Implemented as one aggregation + a `transform`
-    * over `sequence` — no join, no explode, no driver loop.
-    *
-    * Input: (metric, ts, value) with ts already bucket-aligned.
-    * Output: (metric, start, end, step, points: array<double> with nulls).
-    */
   /** Dense grid of bucket labels for `params` — empty (not an error)
     * when the range holds no points: `sequence(start, end-step)` with a
     * positive step throws on a degenerate start >= end request.
@@ -109,6 +100,22 @@ object MetricQuery {
     else sequence(lit(params.startSeconds), lit(params.endSeconds - params.stepSeconds),
       lit(params.stepSeconds))
 
+  /** W3/W4 — gap fill to the dense per-metric grid (reference
+    * `data/MetricDataRowCallbackHandler.java:37-105`): exactly
+    * `(end-start)/step` points per metric; missing buckets and non-finite
+    * values become null. Implemented as one aggregation + a `transform`
+    * over `sequence` — no join, no explode, no driver loop.
+    *
+    * J4 — a row with a null `ts` says "this metric is present and has
+    * no point": it gives its metric a series (all-null if nothing else
+    * lands on the grid) and adds no point, whatever its value. This is
+    * how [[metricData]] pads requested metrics that have no data
+    * (reference `MetricDataRowCallbackHandler.java:55-69`) inside its
+    * one shuffle.
+    *
+    * Input: (metric, ts, value) with ts already bucket-aligned or null.
+    * Output: (metric, start, end, step, points: array<double> with nulls).
+    */
   def gapFillSeries(df: DataFrame, params: QueryParams,
                     metricCol: String = "metric", tsCol: String = "ts",
                     valueCol: String = "value"): DataFrame = {
@@ -116,9 +123,12 @@ object MetricQuery {
       isnan(col(valueCol)) || col(valueCol) === Double.PositiveInfinity ||
         col(valueCol) === Double.NegativeInfinity, lit(null).cast("double")
     ).otherwise(col(valueCol))
-    df.filter(col(tsCol) >= params.startSeconds && col(tsCol) < params.endSeconds)
+    val ts = col(tsCol)
+    // collect_list skips the null entry a padding row makes
+    df.filter(ts.isNull || (ts >= params.startSeconds && ts < params.endSeconds))
       .groupBy(col(metricCol).as("metric"))
-      .agg(map_from_entries(collect_list(struct(col(tsCol).cast("int"), cleanValue))).as("m"))
+      .agg(map_from_entries(collect_list(when(ts.isNotNull, struct(ts.cast("int"), cleanValue))))
+        .as("m"))
       .select(
         col("metric"),
         lit(params.startSeconds).as("start"),
@@ -126,23 +136,6 @@ object MetricQuery {
         lit(params.stepSeconds).as("step"),
         transform(gridCol(params), t => element_at(col("m"), t)).as("points")
       )
-  }
-
-  /** J4 — requested metrics that produced zero rows still emit an all-null
-    * series (reference `MetricDataRowCallbackHandler.java:55-69`).
-    * `requested` must have a `metric` column.
-    */
-  def withEmptySeries(series: DataFrame, requested: DataFrame, params: QueryParams): DataFrame = {
-    val nulls = requested.select(col("metric")).distinct()
-      .join(series.select("metric"), Seq("metric"), "left_anti")
-      .select(
-        col("metric"),
-        lit(params.startSeconds).as("start"),
-        lit(params.endSeconds).as("end"),
-        lit(params.stepSeconds).as("step"),
-        transform(gridCol(params), _ => lit(null).cast("double")).as("points")
-      )
-    series.unionByName(nulls)
   }
 
   /** The full read path (SURVEY.md §3.1, steps 3-5): predicates (F1/F2) →
@@ -153,6 +146,12 @@ object MetricQuery {
     * requested names must NOT touch the data (invisible/banned metrics
     * get the all-null series the reference emits for them) — the data
     * scan filters on `metrics` only.
+    *
+    * Padding costs no branch of its own: each requested name joins the
+    * filtered scan as one null-timestamp row before the one shuffle, so
+    * dedup and rollup keep it in a (metric, null) group of its own and
+    * [[gapFillSeries]] turns it into the metric's all-null series when
+    * the metric has no point on the grid.
     */
   def metricData(data: DataFrame, metrics: Seq[String], fn: String, params: QueryParams,
                  requested: Seq[String] = Seq.empty): DataFrame = {
@@ -164,18 +163,21 @@ object MetricQuery {
     // it a 3-hour read still lists every date= partition of the history
     val dateLo = to_date(from_unixtime(lit(p.startSeconds.toLong)))
     val dateHi = to_date(from_unixtime(lit(p.endSeconds.toLong)))
-    val filtered = data
+    val points = data
       .filter(col("metric").isin(metrics: _*))
       .filter(col("timestamp") >= p.startSeconds && col("timestamp") < p.endSeconds)
       .filter(col("date").between(dateLo, dateHi))
-      // one shuffle for the whole chain: HashPartitioning(metric)
-      // satisfies the dedup, rollup and gap-fill groupings below, which
-      // would otherwise shuffle one after another
-      .repartition(col("metric"))
+      .select("metric", "timestamp", "value", "updated")
+    val spark = data.sparkSession
+    import spark.implicits._
+    val padding = padNames.distinct.toDF("metric").select(col("metric") +:
+      points.schema.tail.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    // one shuffle for the whole chain: HashPartitioning(metric)
+    // satisfies the dedup, rollup and gap-fill groupings below, which
+    // would otherwise shuffle one after another
+    val filtered = points.unionByName(padding).repartition(col("metric"))
     val rolled = rollup(dedupLatest(filtered, Seq("metric", "timestamp"), "value", "updated"),
       fn, p.stepSeconds)
-    val series = gapFillSeries(rolled, p)
-    import series.sparkSession.implicits._
-    withEmptySeries(series, padNames.toDF("metric"), p)
+    gapFillSeries(rolled, p)
   }
 }

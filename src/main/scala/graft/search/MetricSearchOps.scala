@@ -42,21 +42,43 @@ object MetricSearchOps {
   def search(tree: DataFrame, query: String): DataFrame =
     searchMany(tree, Seq(query))
 
-  /** Multi-pattern search in ONE pass over the current tree: the
-    * per-pattern (level && glob) predicates OR together, so N dashboard
-    * patterns cost one tree aggregation, not N sequential jobs.
+  /** The tree rows any of `queries` matches: the per-pattern (level &&
+    * glob) predicates ORed together. A function of the name alone, so it
+    * selects whole version histories and pushes below [[currentTree]].
     */
-  def searchMany(tree: DataFrame, queries: Seq[String]): DataFrame = {
+  def matchesAny(queries: Seq[String]): Column =
     // native codegen'd predicate (graft.functions.GlobMatchExpression);
-    // invalid globs fold to constant false → empty result
-    val perPattern: Seq[Column] = queries.map { q =>
-      col("level") === graft.names.MetricNames.level(q) &&
-        graft.functions.functions.glob_match(col("name"), q)
-    }
-    val matchAny = perPattern.reduceOption(_ || _).getOrElse(lit(false))
+    // invalid globs fold to constant false → no rows
+    queries.map { q =>
+      col("level") === MetricNames.level(q) && graft.functions.functions.glob_match(col("name"), q)
+    }.reduceOption(_ || _).getOrElse(lit(false))
+
+  /** Multi-pattern search in ONE pass over the current tree, so N
+    * dashboard patterns cost one tree aggregation, not N sequential jobs.
+    */
+  def searchMany(tree: DataFrame, queries: Seq[String]): DataFrame =
     currentTree(tree)
-      .filter(visibleCol(col("status")) && matchAny)
+      .filter(visibleCol(col("status")) && matchesAny(queries))
       .select("name", "status")
+
+  /** [[currentTree]] on the driver, for the names `rows` selects: the
+    * latest (parent, status) per name. The raw rows are collected and the
+    * latest version kept per name, so a lookup is one Spark job with no
+    * shuffle. `rows` must be a predicate on name, level or parent (all
+    * functions of the name), so it keeps or drops a name's whole version
+    * history; driver memory is bounded by the rows it keeps. On an
+    * `updated` tie the row read last wins, which is how [[currentTree]]'s
+    * `max_by` resolves a tie between two tree files (a batch's SIMPLE
+    * row and a `setStatus` row stamped in the same second).
+    */
+  def currentStatus(tree: DataFrame, rows: Column): Map[String, (String, String)] = {
+    import tree.sparkSession.implicits._
+    tree.filter(rows).select("name", "parent", "status", "updated")
+      .as[(String, String, String, Long)].collect()
+      .groupBy(_._1).map { case (name, versions) =>
+        val (_, parent, status, _) = versions.reduce((a, b) => if (b._4 >= a._4) b else a)
+        name -> (parent, status)
+      }
   }
 
   /** Children per (parent dir, kind) over the current tree. Counts ALL

@@ -27,13 +27,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   (reference T3, `server/BaseMetricFactory.java:70-73`).
   * - The tree upsert is one lookup plus driver decisions: the batch's
   *   distinct names and their ancestor dirs are looked up in the tree
-  *   in one filtered `max_by(status, updated)` aggregate, and the ban
+  *   in one filtered collect of their raw rows (latest status kept per
+  *   name on the driver, `MetricSearchOps.currentStatus`), and the ban
   *   gate, the new nodes, the per-dir caps and the AUTO_HIDDEN revivals
   *   are decided on the driver (the reference's in-memory `MetricTree`
-  *   check). Driver memory is bounded by the batch's distinct names plus
-  *   their ancestors, never by the tree; with caps on, the same lookup
-  *   also returns the existing children of the batch's dirs and of the
-  *   root, so the bound grows by those children. Status semantics stay
+  *   check). Driver memory is bounded by the tree rows (every status
+  *   version) of the batch's distinct names plus their ancestors, never
+  *   by the tree; with caps on, the same lookup also returns the rows of
+  *   the existing children of the batch's dirs and of the root, so the
+  *   bound grows by those children. Status semantics stay
   *   read-side.
   */
 final class IngestPipeline(
@@ -120,21 +122,14 @@ final class IngestPipeline(
     * Explicit existence check, NOT a catch-all: a transient read error
     * (corrupt file, FS hiccup) must fail the batch so streaming retry
     * semantics stay visible, instead of silently re-appending the whole
-    * tree every batch.
+    * tree every batch. Read with the model's schema, a dir that holds no
+    * committed parquet (a crash mid-first-write left only `_temporary`)
+    * is an empty table: a first batch.
     */
   private def readTree(spark: SparkSession): Option[DataFrame] = {
     val treeP = new org.apache.hadoop.fs.Path(treePath)
     if (!treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)) None
-    else
-      try Some(spark.read.parquet(treePath))
-      catch {
-        // dir exists but holds no committed parquet (crash mid-first-
-        // write left only _temporary/_SUCCESS): a PERMANENT state the
-        // retry loop can never clear — treat as first batch. Other
-        // read errors still fail the batch (retry stays visible).
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("Unable to infer schema") => None
-      }
+    else Some(spark.read.schema(TreeNode.tableSchema).parquet(treePath))
   }
 
   /** One micro-batch: drop banned metrics, append points, upsert new
@@ -170,12 +165,10 @@ final class IngestPipeline(
         if (limits.enabled) col("name").isin(lookup: _*) ||
           col("parent").isin("" +: lookup.filter(MetricNames.isDir): _*)
         else col("name").isin(lookup: _*)
-      // (name, parent, status) rows of the current tree
-      val current: Seq[(String, String, String)] = readTree(spark).toSeq.flatMap { t =>
-        MetricSearchOps.currentTree(t.filter(wanted)).select("name", "parent", "status")
-          .as[(String, String, String)].collect()
-      }
-      val status: Map[String, String] = current.map { case (n, _, st) => n -> st }.toMap
+      // name → (parent, status) in the current tree
+      val current: Map[String, (String, String)] =
+        readTree(spark).fold(Map.empty[String, (String, String)])(MetricSearchOps.currentStatus(_, wanted))
+      val status: Map[String, String] = current.map { case (n, (_, st)) => n -> st }
       // the reference ban gate rejects a metric when ANY dir on its path
       // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
       // new children too, not just exact names
@@ -185,7 +178,7 @@ final class IngestPipeline(
       val fresh = nodes.filterNot(status.contains)
       val refused =
         if (limits.enabled && fresh.nonEmpty)
-          refusedByLimits(current.groupBy { case (n, p, _) => (p, MetricNames.isDir(n)) }
+          refusedByLimits(current.groupBy { case (n, (p, _)) => (p, MetricNames.isDir(n)) }
             .map { case (key, children) => key -> children.size }, fresh)
         else Set.empty[String]
       // points of refused metrics are dropped like the reference's

@@ -147,9 +147,29 @@ class AbttExprsSpec extends AnyFunSuite {
     val df = Seq(vec.toSeq).toDF("v")
     val viaDf = df.select(AbttExprs.abttY($"v", m6, v6)).as[Seq[Double]].collect().head
     val litChild = Literal.create(vec, ArrayType(FloatType, containsNull = true))
-    val expr = graft.functions.AbttTransformExpression(litChild, m6, v6, banked = false)
+    val expr = graft.functions.AbttTransformExpression(litChild, m6.toSeq, v6.toSeq, banked = false)
     val evald = expr.eval(InternalRow.empty)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray().toSeq
     assert(bits(viaDf.map(java.lang.Double.valueOf)) == bits(evald.map(java.lang.Double.valueOf)))
+  }
+
+  test("abtt expressions over equal arrays are semanticEquals") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val vec = Literal.create(Array(0.5f, -0.25f), ArrayType(FloatType, containsNull = true))
+    def expr(m: Array[Long], banked: Boolean) =
+      graft.functions.AbttTransformExpression(vec, m.toSeq, v6.clone().toSeq, banked)
+    // separate array instances with the same contents
+    val a = expr(m6.clone(), banked = false)
+    val b = expr(m6.clone(), banked = false)
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(expr(m6.clone(), banked = true)))
+    assert(!a.semanticEquals(expr(m6.map(_ + 1), banked = false)))
+    // the same holds through the Column API
+    val x = AbttExprs.abttY($"v", m6.clone(), v6.clone())
+    val y = AbttExprs.abttY($"v", m6.clone(), v6.clone())
+    val plan = Seq(Seq(0.5f, -0.25f)).toDF("v").select(x.as("x"), y.as("y")).queryExecution.analyzed
+    val Seq(ex, ey) = plan.expressions.map(_.children.head)
+    assert(ex.semanticEquals(ey))
   }
 }

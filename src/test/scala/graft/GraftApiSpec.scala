@@ -97,6 +97,34 @@ class GraftApiSpec extends AnyFunSuite {
     assert(refusal.getMessage == "Too many metrics in query. Provided 3, max 2")
   }
 
+  test("a metricData request runs a pinned number of Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_jobs").toString
+    val pipe = new graft.streaming.IngestPipeline(dataPath = s"$dir/data", treePath = s"$dir/tree")
+    pipe.processBatch(pipe.parseBatch(Seq(
+      "one_min.app.host1.requests 10.0 1700000000", "one_min.app.host1.requests 20.0 1700000060",
+      "one_min.app.host1.cpu 1.5 1700000000", "one_min.app.host2.cpu 2.5 1700000120",
+      "one_min.app.host2.requests 7.0 1700000000").toDS(), 1700000000), 0L)
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    g.setStatus("one_min.app.host2.requests", MetricStatus.Ban, nowSeconds = 2000000000L)
+    // an exact name, a glob, a banned name and an unknown name, all in
+    // one retention group
+    val patterns = Seq("one_min.app.host1.requests", "one_min.app.*.cpu",
+      "one_min.app.host2.requests", "one_min.app.host9.requests")
+    val probe = new Dev.Probe(spark.sparkContext)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val m = try probe.measure {
+      rows = g.metricData(patterns, 1700000000, 1700000180, nowSeconds = 1700000200).collect()
+    } finally probe.close()
+    // one expansion collect, then the one shuffle's map and result stages
+    assert(m.jobs === 3L, m.toString)
+    assert(rows.map(r => r.getAs[String]("metric") -> r.getAs[scala.collection.Seq[Any]]("points")).toMap === Map(
+      "one_min.app.host1.requests" -> Seq(10.0, 20.0, null),
+      "one_min.app.host1.cpu" -> Seq(1.5, null, null),
+      "one_min.app.host2.cpu" -> Seq(null, null, 2.5),
+      "one_min.app.host2.requests" -> Seq(null, null, null),
+      "one_min.app.host9.requests" -> Seq(null, null, null)))
+  }
+
   test("back-dated setStatus forces the serving cache into a full rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("graft_backdate").toString
     // tree with a STALE metric (a.x, updated=1000) and a FRESH one

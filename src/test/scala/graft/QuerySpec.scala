@@ -94,11 +94,10 @@ class QuerySpec extends AnyFunSuite {
       case p => p
     }
     val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-    // one repartition per scan of the data (the series, and the padding's
-    // anti-join side) plus the padding's distinct: the series chain's
-    // three groupings add none
-    assert(shuffles.size === 3, s"\n$plan")
-    assert(shuffles.count(_.shuffleOrigin == REPARTITION_BY_COL) === 2, s"\n$plan")
+    // the one repartition on metric: the padding rows ride in it, and
+    // the chain's three groupings add none
+    assert(shuffles.size === 1, s"\n$plan")
+    assert(shuffles.count(_.shuffleOrigin == REPARTITION_BY_COL) === 1, s"\n$plan")
     assert(frame.collect().length === 2)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.model.MetricStatus
 import graft.search.MetricSearchOps
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tree search + status workflow over the append-only tree table
@@ -70,6 +71,24 @@ class SearchSpec extends AnyFunSuite {
     assert(aggs.head.exists(globFilter), s"glob_match is not below the Aggregate:\n$plan")
     assert(!plan.exists(p => globFilter(p) && p.exists(_.isInstanceOf[Aggregate])),
       s"glob_match is still above the Aggregate:\n$plan")
+  }
+
+  test("currentStatus equals currentTree, updated ties included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_current_status").toString + "/tree"
+    // a batch's SIMPLE rows, then a status file: BAN in the same second
+    // (a tie), APPROVED a second later, HIDDEN older than the batch
+    (0 until 3000).map(i => (s"a.m$i", 2, "a.", "SIMPLE", 100L)).toDF("name", "level", "parent", "status", "updated")
+      .coalesce(1).write.parquet(dir)
+    ((0 until 16).map(i => (s"a.m$i", 2, "a.", "BAN", 100L)) ++
+      Seq(("a.m20", 2, "a.", "APPROVED", 101L), ("a.m30", 2, "a.", "HIDDEN", 50L)))
+      .toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(dir)
+    val t = spark.read.parquet(dir)
+    val rows = col("name").isin((0 until 40).map(i => s"a.m$i"): _*)
+    val want = MetricSearchOps.currentTree(t).filter(rows).select("name", "parent", "status")
+      .as[(String, String, String)].collect().map { case (n, p, st) => n -> ((p, st)) }.toMap
+    val got = MetricSearchOps.currentStatus(t, rows)
+    assert(got === want)
+    assert(got("a.m0") === (("a.", "BAN")) && got("a.m20")._2 === "APPROVED" && got("a.m30")._2 === "SIMPLE")
   }
 
   test("setStatus honors the restricted transition graph") {
