@@ -66,6 +66,19 @@ def dtype_kinds(df):
     return out
 
 
+def fetch(con, sql):
+    """Runs `sql` once and returns its lower-cased column names, its
+    pandas frame and its canonical rows. The result is kept in a table
+    with the query's own column types, and both reads come from it, so
+    the query is not executed a second time for the rows."""
+    rel = con.sql(sql)
+    cols = [c.lower() for c in rel.columns]
+    con.execute("DROP TABLE IF EXISTS fetched")
+    rel.to_table("fetched")
+    res = con.table("fetched")
+    return cols, res.df(), canon_rows(cols, res.fetchall())
+
+
 def main():
     t0 = time.monotonic()
     con = duckdb.connect()
@@ -79,17 +92,11 @@ def main():
             print(f"MISSING  {name}: no Spark result dump")
             fail += 1
             continue
-        spark_rel = con.sql(f"SELECT * FROM read_parquet('{res_dir}/*.parquet')")
-        s_cols = [c.lower() for c in spark_rel.columns]
-        s_df = spark_rel.df()
+        s_cols, s_df, s_rows = fetch(con, f"SELECT * FROM read_parquet('{res_dir}/*.parquet')")
         s_kinds = dtype_kinds(s_df)
-        s_rows = canon_rows(s_cols, spark_rel.fetchall())
         try:
-            duck_rel = con.sql(sql)
-            d_cols = [c.lower() for c in duck_rel.columns]
-            d_df = duck_rel.df()
+            d_cols, d_df, d_rows = fetch(con, sql)
             d_kinds = dtype_kinds(d_df)
-            d_rows = canon_rows(d_cols, duck_rel.fetchall())
         except Exception as e:
             print(f"SQLERR   {name}: {e}")
             fail += 1

@@ -1,9 +1,10 @@
 package graft.api
 
 import graft.model.{MetricPoint, MetricStatus, TreeNode}
+import graft.names.MetricNames
 import graft.query.{MetricQuery, QueryParams}
 import graft.retention.{Retention, RetentionResolver, RetentionRule}
-import graft.search.MetricSearchOps
+import graft.search.{MetricSearchOps, MetricTrie}
 import graft.streaming.IngestPipeline
 import graft.jobs.Compaction
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -54,78 +55,36 @@ final class Graft(
   def search(query: String): DataFrame =
     MetricSearchOps.searchWithLimits(tree, query, treeLimits)
 
-  /** Optional serving cache: a driver-side trie snapshot of the current
-    * tree (the reference's in-memory `MetricTree`). `searchCached`
-    * answers globs without a Spark job; staleness is bounded by how
-    * often the caller refreshes. Thread-safe via snapshot swap.
+  /** The serving snapshot: a driver-side trie of the current tree (the
+    * reference's in-memory `MetricTree`), keyed by the tree table's
+    * committed files, so it is exact as of its last refresh
+    * ([[MetricTrie.refresh]]). None until first built.
     */
-  @volatile private var trieCache: Option[graft.search.MetricTrie] = None
+  @volatile private var trie: Option[MetricTrie] = None
 
-  /** Oldest `updated` stamped by a [[setStatus]] write since the trie
-    * last synced (MaxValue = none pending). A write back-dated beyond
-    * the delta overlap would be invisible to an incremental refresh
-    * forever; tracking the minimum lets [[refreshSearchCache]] detect
-    * that and fall back to a full rebuild on its own. All access is
-    * under [[pendingLock]]: min-recording is a read-modify-write, and a
-    * refresh must CLAIM the pending value atomically before it scans —
-    * a concurrent setStatus then records for the NEXT refresh instead
-    * of being wiped by this one's reset.
+  /** Refreshes the snapshot and returns it. Refreshes are serialized, and
+    * a caller reads the instance it got back, never one another thread
+    * swaps in later.
     */
-  private var minPendingUpdated: Long = Long.MaxValue
-  private val pendingLock = new Object
-
-  private def recordPending(nowSeconds: Long): Unit = pendingLock.synchronized {
-    minPendingUpdated = math.min(minPendingUpdated, nowSeconds)
+  private def refreshedTrie(): MetricTrie = synchronized {
+    val t = trie.getOrElse(MetricTrie.empty).refresh(spark, treePath)
+    trie = Some(t)
+    t
   }
 
-  /** Atomically take-and-reset the pending minimum (claimed BEFORE the
-    * refresh reads the tree, so writes landing mid-refresh stay pending).
+  /** Brings the serving snapshot up to the tree table's committed files:
+    * no Spark job when no tree file is new, one collect of the new
+    * files' rows otherwise. Writes from other processes and back-dated
+    * [[setStatus]] stamps are seen like any other write.
     */
-  private def claimPending(): Long = pendingLock.synchronized {
-    val p = minPendingUpdated; minPendingUpdated = Long.MaxValue; p
-  }
+  def refreshSearchCache(): Unit = refreshedTrie()
 
-  private val trieOverlapSeconds = 120L
-
-  /** (Re)build or incrementally refresh the trie snapshot: the first
-    * call builds from the full tree; later calls swap in a path-copied
-    * trie with only rows since the watermark folded in
-    * (`MetricTrie.withDelta` — a refresh costs rows-written-since, not
-    * tree size, so a tight cadence is cheap). If a [[setStatus]] since
-    * the last sync was back-dated beyond the delta overlap (an explicit
-    * old `nowSeconds`), the incremental scan could never see it, so
-    * this falls back to a full rebuild automatically. Writes from
-    * OTHER processes can't be observed here — a deployment with
-    * external back-dating writers must call [[rebuildSearchCache]] on
-    * its own cadence. Always a snapshot swap: concurrent readers keep
-    * a consistent instance throughout.
+  /** Trie-served glob search: no Spark job, same results as [[search]]
+    * as of the last [[refreshSearchCache]] (or of the first call, which
+    * builds the snapshot).
     */
-  def refreshSearchCache(): Unit = {
-    val pending = claimPending()
-    try trieCache match {
-      case Some(t) if pending >= t.deltaWatermark - trieOverlapSeconds =>
-        trieCache = Some(t.withDelta(tree, trieOverlapSeconds))
-      case _ =>
-        trieCache = Some(graft.search.MetricTrie.fromTree(tree))
-    } catch {
-      case e: Throwable => recordPending(pending); throw e // refresh failed: stay pending
-    }
-  }
-
-  /** Full rebuild-and-swap (point-in-time-consistent snapshot). */
-  def rebuildSearchCache(): Unit = {
-    val pending = claimPending()
-    try trieCache = Some(graft.search.MetricTrie.fromTree(tree))
-    catch { case e: Throwable => recordPending(pending); throw e }
-  }
-
-  /** Trie-served glob search (builds the snapshot on first use). Same
-    * results as [[search]] as of the last refresh.
-    */
-  def searchCached(query: String): Seq[(String, String)] = {
-    if (trieCache.isEmpty) refreshSearchCache()
-    trieCache.get.searchWithLimits(query, treeLimits)
-  }
+  def searchCached(query: String): Seq[(String, String)] =
+    trie.getOrElse(refreshedTrie()).searchWithLimits(query, treeLimits)
 
   /** §3.1 — the full read path: expand patterns, group matched metrics
     * by retention function, run dedup→rollup→gapfill per group (the
@@ -134,12 +93,15 @@ final class Graft(
     * with all-null series. Returns `Dataset[Series]`-shaped rows
     * (metric, start, end, step, points).
     *
-    * Spark jobs per request: one collect for the expansion
-    * ([[MetricSearchOps.currentStatus]]), one per function group for the
-    * map stage of that group's one shuffle in [[MetricQuery.metricData]]
-    * (which also carries the padding), and one for the result: 3 for a
-    * single group. Both tables are read with the model's schema, so no
-    * read infers one.
+    * The patterns expand against the serving snapshot, refreshed first
+    * ([[refreshSearchCache]]), so the expansion sees every committed tree
+    * write and runs a Spark job only when tree files are new. Spark jobs
+    * per request: one per function group for the map stage of that
+    * group's one shuffle in [[MetricQuery.metricData]] (which also
+    * carries the padding), and one for the result: 2 for a single group,
+    * plus one collect when the refresh has new tree files to fold in.
+    * The data table is read with the model's schema, so no read infers
+    * one.
     */
   def metricData(patterns: Seq[String], startSeconds: Int, endSeconds: Int,
                  maxPointsPerMetric: Int = -1,
@@ -151,16 +113,17 @@ final class Graft(
       throw new TooManyMetricsException(patterns.size, maxMetricsPerQuery)
     val distinctPatterns = patterns.distinct
     val exactNames = distinctPatterns.filterNot(graft.names.Glob.hasWildcards)
-    // ONE tree lookup serves both glob expansion and the exact-name
+    // ONE snapshot serves both glob expansion and the exact-name
     // visibility gate (an exact name is a literal glob): a banned/
     // hidden/unknown metric is not readable by naming it directly — it
     // keeps its all-null series (reference resolves every requested
     // name through the tree, J4 pads the rest)
     val matchedVisible: Seq[String] =
       if (distinctPatterns.isEmpty) Seq.empty
-      else MetricSearchOps.currentStatus(tree, MetricSearchOps.matchesAny(distinctPatterns))
-        .collect { case (n, (_, st)) if MetricSearchOps.visibleStatus(st) && !n.endsWith(".") => n }
-        .toSeq.sorted
+      else {
+        val snapshot = refreshedTrie()
+        distinctPatterns.flatMap(snapshot.search).map(_._1).filterNot(MetricNames.isDir).distinct.sorted
+      }
     val readable = matchedVisible.toSet
     val requested = (matchedVisible ++ exactNames).distinct
     val ageSeconds = (nowSeconds - startSeconds).toInt
@@ -192,18 +155,16 @@ final class Graft(
                  nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame =
     MetricSearchOps.setStatus(tree, pattern, status, nowSeconds)
 
-  /** NOTE: `updated` ties (same-second writes) resolve arbitrarily, like
-    * the reference's ReplacingMergeTree on equal versions — pass an
-    * explicit monotonic `nowSeconds` when ordering matters.
+  /** NOTE: on an `updated` tie (same-second writes) the serving
+    * snapshot, and so [[metricData]] and [[searchCached]], keeps the row
+    * of the later-written tree file; the Spark path ([[currentTree]],
+    * [[search]]) keeps the row its scan reads last, like the reference's
+    * ReplacingMergeTree on equal versions. Pass an explicit monotonic
+    * `nowSeconds` when ordering matters.
     */
   def setStatus(pattern: String, status: MetricStatus,
                 nowSeconds: Long = System.currentTimeMillis() / 1000): Unit = {
     statusRows(pattern, status, nowSeconds).write.mode("append").parquet(treePath)
-    // remember the oldest stamp so a back-dated write beyond the delta
-    // overlap forces refreshSearchCache into a full rebuild (recorded
-    // AFTER the write lands: a refresh scanning concurrently either saw
-    // the rows or will see this pending marker on its next cycle)
-    recordPending(nowSeconds)
   }
 
   /** §3.3 — streaming ingest of graphite plaintext lines. */

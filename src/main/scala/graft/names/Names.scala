@@ -119,10 +119,14 @@ object Glob {
     * (the reference exploits the same lexicographic-prefix property for
     * MergeTree range reads, `AutoHideService.java:131`).
     */
-  def literalPrefix(glob: String): String =
+  def literalPrefix(glob: String): String = {
     // '\' starts an escape (the NEXT char is literal, the backslash is
     // not): stop there too — a shorter prefix is still a sound bound
-    glob.takeWhile(c => !(c == '*' || c == '?' || c == '[' || c == '{' || c == '\\'))
+    val lit = glob.takeWhile(c => !(c == '*' || c == '?' || c == '[' || c == '{' || c == '\\'))
+    // a glob's trailing dots are optional ([[queryToRegex]] ends `\.?$`),
+    // so "a.cpu." also matches the metric "a.cpu"
+    if (lit.length == glob.length) lit.reverse.dropWhile(_ == '.').reverse else lit
+  }
 
   /** Regex for ONE level name (no dots inside). None if the glob is invalid. */
   def levelToRegex(glob: String): Option[String] = {

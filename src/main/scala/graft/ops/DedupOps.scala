@@ -153,17 +153,6 @@ object DedupOps {
   val MinHashP: Long = graft.functions.ShingleCodes.MinHashP
   def minHashCoeffs(i: Int): (Long, Long) = graft.functions.ShingleCodes.minHashCoeffs(i)
 
-  /** MinHash signature from a base-hash/code array: minimum of each
-    * universal-hash permutation. Composable form (interpreted
-    * higher-order functions) — the hot path uses the one-pass native
-    * [[graft.functions.ShingleExprs.minHashSig]] instead.
-    */
-  def minHashSignature(baseHashes: Column, numHashes: Int = 16): Column =
-    array((0 until numHashes).map { i =>
-      val (a, b) = minHashCoeffs(i)
-      array_min(transform(baseHashes, h => (h * a + b) % MinHashP))
-    }: _*)
-
   /** LSH band keys: the signature split into `bands` groups of `rowsPerBand`,
     * each hashed to one bucket key. Docs sharing ANY band key are candidates.
     */

@@ -248,20 +248,6 @@ object SimilarityOps {
   final case class KmeansState(k: Int, iters: Int,
                                centroids: Array[Array[Double]])
 
-  /** Train the shared Lloyd state once — the [[KmeansState]] scaladoc
-    * explains why consumers should share it. Same deterministic
-    * contract as [[kmeans]] (lowest-id init, 4dp-rounded means,
-    * lowest-cell tie-break), so every serving overload answers
-    * exactly as its self-training form does.
-    */
-  def kmeansTrain(emb: DataFrame, k: Int = 8, iters: Int = 3,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): KmeansState = {
-    val clean = DedupOps.widen(emb.filter(col(vecCol).isNotNull))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try KmeansState(k, iters, trainCentroids(clean, k, iters, idCol, vecCol))
-    finally clean.unpersist(blocking = false)
-  }
-
   /** Arg-min squared-L2 cell id for `vecCol` against the given centroids.
     * The centroids ride into the expression as a reference object (k×dims
     * doubles shipped with the task binary — no join, map-only work); ties

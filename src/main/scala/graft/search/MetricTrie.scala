@@ -4,31 +4,41 @@ import scala.collection.mutable
 
 import graft.model.TreeLimits
 import graft.names.{Glob, MetricNames}
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Driver-side in-memory trie over the current metric tree — the
   * serving-latency cache the reference keeps hot
   * (`/root/reference/src/main/java/ru/yandex/market/graphouse/search/tree/MetricTree.java:22-120`):
-  * dashboard autocomplete and render fan-out issue thousands of glob
-  * lookups per second, which should not each pay a Spark job.
+  * dashboard autocomplete, render fan-out and `/metricData` expansion
+  * issue thousands of glob lookups per second, which should not each pay
+  * a Spark job.
   *
   * CONTRACT: `search(q)` returns exactly what
   * [[MetricSearchOps.search]] returns over the same tree state
   * (level-count match, per-level glob, optional trailing dot for dirs,
-  * visibility at emit, invalid glob → empty). The trie is an OPTIONAL
-  * cache: correctness never depends on it, and any staleness is bounded
-  * by the refresh cadence (the reference tolerates a 120 s propagation
-  * window the same way, `search/MetricSearch.java:86-89`).
+  * visibility at emit, invalid glob → empty).
+  *
+  * A snapshot is keyed by the tree table's committed files: it records
+  * the files it has folded in, and [[refresh]] folds in exactly the
+  * files listed since. Committed parquet files never change, so a
+  * snapshot is exact as of the listing — writes from other processes
+  * and back-dated `updated` stamps included. Files are folded in
+  * (modification time, path) order and a row overwrites an older or
+  * equal `updated`, so an `updated` tie goes to the later-written file.
   *
   * Scale: one node per tree path (~10M names is the reference's design
   * center); segments are interned by the child map, lookups are
   * per-level hash hits for literal segments and compiled-regex scans
-  * only for wildcard levels. Not thread-safe for concurrent refresh;
-  * swap whole instances instead (build-and-swap like the reference's
-  * startup load).
+  * only for wildcard levels. Instances are immutable once built: a
+  * refresh path-copies into a new instance, and readers keep whichever
+  * instance they hold.
   */
 final class MetricTrie private (root: MetricTrie.Node,
-                                @volatile private var watermark: Long) {
+                                files: Vector[MetricTrie.TreeFile],
+                                /** Node count: one node per distinct path. */
+                                val size: Long) {
 
   /** All (name, status) rows matching the glob query; visibility applied
     * at emit. Invalid globs return empty, matching the reference.
@@ -63,45 +73,41 @@ final class MetricTrie private (root: MetricTrie.Node,
     }
   }
 
-  /** The `updated` high-water mark this snapshot has folded in — a
-    * [[withDelta]] refresh re-reads from `deltaWatermark − overlap`, so
-    * a write stamped older than that needs a full rebuild to be seen
-    * (callers compare before choosing refresh vs rebuild).
+  /** This snapshot brought up to date with the committed files of the
+    * tree table at `treePath`. The directory is listed with Spark's
+    * rule for a table's files: plain files, minus names starting with
+    * `_` or `.` (so `_temporary` and `_SUCCESS` are never read).
+    *   - No new file: returns this instance, and runs no Spark job.
+    *   - New files that all sort after the ones folded in: one collect
+    *     reads their raw (name, status, updated) rows, which are folded
+    *     into a path-copied trie that shares every untouched subtree
+    *     with this one (this instance is never mutated).
+    *   - A folded file no longer listed (a merge, a replaced store), or
+    *     a new file that sorts before the last one folded (a commit that
+    *     landed late): the snapshot is rebuilt from all listed files.
+    * `maxNodes` guards driver memory — the reference's ops guidance is
+    * the same shape (>10M names ⇒ raise the 4 GB default heap,
+    * `doc/config.md:17-19`).
     */
-  def deltaWatermark: Long = watermark
-
-  /** Node count (diagnostics / capacity checks). */
-  def size: Long = {
-    def count(n: MetricTrie.Node): Long = 1L + n.children.valuesIterator.map(count).sum
-    count(root) - 1 // don't count the synthetic root
+  def refresh(spark: SparkSession, treePath: String, maxNodes: Long = 20000000L): MetricTrie = {
+    val listed = MetricTrie.committedFiles(spark, treePath)
+    val known = files.map(_.path).toSet
+    val fresh = listed.filterNot(f => known.contains(f.path))
+    val appendOnly = known.subsetOf(listed.map(_.path).toSet) &&
+      files.lastOption.forall(last => fresh.forall(f => MetricTrie.order.lt(last, f)))
+    if (!appendOnly) MetricTrie.empty.fold(spark, treePath, listed, maxNodes)
+    else if (fresh.isEmpty) this
+    else fold(spark, treePath, fresh, maxNodes)
   }
 
-  /** Incremental refresh: returns a NEW trie with only the tree rows
-    * since `watermark − overlapSeconds` folded in, sharing every
-    * untouched subtree with this instance — path-copying, so a refresh
-    * allocates O(delta × depth × fanout-on-path) nodes instead of
-    * rebuilding 10M, the filter pushes to the parquet scan (cost =
-    * rows-since, not tree size), and THIS trie is never mutated:
-    * readers keep a consistent snapshot and the caller swaps the
-    * reference, exactly like a full rebuild, just cheap.
-    *
-    * Ordering: every node row carries its `updated`; application only
-    * overwrites older state (ties overwrite, like the reference's
-    * version collapse on equal versions), so re-reading the overlap
-    * window is idempotent and delta rows can arrive in any order. The
-    * overlap (default 120 s — the propagation window the reference
-    * already tolerates) also covers writers stamping slightly-behind
-    * clocks. A caller back-dating `updated` beyond the overlap (e.g.
-    * `setStatus` with an old explicit timestamp) must
-    * [[MetricTrie.fromTree]] rebuild — the delta scan never revisits
-    * rows that far behind the watermark.
-    */
-  def withDelta(tree: DataFrame, overlapSeconds: Long = 120L): MetricTrie = {
-    import org.apache.spark.sql.functions.col
-    val delta = MetricSearchOps.currentTree(
-        tree.filter(col("updated") >= watermark - overlapSeconds))
-      .select("name", "status", "updated").collect()
-    if (delta.isEmpty) return this
+  /** `fresh` files' rows folded, in order, into a path copy of this trie. */
+  private def fold(spark: SparkSession, treePath: String, fresh: Seq[MetricTrie.TreeFile],
+                   maxNodes: Long): MetricTrie = {
+    import spark.implicits._
+    val rows = spark.read.schema(graft.model.TreeNode.tableSchema).parquet(treePath)
+      .filter(col("_metadata.file_path").isin(fresh.map(_.path): _*))
+      .select(col("_metadata.file_path"), col("name"), col("status"), col("updated"))
+      .as[(String, String, String, Long)].collect().groupBy(_._1)
     val owned = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[MetricTrie.Node, java.lang.Boolean]())
     def copyOf(n: MetricTrie.Node): MetricTrie.Node = {
@@ -112,23 +118,23 @@ final class MetricTrie private (root: MetricTrie.Node,
       owned.add(c); c
     }
     val newRoot = copyOf(root)
-    var maxSeen = watermark
-    delta.foreach { row =>
-      val (name, status, upd) = (row.getString(0), row.getString(1), row.getLong(2))
+    var nodes = size
+    for (f <- fresh; (_, name, status, upd) <- rows.getOrElse(f.path, Array.empty)) {
       var node = newRoot
       MetricNames.splitToLevels(name).foreach { seg =>
         node = node.children.get(seg) match {
           case Some(c) if owned.contains(c) => c
           case Some(c) => val c2 = copyOf(c); node.children.update(seg, c2); c2
           case None =>
-            val c2 = new MetricTrie.Node; owned.add(c2)
+            val c2 = new MetricTrie.Node; owned.add(c2); nodes += 1
             node.children.update(seg, c2); c2
         }
       }
       MetricTrie.setRow(node, name, status, upd)
-      maxSeen = math.max(maxSeen, upd)
     }
-    new MetricTrie(newRoot, maxSeen)
+    require(nodes <= maxNodes,
+      s"metric tree has $nodes names > maxNodes=$maxNodes; raise the limit (and driver memory)")
+    new MetricTrie(newRoot, files ++ fresh, nodes)
   }
 
   /** [[search]] plus limit-notification pseudo-rows — trie twin of
@@ -176,40 +182,29 @@ object MetricTrie {
     var dirUpd: Long = Long.MinValue
   }
 
-  /** Build from the append-only tree table: collects the CURRENT state
-    * (latest status per name) to the driver. `maxNodes` guards driver
-    * memory — the reference's ops guidance is the same shape (>10M
-    * names ⇒ raise the 4 GB default heap, `doc/config.md:17-19`).
+  /** A committed file of the tree table: its path as Spark's
+    * `_metadata.file_path` spells it, and its modification time.
     */
-  def fromTree(tree: DataFrame, maxNodes: Long = 20000000L): MetricTrie = {
-    // persist across the guard count and the collect: one currentTree
-    // aggregation per refresh, not two
-    val current = MetricSearchOps.currentTree(tree).select("name", "status", "updated").persist()
-    try {
-      val n = current.count()
-      require(n <= maxNodes,
-        s"metric tree has $n names > maxNodes=$maxNodes; raise the limit (and driver memory)")
-      val root = new Node
-      var wm = 0L
-      current.collect().foreach { row =>
-        insert(root, row.getString(0), row.getString(1), row.getLong(2))
-        wm = math.max(wm, row.getLong(2))
-      }
-      new MetricTrie(root, wm)
-    } finally current.unpersist()
-  }
+  private[search] final case class TreeFile(path: String, modified: Long)
 
-  private[search] def insert(root: Node, name: String, status: String, updated: Long): Unit = {
-    val segs = MetricNames.splitToLevels(name)
-    var node = root
-    segs.foreach { s => node = node.children.getOrElseUpdate(s, new Node) }
-    setRow(node, name, status, updated)
+  /** Fold order: modification time, then path. */
+  private val order: Ordering[TreeFile] = Ordering.by((f: TreeFile) => (f.modified, f.path))
+
+  /** The snapshot of a tree with no files; [[MetricTrie.refresh]] builds from it. */
+  val empty: MetricTrie = new MetricTrie(new Node, Vector.empty, 0L)
+
+  /** The files a read of the tree table sees, in fold order. */
+  private def committedFiles(spark: SparkSession, treePath: String): Vector[TreeFile] = {
+    val dir = new Path(treePath)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(s => TreeFile(s.getPath.toString, s.getModificationTime))
+      .toVector.sorted(order)
   }
 
   /** Version-guarded row write: only state at least as new as the
-    * stored row wins (ties overwrite — reference ReplacingMergeTree
-    * collapses equal versions arbitrarily), making delta application
-    * order-independent and idempotent.
+    * stored row wins, and a tie overwrites, so of two rows with equal
+    * `updated` the one folded later wins.
     */
   private[search] def setRow(node: Node, name: String, status: String, updated: Long): Unit =
     if (MetricNames.isDir(name)) {

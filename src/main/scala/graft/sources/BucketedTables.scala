@@ -41,25 +41,4 @@ object BucketedTables {
 
   /** The bucketed table as a DataFrame (bucket metadata attached). */
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** Write the metric-TREE table (name, level, parent, status, updated)
-    * bucketed by `name`, sorted by (name, updated) — the
-    * ReplacingMergeTree `ORDER BY (parent, name)` analogue for reads.
-    * Every read of the tree applies the A2 status dedup
-    * `groupBy(name).agg(max_by(status, updated))` (reference
-    * `search/MetricSearch.java:320`); with name-bucketed files that
-    * aggregation — and the semi-joins of the banned-page scan (S10) —
-    * plan exchange-free, so tree refresh cost scales with tree size,
-    * not shuffle fan-out. At 10M+ names (the reference's stated scale
-    * target) the tree read is otherwise a full shuffle per refresh.
-    */
-  def writeBucketedTree(tree: DataFrame, table: String, path: String, buckets: Int,
-                        mode: SaveMode = SaveMode.Overwrite): Unit =
-    tree.write
-      .mode(mode)
-      .option("path", path)
-      .bucketBy(buckets, "name")
-      .sortBy("name", "updated")
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -79,14 +79,4 @@ object CorpusIO {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("shard")
       .parquet(path)
-
-  /** Round-trip reader for [[writeSharded]]: the corpus back in its
-    * global training order (shard-major, position-minor) — the exact
-    * sequence a training loop would stream. Partition pruning on
-    * `shard` serves single-shard readers (a data-parallel worker reads
-    * ONLY its directory).
-    */
-  def readSharded(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .orderBy("shard", "shard_pos")
 }

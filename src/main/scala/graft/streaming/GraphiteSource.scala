@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.BufferedReader
+import java.io.InputStream
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicBoolean
@@ -44,6 +44,59 @@ object GraphiteSource {
     StructField("line", StringType, nullable = false),
     StructField("updated", IntegerType, nullable = false)
   ))
+
+  /** Longest line the source accepts, in bytes: a name of at most
+    * `maxMetricLength` characters (ASCII, by the validator's whitelist),
+    * two separators, and a value and a timestamp of up to 64 bytes each.
+    * A longer line could not parse into a valid point anyway.
+    */
+  val MaxLineBytes: Int = graft.names.MetricValidator().maxMetricLength + 2 + 2 * 64
+}
+
+/** `BufferedReader.readLine` over a socket's bytes, with a bound: a line
+  * ends at `\n`, `\r` or `\r\n` and decodes as UTF-8 (malformed bytes
+  * become U+FFFD, which no valid name contains). A line longer than
+  * `maxBytes` is discarded through its terminator and reported to
+  * `onDiscard`, so a client that never sends a newline holds at most
+  * `maxBytes` of driver memory.
+  */
+final class BoundedLineReader(in: InputStream, maxBytes: Int, onDiscard: () => Unit) {
+  private val chunk = new Array[Byte](8192)
+  private var pos, end = 0
+  private val line = new java.io.ByteArrayOutputStream(256)
+  private var skipLf = false // the previous line ended with '\r'
+
+  /** The next line without its terminator, or null at end of stream. */
+  def readLine(): String = {
+    var over = false
+    while (true) {
+      if (pos == end) {
+        end = in.read(chunk); pos = 0
+        if (end <= 0) {
+          end = 0
+          if (over) onDiscard()
+          return if (!over && line.size > 0) take() else null
+        }
+      }
+      val b = chunk(pos); pos += 1
+      if (skipLf && b == '\n') skipLf = false
+      else {
+        skipLf = b == '\r'
+        if (b == '\n' || b == '\r') {
+          if (!over) return take()
+          onDiscard(); over = false
+        } else if (!over) {
+          if (line.size < maxBytes) line.write(b) else { over = true; line.reset() }
+        }
+      }
+    }
+    null
+  }
+
+  private def take(): String = {
+    val s = line.toString(java.nio.charset.StandardCharsets.UTF_8)
+    line.reset(); s
+  }
 }
 
 /** Port discovery for ephemeral binds (option port=0) and drop-count
@@ -57,7 +110,9 @@ object GraphiteServerRegistry {
   private[streaming] def dropCounter(name: String): java.util.concurrent.atomic.AtomicLong =
     drops.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong())
   def boundPort(name: String): Option[Int] = Option(ports.get(name)).map(_.intValue())
-  /** Lines rejected because the in-flight buffer was at capacity. */
+  /** Lines rejected because the in-flight buffer was at capacity, or
+    * because they were longer than [[GraphiteSource.MaxLineBytes]].
+    */
   def droppedLines(name: String): Long =
     Option(drops.get(name)).map(_.get()).getOrElse(0L)
 }
@@ -119,7 +174,8 @@ class GraphiteMicroBatchStream(port: Int, name: String, capacity: Int = 1000000)
   acceptor.start()
 
   private def readLoop(sock: Socket): Unit = {
-    val in = new BufferedReader(new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+    val in = new BoundedLineReader(sock.getInputStream, GraphiteSource.MaxLineBytes,
+      () => rejects.incrementAndGet())
     try {
       var line = in.readLine()
       while (line != null) {

@@ -54,7 +54,9 @@ class BucketedTablesSpec extends AnyFunSuite {
       ("one_min.b.", 1, "one_min.", "APPROVED", ts)
     ).toDF("name", "level", "parent", "status", "updated")
     val table = s"graft_bucketed_tree_${System.nanoTime()}"
-    BucketedTables.writeBucketedTree(tree, table, s"$dir/metrics", buckets = 4)
+    // the tree table bucketed by name, sorted by (name, updated)
+    tree.write.option("path", s"$dir/metrics").bucketBy(4, "name").sortBy("name", "updated")
+      .format("parquet").saveAsTable(table)
     try {
       val df = BucketedTables.read(spark, table)
       val dedup = df.groupBy($"name").agg(max_by($"status", $"updated").as("last_status"))

@@ -40,7 +40,8 @@ class CorpusIOSpec extends AnyFunSuite {
     // shard dirs exist → partition pruning serves single-shard readers
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.forall(_.startsWith("shard=")) && dirs.nonEmpty)
-    val back = CorpusIO.readSharded(spark, dir)
+    // the corpus back in its global training order (shard-major, position-minor)
+    val back = spark.read.parquet(dir).orderBy("shard", "shard_pos")
     // same (shard, shard_pos) assignment as computing the layout fresh
     val expected = graft.ops.SampleOps.shardShuffle(docs, "doc_id", 4, 7L)
       .select("doc_id", "shard", "shard_pos")

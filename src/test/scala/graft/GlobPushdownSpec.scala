@@ -64,6 +64,9 @@ class GlobPushdownSpec extends AnyFunSuite {
     assert(Glob.literalPrefix("m\\*x") == "m")
     assert(Glob.literalPrefix("one_min.app.host*") == "one_min.app.host")
     assert(Glob.literalPrefix("*.x") == "")
+    // a literal glob's trailing dot is optional: "a.cpu." matches "a.cpu"
+    assert(Glob.literalPrefix("a.cpu.") == "a.cpu")
+    assert(Glob.literalPrefix("a.cpu.*") == "a.cpu.")
   }
 
   test("spark.sql.extensions injection registers glob_match for SQL too") {

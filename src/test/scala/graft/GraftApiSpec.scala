@@ -110,45 +110,69 @@ class GraftApiSpec extends AnyFunSuite {
     // one retention group
     val patterns = Seq("one_min.app.host1.requests", "one_min.app.*.cpu",
       "one_min.app.host2.requests", "one_min.app.host9.requests")
-    val probe = new Dev.Probe(spark.sparkContext)
-    var rows = Array.empty[org.apache.spark.sql.Row]
-    val m = try probe.measure {
-      rows = g.metricData(patterns, 1700000000, 1700000180, nowSeconds = 1700000200).collect()
-    } finally probe.close()
-    // one expansion collect, then the one shuffle's map and result stages
-    assert(m.jobs === 3L, m.toString)
-    assert(rows.map(r => r.getAs[String]("metric") -> r.getAs[scala.collection.Seq[Any]]("points")).toMap === Map(
+    def request(): (Dev.Measured, Map[String, Seq[Any]]) = {
+      val probe = new Dev.Probe(spark.sparkContext)
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val m = try probe.measure {
+        rows = g.metricData(patterns, 1700000000, 1700000180, nowSeconds = 1700000200).collect()
+      } finally probe.close()
+      (m, rows.map(r => r.getAs[String]("metric") -> r.getAs[scala.collection.Seq[Any]]("points").toSeq).toMap)
+    }
+    val want = Map(
       "one_min.app.host1.requests" -> Seq(10.0, 20.0, null),
       "one_min.app.host1.cpu" -> Seq(1.5, null, null),
       "one_min.app.host2.cpu" -> Seq(null, null, 2.5),
       "one_min.app.host2.requests" -> Seq(null, null, null),
-      "one_min.app.host9.requests" -> Seq(null, null, null)))
+      "one_min.app.host9.requests" -> Seq(null, null, null))
+    // cold: the snapshot's first build is one collect, then the one
+    // shuffle's map and result stages
+    val (cold, coldRows) = request()
+    assert(cold.jobs === 3L, cold.toString)
+    assert(coldRows === want)
+    // warm, no new tree file: the listing runs no job
+    val (warm, warmRows) = request()
+    assert(warm.jobs === 2L, warm.toString)
+    assert(warmRows === want)
+    // a status write adds a tree file: one collect folds it in
+    g.setStatus("one_min.app.host1.cpu", MetricStatus.Ban, nowSeconds = 2000000001L)
+    val (afterBan, banRows) = request()
+    assert(afterBan.jobs === 3L, afterBan.toString)
+    assert(banRows === want - "one_min.app.host1.cpu", "a glob no longer matches a banned name")
+    val probe = new Dev.Probe(spark.sparkContext)
+    val refresh = try probe.measure(g.refreshSearchCache()) finally probe.close()
+    assert(refresh.jobs === 0L, "a refresh with no new tree file runs no Spark job")
   }
 
-  test("back-dated setStatus forces the serving cache into a full rebuild") {
+  test("a back-dated setStatus is seen by the next cache refresh") {
     val dir = java.nio.file.Files.createTempDirectory("graft_backdate").toString
     // tree with a STALE metric (a.x, updated=1000) and a FRESH one
-    // (a.y, updated=10000): the trie watermark lands at 10000
+    // (a.y, updated=10000)
     Seq(
       ("a.", 1, "", "SIMPLE", 1000L),
       ("a.x", 2, "a.", "SIMPLE", 1000L),
       ("a.y", 2, "a.", "SIMPLE", 10000L)
     ).toDF("name", "level", "parent", "status", "updated")
       .write.parquet(s"$dir/tree")
+    Seq(graft.model.MetricPoint("a.y", 1.0, 0, new java.sql.Date(0L), 1)).toDS()
+      .write.partitionBy("date").parquet(s"$dir/data")
     val g = new Graft(spark, s"$dir/data", s"$dir/tree")
     assert(g.searchCached("a.*").map(_._1).toSet === Set("a.x", "a.y"))
 
     // ban a.x stamped 2000: NEWER than a.x's row (so it wins the
-    // latest-status collapse) but OLDER than watermark − 120 s overlap
-    // (so an incremental delta scan would never see it)
+    // latest-status collapse) but far older than anything else folded in
     g.setStatus("a.x", MetricStatus.Ban, nowSeconds = 2000L)
+    assert(g.searchCached("a.*").map(_._1).toSet === Set("a.x", "a.y"),
+      "searchCached answers from the snapshot until a refresh")
     g.refreshSearchCache()
-    assert(g.searchCached("a.*").map(_._1).toSet === Set("a.y"),
-      "refresh after a back-dated write must fall back to a full rebuild")
+    assert(g.searchCached("a.*").map(_._1).toSet === Set("a.y"))
 
-    // a write INSIDE the overlap refreshes incrementally and is seen
+    // metricData refreshes on its own: a glob stops matching a name as
+    // soon as its ban is committed
+    def expanded(): Set[String] =
+      g.metricData(Seq("a.*"), 0, 60, nowSeconds = 100).select("metric").as[String].collect().toSet
+    assert(expanded() === Set("a.y"))
     g.setStatus("a.y", MetricStatus.Ban, nowSeconds = 10050L)
-    g.refreshSearchCache()
+    assert(expanded() === Set.empty)
     assert(g.searchCached("a.*").isEmpty)
   }
 

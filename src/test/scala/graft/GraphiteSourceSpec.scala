@@ -139,4 +139,64 @@ class GraphiteSourceSpec extends AnyFunSuite {
       assert(GraphiteServerRegistry.droppedLines(name) == 7, "rejected lines accounted")
     } finally s.stop()
   }
+
+  test("over-long lines are dropped and counted; a split line arrives whole") {
+    import graft.streaming.{CountOffset, GraphiteMicroBatchStream, GraphiteSource}
+    val name = s"long-${System.nanoTime()}"
+    val s = new GraphiteMicroBatchStream(0, name)
+    try {
+      val port = GraphiteServerRegistry.boundPort(name).get
+      val sock = new java.net.Socket("127.0.0.1", port)
+      val out = sock.getOutputStream
+      def send(x: String): Unit = { out.write(x.getBytes("UTF-8")); out.flush() }
+      // a line with no newline past the bound, then its newline: dropped
+      send("a" * (GraphiteSource.MaxLineBytes + 1))
+      send("bbbb\r\n")
+      // one line in two socket writes, the second after a pause
+      send("one_min.a.b 1.0 ")
+      Thread.sleep(200)
+      send("1542199560\r\n")
+      sock.close()
+      val deadline = System.currentTimeMillis() + 10000
+      while (s.latestOffset().asInstanceOf[CountOffset].n < 1 &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val part = s.planInputPartitions(CountOffset(0), s.latestOffset())
+      val reader = s.createReaderFactory().createReader(part.head)
+      val lines = Iterator.continually(reader.next()).takeWhile(identity)
+        .map(_ => reader.get().getUTF8String(0).toString).toList
+      assert(lines === List("one_min.a.b 1.0 1542199560"))
+      assert(GraphiteServerRegistry.droppedLines(name) === 1L)
+    } finally s.stop()
+  }
+
+  test("BoundedLineReader: lines in any chunking, over-long ones counted") {
+    import graft.streaming.BoundedLineReader
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val max = 16
+    // arbitrary bytes (malformed UTF-8 included) minus the terminators
+    val lineGen = Gen.choose(0, 2 * max).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue).suchThat(b => b != '\n' && b != '\r')))
+    val gen = for {
+      lines <- Gen.listOf(lineGen)
+      ends <- Gen.listOfN(lines.size, Gen.oneOf("\n", "\r\n"))
+      chunk <- Gen.choose(1, 40)
+    } yield (lines.map(_.toArray), ends, chunk)
+    val prop = Prop.forAll(gen) { case (lines, ends, chunk) =>
+      val bytes = lines.zip(ends).flatMap { case (l, e) => l ++ e.getBytes("UTF-8") }.toArray
+      // a stream that hands out at most `chunk` bytes per read
+      val in = new java.io.ByteArrayInputStream(bytes) {
+        override def read(b: Array[Byte], off: Int, len: Int): Int = super.read(b, off, math.min(len, chunk))
+      }
+      var discarded = 0
+      val r = new BoundedLineReader(in, max, () => discarded += 1)
+      val got = Iterator.continually(r.readLine()).takeWhile(_ != null).toList
+      got == lines.filter(_.length <= max).map(l => new String(l, "UTF-8")) &&
+        discarded == lines.count(_.length > max)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.toString)
+    // readLine's other terminator: a bare CR; and an unterminated last line
+    val r = new BoundedLineReader(new java.io.ByteArrayInputStream("a\rb\r\n\nc".getBytes("UTF-8")), max, () => ())
+    assert(Iterator.continually(r.readLine()).takeWhile(_ != null).toList === List("a", "b", "", "c"))
+  }
 }

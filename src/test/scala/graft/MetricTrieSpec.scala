@@ -36,75 +36,86 @@ class MetricTrieSpec extends AnyFunSuite {
     "a.cp\\u", "a.cpu..", "a.cpu.", "a.cpu.load1."
   )
 
+  private val cols = Seq("name", "level", "parent", "status", "updated")
+
+  private def newTree(): String =
+    java.nio.file.Files.createTempDirectory("graft_trie").toString + "/tree"
+
+  /** Appends `rows` to the tree table at `dir` as one file. */
+  private def append(dir: String, rows: Seq[(String, Int, String, String, Long)]): Unit =
+    rows.toDF(cols: _*).coalesce(1).write.mode("append").parquet(dir)
+
+  private def committed(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq.filter(f => f.isFile && f.getName.startsWith("part-"))
+
   test("trie search equals relational search for every query family") {
-    val df = treeRows
-    val trie = MetricTrie.fromTree(df)
+    val dir = newTree()
+    treeRows.coalesce(1).write.parquet(dir)
+    val trie = MetricTrie.empty.refresh(spark, dir)
     queries.foreach { q =>
-      val rel = MetricSearchOps.search(df, q).as[(String, String)].collect().toSet
+      val rel = MetricSearchOps.search(treeRows, q).as[(String, String)].collect().toSet
       val fast = trie.search(q).toSet
       assert(fast === rel, s"query '$q'")
     }
   }
 
-  test("withDelta snapshots: new rows fold in, original trie untouched, rebuild parity") {
-    val t0 = treeRows
-    val trie = MetricTrie.fromTree(t0)
-    // delta: a brand-new metric, a status flip of an existing one, and
-    // an out-of-order row BEHIND the watermark but inside the 120s
-    // overlap (updated=3 < wm=4) that must still apply
-    val delta = Seq(
+  test("file-fed refresh: new files fold in, original untouched, rebuild parity") {
+    val dir = newTree()
+    treeRows.coalesce(1).write.parquet(dir)
+    val trie = MetricTrie.empty.refresh(spark, dir)
+    assert(trie.refresh(spark, dir) eq trie, "no new file: the same snapshot")
+    // a new file: a brand-new metric, a status flip of an existing one,
+    // and a row back-dated behind every stamp already folded in
+    append(dir, Seq(
       ("a.cpu.load15", 3, "a.cpu.", "SIMPLE", 5L),
       ("b.cpu", 2, "b.", "HIDDEN", 6L),
-      ("a.mem.free", 3, "a.mem.", "SIMPLE", 3L) // back-dated, within overlap
-    ).toDF("name", "level", "parent", "status", "updated")
-    val full = t0.unionByName(delta)
-    val next = trie.withDelta(full)
+      ("a.mem.free", 3, "a.mem.", "SIMPLE", 1L)))
+    val next = trie.refresh(spark, dir)
+    val full = spark.read.parquet(dir)
     queries.foreach { q =>
       val rel = MetricSearchOps.search(full, q).as[(String, String)].collect().toSet
-      assert(next.search(q).toSet === rel, s"query '$q' after delta")
+      assert(next.search(q).toSet === rel, s"query '$q' after refresh")
+      assert(MetricTrie.empty.refresh(spark, dir).search(q).toSet === rel, s"query '$q' rebuilt")
     }
     assert(next.search("a.cpu.load15").nonEmpty)
     assert(next.search("b.cpu").isEmpty, "status flip to HIDDEN applied")
-    assert(next.search("a.mem.free").nonEmpty,
-      "back-dated row inside the overlap window must apply")
+    assert(next.search("a.mem.free").nonEmpty, "back-dated row applied")
     // the ORIGINAL trie still answers from its snapshot (no mutation)
     assert(trie.search("a.cpu.load15").isEmpty)
     assert(trie.search("b.cpu").map(_._2) === Seq("APPROVED"))
-    // a stale row older than the trie's stored version never regresses
-    // state: re-applying the original rows on top of `next` is a no-op
-    val again = next.withDelta(full)
-    assert(again.search("b.cpu").isEmpty, "older APPROVED row must not undo the newer HIDDEN")
+    // an older row in a later file never regresses state
+    append(dir, Seq(("b.cpu", 2, "b.", "APPROVED", 3L)))
+    assert(next.refresh(spark, dir).search("b.cpu").isEmpty,
+      "older APPROVED row must not undo the newer HIDDEN")
   }
 
-  test("withDelta overlap: back-dated writes within 120s apply, beyond it only a rebuild sees them") {
-    val base = Seq(("s.", 1, "", "SIMPLE", 10000L), ("s.a", 2, "s.", "SIMPLE", 10000L))
-    val trie = MetricTrie.fromTree(base.toDF("name", "level", "parent", "status", "updated"))
-    assert(trie.deltaWatermark === 10000L)
-    // stamped 9890 >= watermark - 120: the delta scan re-reads it
-    val d1 = (base :+ ("s.b", 2, "s.", "SIMPLE", 9890L))
-      .toDF("name", "level", "parent", "status", "updated")
-    assert(trie.withDelta(d1).search("s.b").nonEmpty,
-      "back-dated write inside the overlap window must re-apply")
-    // stamped 9000 < watermark - 120: invisible to ANY incremental
-    // refresh (this is why Graft tracks min-backdate and rebuilds)
-    val d2 = (base :+ ("s.c", 2, "s.", "SIMPLE", 9000L))
-      .toDF("name", "level", "parent", "status", "updated")
-    assert(trie.withDelta(d2).search("s.c").isEmpty,
-      "the delta scan must not see past the overlap window")
-    assert(MetricTrie.fromTree(d2).search("s.c").nonEmpty, "a full rebuild does")
+  test("refresh skips _temporary and _SUCCESS, and rebuilds after a file is deleted") {
+    val dir = newTree()
+    append(dir, Seq(("s.", 1, "", "SIMPLE", 10000L), ("s.a", 2, "s.", "SIMPLE", 10000L)))
+    val first = committed(dir).toSet
+    append(dir, Seq(("s.b", 2, "s.", "SIMPLE", 9000L)))
+    val second = (committed(dir).toSet -- first).head
+    // a crashed writer's staging dir and a marker file: Spark skips both
+    Seq(("s.c", 2, "s.", "SIMPLE", 20000L)).toDF(cols: _*).coalesce(1).write.parquet(dir + "/_temporary/0")
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    val trie = MetricTrie.empty.refresh(spark, dir)
+    assert(trie.search("s.*").map(_._1).toSet === Set("s.a", "s.b"))
+    // a folded file is gone: the snapshot is rebuilt from what is listed
+    assert(second.delete())
+    assert(trie.refresh(spark, dir).search("s.*").map(_._1).toSet === Set("s.a"))
   }
 
-  test("withDelta soak: chained refreshes race-free against concurrent readers") {
+  test("snapshot soak: chained file refreshes race-free against readers") {
     // the hazard the round-5 code review found: an in-place-mutating
     // refresh tears state under a reader holding the same instance.
     // Path-copying must give every reader a frozen snapshot: repeated
     // reads of ONE instance agree, and the sequentially-added extras
     // are always a PREFIX (extra_k visible ⇒ all extra_j, j<k visible).
-    val cols = Seq("name", "level", "parent", "status", "updated")
-    val base = (("s.", 1, "", "SIMPLE", 1000L) +:
-      (0 until 200).map(i => (s"s.m$i", 2, "s.", "SIMPLE", 1000L))).toDF(cols: _*)
+    val dir = newTree()
+    append(dir, ("s.", 1, "", "SIMPLE", 1000L) +:
+      (0 until 200).map(i => (s"s.m$i", 2, "s.", "SIMPLE", 1000L)))
     val gens = 12
-    @volatile var current = MetricTrie.fromTree(base)
+    @volatile var current = MetricTrie.empty.refresh(spark, dir)
     @volatile var stop = false
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val readers = (1 to 3).map { r =>
@@ -123,11 +134,9 @@ class MetricTrieSpec extends AnyFunSuite {
       th.start(); th
     }
     try {
-      var rows = (("s.", 1, "", "SIMPLE", 1000L) +:
-        (0 until 200).map(i => (s"s.m$i", 2, "s.", "SIMPLE", 1000L))).toVector
       (1 to gens).foreach { k =>
-        rows = rows :+ ((s"s.extra$k", 2, "s.", "SIMPLE", 1000L + k))
-        current = current.withDelta(rows.toDF(cols: _*))
+        append(dir, Seq((s"s.extra$k", 2, "s.", "SIMPLE", 1000L + k)))
+        current = current.refresh(spark, dir)
       }
     } finally {
       stop = true
@@ -138,10 +147,14 @@ class MetricTrieSpec extends AnyFunSuite {
   }
 
   test("size reports one node per distinct path") {
-    assert(MetricTrie.fromTree(treeRows).size === 8L) // a, b, a.cpu, a.mem, b.cpu, 3 leaves
+    val dir = newTree()
+    treeRows.coalesce(1).write.parquet(dir)
+    assert(MetricTrie.empty.refresh(spark, dir).size === 8L) // a, b, a.cpu, a.mem, b.cpu, 3 leaves
   }
 
   test("maxNodes guard refuses oversized trees") {
-    intercept[IllegalArgumentException](MetricTrie.fromTree(treeRows, maxNodes = 3))
+    val dir = newTree()
+    treeRows.coalesce(1).write.parquet(dir)
+    intercept[IllegalArgumentException](MetricTrie.empty.refresh(spark, dir, maxNodes = 3))
   }
 }

@@ -382,7 +382,8 @@ class PipelineEvalSpec extends AnyFunSuite {
       (4L, Array(0.01f, 0.99f), 9), (5L, Array(0.02f, 0.98f), 9),
       (6L, Array(0.7f, 0.7f), 7), (7L, null.asInstanceOf[Array[Float]], 3))
     val emb = rows.toDF("vec_id", "embedding", "label")
-    val st = SimilarityOps.kmeansTrain(emb, k = 2, iters = 2)
+    // the shared state: ivfTrain's centroids (lowest-id init, 4dp means)
+    val st = SimilarityOps.KmeansState(2, 2, SimilarityOps.ivfTrain(emb, kCells = 2, iters = 2))
     assert(st.k === 2 && st.centroids.length === 2 && st.centroids.forall(_.length == 2))
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq

@@ -80,6 +80,43 @@ class PropertySpec extends AnyFunSuite {
     }, "line round-trip")
   }
 
+  test("LineParser: non-finite values, non-positive and millisecond timestamps rejected") {
+    val p = new LineParser()
+    val name = Gen.choose(2, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.listOfN(4, Gen.alphaNumChar).map(_.mkString))).map(_.mkString("."))
+    val badValue = Gen.oneOf("NaN", "Infinity", "-Infinity", "+Infinity")
+    val badTs = Gen.oneOf(
+      Gen.choose(Long.MinValue / 2, 0L).map(_.toString),            // negative or zero
+      Gen.choose(1000000000L, 2000000000L).map(s => (s * 1000).toString), // milliseconds
+      Gen.choose(-1e12, 0.4).map(_.toString))                        // rounds to <= 0
+    check(Prop.forAll(name, Gen.choose(-1e9, 1e9), badValue, badTs, Gen.choose(1, 2000000000)) {
+      (n, v, bv, bt, ts) =>
+        p.parse(s"$n $bv $ts", 1).isEmpty && p.parse(s"$n $v $bt", 1).isEmpty
+    }, "rejected values and timestamps")
+  }
+
+  test("LineParser: CR/LF endings parse like none; malformed UTF-8 never does") {
+    val p = new LineParser()
+    val gen = for {
+      levels <- Gen.choose(2, 6)
+      parts  <- Gen.listOfN(levels, Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString))
+      value  <- Gen.choose(-1e9, 1e9)
+      ts     <- Gen.choose(1, 2000000000)
+      end    <- Gen.oneOf("\r", "\n", "\r\n")
+      at     <- Gen.choose(0, 100)
+    } yield (parts.mkString("."), value, ts, end, at)
+    check(Prop.forAll(gen) { case (name, value, ts, end, at) =>
+      val line = s"$name $value $ts"
+      // a name holding a byte sequence that is not UTF-8, decoded as the
+      // source decodes it (U+FFFD)
+      val i = at % name.length
+      val bytes = name.substring(0, i).getBytes("UTF-8") ++ Array(0xC3.toByte, 0x28.toByte) ++
+        name.substring(i).getBytes("UTF-8")
+      val broken = new String(bytes, "UTF-8")
+      p.parse(line + end, 3) == p.parse(line, 3) && p.parse(s"$broken $value $ts", 3).isEmpty
+    }, "line endings and malformed UTF-8")
+  }
+
   test("MetricNames: parent/level consistency") {
     val gen = Gen.choose(2, 8).flatMap(n =>
       Gen.listOfN(n, Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)))

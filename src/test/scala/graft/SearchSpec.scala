@@ -91,6 +91,47 @@ class SearchSpec extends AnyFunSuite {
     assert(got("a.m0") === (("a.", "BAN")) && got("a.m20")._2 === "APPROVED" && got("a.m30")._2 === "SIMPLE")
   }
 
+  test("snapshot expansion equals currentStatus over a multi-file tree") {
+    import graft.search.MetricTrie
+    val dir = java.nio.file.Files.createTempDirectory("graft_snapshot_expansion").toString + "/tree"
+    def append(rows: Seq[(String, Int, String, String, Long)], to: String = dir): Unit =
+      rows.toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(to)
+    val patterns = Seq("a.m1", "a.m2?", "a.m3*", "a.*", "b.*", "b.x", "*", "a.m[0-9]")
+    // the visible non-dir names the patterns match: from the snapshot,
+    // and from currentStatus over a Spark read of the same files
+    def check(trie: MetricTrie): Unit = {
+      val got = patterns.flatMap(trie.search).map(_._1).filterNot(_.endsWith(".")).toSet
+      val want = MetricSearchOps.currentStatus(spark.read.parquet(dir), MetricSearchOps.matchesAny(patterns))
+        .collect { case (n, (_, st)) if MetricSearchOps.visibleStatus(st) && !n.endsWith(".") => n }.toSet
+      assert(got === want)
+    }
+    // the same-second BAN fixture: a batch's SIMPLE rows, then a status
+    // file with BAN in the same second (a tie), APPROVED a second later
+    // and HIDDEN older than the batch
+    append(("a.", 1, "", "SIMPLE", 100L) +: (0 until 3000).map(i => (s"a.m$i", 2, "a.", "SIMPLE", 100L)))
+    append((0 until 16).map(i => (s"a.m$i", 2, "a.", "BAN", 100L)) ++
+      Seq(("a.m20", 2, "a.", "APPROVED", 101L), ("a.m30", 2, "a.", "HIDDEN", 50L)))
+    val t1 = MetricTrie.empty.refresh(spark, dir)
+    check(t1)
+    assert(t1.search("a.m0").isEmpty, "the later file's BAN wins the tie")
+    assert(t1.search("a.m30").nonEmpty, "an older HIDDEN loses")
+    // a new subtree, then a BAN back-dated far behind the newest stamp,
+    // an APPROVED lifting a tied BAN, and a crashed writer's staging dir
+    append(Seq(("b.", 1, "", "SIMPLE", 10000L), ("b.x", 2, "b.", "SIMPLE", 1000L), ("b.y", 2, "b.", "SIMPLE", 10000L)))
+    append(Seq(("b.x", 2, "b.", "BAN", 2000L), ("a.m1", 2, "a.", "APPROVED", 200L)))
+    append(Seq(("a.m2", 2, "a.", "APPROVED", 999999L)), to = dir + "/_temporary/0")
+    val t2 = t1.refresh(spark, dir)
+    check(t2)
+    assert(t2.search("b.*").map(_._1) === Seq("b.y") && t2.search("a.m1").nonEmpty && t2.search("a.m2").isEmpty)
+    // delete the status file: the snapshot is rebuilt without its rows
+    val statusFile = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .find(f => spark.read.parquet(f.getPath).filter($"name" === "a.m20" && $"status" === "APPROVED").count() > 0).get
+    assert(statusFile.delete())
+    val t3 = t2.refresh(spark, dir)
+    check(t3)
+    assert(t3.search("a.m0").nonEmpty)
+  }
+
   test("setStatus honors the restricted transition graph") {
     val updates = MetricSearchOps.setStatus(tree, "five_sec.int_874?.x1", MetricStatus.AutoHidden, 10L)
     val got = updates.select("name", "status").as[(String, String)].collect().toMap

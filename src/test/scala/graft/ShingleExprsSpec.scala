@@ -50,12 +50,21 @@ class ShingleExprsSpec extends AnyFunSuite {
     assert(df.filter(col("fast") =!= col("ref")).count() === 0)
   }
 
+  /** MinHash signature from a code array as composable higher-order
+    * functions: the minimum of each universal-hash permutation.
+    */
+  private def minHashSignature(codes: org.apache.spark.sql.Column, numHashes: Int): org.apache.spark.sql.Column =
+    array((0 until numHashes).map { i =>
+      val (a, b) = DedupOps.minHashCoeffs(i)
+      array_min(transform(codes, h => (h * a + b) % DedupOps.MinHashP))
+    }: _*)
+
   test("native minHashSig equals per-permutation mins over the code multiset") {
     val df = samples.toDF("text")
       .select(TextOps.normalized(col("text")).as("norm"))
       .withColumn("codes", ShingleExprs.shingleCodes(col("norm"), 8))
       .withColumn("fast", ShingleExprs.minHashSig(col("norm"), 8, 16))
-      .withColumn("ref", DedupOps.minHashSignature(col("codes"), 16))
+      .withColumn("ref", minHashSignature(col("codes"), 16))
     val bad = df.filter(col("fast") =!= col("ref")).collect()
     assert(bad.isEmpty, bad.mkString("; "))
   }

@@ -141,7 +141,7 @@ class TreeLimitsSpec extends AnyFunSuite {
     assert(relStatuses === Set("APPROVED"))
 
     // trie twin returns the same rows
-    val trie = MetricTrie.fromTree(tree)
+    val trie = MetricTrie.empty.refresh(spark, s"$dir/tree")
     assert(trie.searchWithLimits("dir.*", limits).map(_._1).toSet === expected)
     assert(trie.searchWithLimits("dir.*", limits)
       .filter(_._1.contains("_LIMIT_REACHED_")).map(_._2).toSet === Set("APPROVED"))
