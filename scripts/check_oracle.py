@@ -7,7 +7,10 @@ Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already produced
 per-query parquet dumps + oracle_sql.json. Registers the sf tables in
 DuckDB, runs each oracle SQL, and compares row sets against the Spark
 results (columns sorted by name, rows sorted, values stringified with
-float rounding) — approximating the driver's hash compare.
+float rounding) — approximating the driver's hash compare. Each result
+line ends with the seconds spent on each side: `[sql S s, dump D s]`,
+the oracle SQL (run, fetched and canonicalized) and the read of the
+Spark dump.
 
 TYPE-PARITY (round 14, verdict "What's wrong #2"): the driver hashes
 result sets AFTER a pandas conversion, where DuckDB HUGEINT (the type of
@@ -79,6 +82,12 @@ def fetch(con, sql):
     return cols, res.df(), canon_rows(cols, res.fetchall())
 
 
+def timing(t_dump, t_sql):
+    """The seconds each side took: the dump read ran from `t_dump` to
+    `t_sql`, the oracle SQL from `t_sql` to now."""
+    return f"[sql {time.monotonic() - t_sql:.2f} s, dump {t_sql - t_dump:.2f} s]"
+
+
 def main():
     t0 = time.monotonic()
     con = duckdb.connect()
@@ -92,15 +101,18 @@ def main():
             print(f"MISSING  {name}: no Spark result dump")
             fail += 1
             continue
+        t_dump = time.monotonic()
         s_cols, s_df, s_rows = fetch(con, f"SELECT * FROM read_parquet('{res_dir}/*.parquet')")
         s_kinds = dtype_kinds(s_df)
+        t_sql = time.monotonic()
         try:
             d_cols, d_df, d_rows = fetch(con, sql)
             d_kinds = dtype_kinds(d_df)
         except Exception as e:
-            print(f"SQLERR   {name}: {e}")
+            print(f"SQLERR   {name}: {e} {timing(t_dump, t_sql)}")
             fail += 1
             continue
+        took = timing(t_dump, t_sql)
         type_mismatch = [
             (c, s_kinds[c], d_kinds[c])
             for c in s_kinds if c in d_kinds and s_kinds[c] != d_kinds[c]
@@ -112,21 +124,21 @@ def main():
             if s_df[c].notna().any() and d_df[c].notna().any()
         ]
         if sorted(s_cols) != sorted(d_cols):
-            print(f"SCHEMA   {name}: spark={sorted(s_cols)} duck={sorted(d_cols)}")
+            print(f"SCHEMA   {name}: spark={sorted(s_cols)} duck={sorted(d_cols)} {took}")
             fail += 1
         elif type_mismatch:
             det = ", ".join(f"{c}: spark={sk} duck={dk}" for c, sk, dk in type_mismatch)
-            print(f"TYPE     {name}: {det} (driver hasher renders these differently — cast the oracle)")
+            print(f"TYPE     {name}: {det} (driver hasher renders these differently — cast the oracle) {took}")
             fail += 1
         elif s_rows != d_rows:
             diff_s = [r for r in s_rows if r not in d_rows][:3]
             diff_d = [r for r in d_rows if r not in s_rows][:3]
-            print(f"ROWS     {name}: {len(s_rows)} spark vs {len(d_rows)} duck rows")
+            print(f"ROWS     {name}: {len(s_rows)} spark vs {len(d_rows)} duck rows {took}")
             print(f"         spark-only: {diff_s}")
             print(f"         duck-only:  {diff_d}")
             fail += 1
         else:
-            print(f"OK       {name} ({len(s_rows)} rows)")
+            print(f"OK       {name} ({len(s_rows)} rows) {took}")
             ok += 1
     print(f"\n{ok} ok, {fail} failed in {time.monotonic() - t0:.0f} s")
     sys.exit(1 if fail else 0)

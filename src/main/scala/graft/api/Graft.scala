@@ -50,15 +50,21 @@ final class Graft(
   def currentTree: DataFrame = MetricSearchOps.currentTree(tree)
 
   /** §3.2 — glob search over visible tree nodes, with per-dir limit
-    * notification rows when [[treeLimits]] caps are configured.
+    * notification rows when [[treeLimits]] caps are configured: the
+    * serving snapshot, refreshed first, as a local (name, status) frame.
+    * Like [[metricData]], it sees every committed tree write and runs a
+    * Spark job only when tree files are new.
     */
-  def search(query: String): DataFrame =
-    MetricSearchOps.searchWithLimits(tree, query, treeLimits)
+  def search(query: String): DataFrame = {
+    import spark.implicits._
+    refreshedTrie().searchWithLimits(query, treeLimits).toDF("name", "status")
+  }
 
   /** The serving snapshot: a driver-side trie of the current tree (the
     * reference's in-memory `MetricTree`), keyed by the tree table's
     * committed files, so it is exact as of its last refresh
-    * ([[MetricTrie.refresh]]). None until first built.
+    * ([[MetricTrie.refresh]]). None until first built. [[search]],
+    * [[searchCached]] and [[metricData]] read it.
     */
   @volatile private var trie: Option[MetricTrie] = None
 
@@ -79,8 +85,8 @@ final class Graft(
     */
   def refreshSearchCache(): Unit = refreshedTrie()
 
-  /** Trie-served glob search: no Spark job, same results as [[search]]
-    * as of the last [[refreshSearchCache]] (or of the first call, which
+  /** [[search]] without the refresh: no Spark job, the same rows as
+    * [[search]] as of the last refresh (or of the first call, which
     * builds the snapshot).
     */
   def searchCached(query: String): Seq[(String, String)] =
@@ -156,11 +162,12 @@ final class Graft(
     MetricSearchOps.setStatus(tree, pattern, status, nowSeconds)
 
   /** NOTE: on an `updated` tie (same-second writes) the serving
-    * snapshot, and so [[metricData]] and [[searchCached]], keeps the row
-    * of the later-written tree file; the Spark path ([[currentTree]],
-    * [[search]]) keeps the row its scan reads last, like the reference's
-    * ReplacingMergeTree on equal versions. Pass an explicit monotonic
-    * `nowSeconds` when ordering matters.
+    * snapshot, and so ingest, [[search]], [[searchCached]] and
+    * [[metricData]], keeps the row of the later-written tree file; the
+    * Spark path ([[currentTree]], and with it [[setStatus]]'s own
+    * transitions and [[autoHide]]) keeps the row its scan reads last,
+    * like the reference's ReplacingMergeTree on equal versions. Pass an
+    * explicit monotonic `nowSeconds` when ordering matters.
     */
   def setStatus(pattern: String, status: MetricStatus,
                 nowSeconds: Long = System.currentTimeMillis() / 1000): Unit = {

@@ -15,10 +15,16 @@ import org.apache.spark.sql.functions.col
   * issue thousands of glob lookups per second, which should not each pay
   * a Spark job.
   *
+  * It is the one place the engine resolves tree state: the ingest path
+  * (ban gate, new nodes, per-dir caps, AUTO_HIDDEN revivals), `search`,
+  * `searchCached` and `/metricData` expansion all read a snapshot.
+  *
   * CONTRACT: `search(q)` returns exactly what
   * [[MetricSearchOps.search]] returns over the same tree state
   * (level-count match, per-level glob, optional trailing dot for dirs,
-  * visibility at emit, invalid glob → empty).
+  * visibility at emit, invalid glob → empty); [[searchWithLimits]]
+  * returns the reference's golden sets of
+  * `MetricTreeTest.testLimitNotifications` (`TreeLimitsSpec`).
   *
   * A snapshot is keyed by the tree table's committed files: it records
   * the files it has folded in, and [[refresh]] folds in exactly the
@@ -54,6 +60,32 @@ final class MetricTrie private (root: MetricTrie.Node,
     walk(levels.toSeq).flatMap(n => n.metricRow.toSeq ++ n.dirRow.toSeq)
       .filter { case (_, status) => MetricSearchOps.visibleStatus(status) }
   }
+
+  /** The latest status of `name` (a dir when it ends in a dot), visible
+    * or not; None when the tree has no row for it.
+    */
+  def statusOf(name: String): Option[String] =
+    nodeOf(name).flatMap { n =>
+      if (MetricNames.isDir(name)) n.dirRow else n.metricRow
+    }.map(_._2)
+
+  /** The children of dir `dir` ("" is the root), of any status: (dirs,
+    * metrics). The reference's per-dir caps count the same raw sizes,
+    * banned and hidden children included (`MetricDir.java:59-95`).
+    */
+  def childCounts(dir: String): (Int, Int) =
+    nodeOf(dir).fold((0, 0))(counts)
+
+  private def counts(n: MetricTrie.Node): (Int, Int) =
+    (n.children.valuesIterator.count(_.dirRow.isDefined),
+      n.children.valuesIterator.count(_.metricRow.isDefined))
+
+  /** The node at the literal path `path`, a name or a dir ("" is the
+    * root): the node the fold put its rows on.
+    */
+  private def nodeOf(path: String): Option[MetricTrie.Node] =
+    if (path.isEmpty) Some(root)
+    else MetricNames.splitToLevels(path).foldLeft(Option(root))((n, seg) => n.flatMap(_.children.get(seg)))
 
   /** The nodes reached from the root by matching `levels` one level at
     * a time: a hash hit for a literal level, a compiled-regex scan of the
@@ -137,13 +169,14 @@ final class MetricTrie private (root: MetricTrie.Node,
     new MetricTrie(newRoot, files ++ fresh, nodes)
   }
 
-  /** [[search]] plus limit-notification pseudo-rows — trie twin of
-    * [[MetricSearchOps.searchWithLimits]] (reference
+  /** [[search]] plus limit-notification pseudo-rows (reference
     * `MetricTree.appendLimitNotificationsIfNeeded`,
     * `search/tree/MetricTree.java:181-188`): a query whose last level is
     * the bare `*` prepends `<parent>._SUBDIRS_LIMIT_REACHED_MAX_N` /
     * `<parent>._METRICS_LIMIT_REACHED_MAX_N` rows for each matched
-    * visible parent dir at or past a cap.
+    * visible parent dir at or past a cap, so a user browsing a full dir
+    * sees why new children stopped appearing. Other last levels (globs,
+    * literals) add nothing, like the reference.
     */
   def searchWithLimits(query: String, limits: TreeLimits): Seq[(String, String)] = {
     if (!limits.enabled) return search(query)
@@ -157,10 +190,9 @@ final class MetricTrie private (root: MetricTrie.Node,
       if (!parentVisible) Nil
       else {
         val parentName = n.dirRow.map(_._1).getOrElse("")
-        val dirs = n.children.valuesIterator.count(_.dirRow.isDefined)
-        val metrics = n.children.valuesIterator.count(_.metricRow.isDefined)
-        // APPROVED, matching NotificationMetric.java:12 and the
-        // relational path (MetricSearchOps.limitNotifications)
+        val (dirs, metrics) = counts(n)
+        // the reference's NotificationMetric is born APPROVED
+        // (NotificationMetric.java:12), not SIMPLE
         val d = if (limits.maxSubDirsPerDir > 0 && dirs >= limits.maxSubDirsPerDir)
           Seq((parentName + limits.subdirsMessage, "APPROVED")) else Nil
         val m = if (limits.maxMetricsPerDir > 0 && metrics >= limits.maxMetricsPerDir)
@@ -193,10 +225,16 @@ object MetricTrie {
   /** The snapshot of a tree with no files; [[MetricTrie.refresh]] builds from it. */
   val empty: MetricTrie = new MetricTrie(new Node, Vector.empty, 0L)
 
-  /** The files a read of the tree table sees, in fold order. */
+  /** The files a read of the tree table sees, in fold order; none before
+    * the table's first committed write. An explicit existence check, not
+    * a catch: a listing error (an FS hiccup) fails the caller instead of
+    * reading as an empty tree, which would re-create every node.
+    */
   private def committedFiles(spark: SparkSession, treePath: String): Vector[TreeFile] = {
     val dir = new Path(treePath)
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).iterator
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Vector.empty
+    else fs.listStatus(dir).iterator
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       .map(s => TreeFile(s.getPath.toString, s.getModificationTime))
       .toVector.sorted(order)

@@ -64,14 +64,13 @@ final class IncrementalDedup(
     val spark = docs.sparkSession
     val batchSigs = signaturesFor(docs).cache()
     try {
+      // read with the batch's own schema, so a dir that holds no
+      // committed parquet (a crash mid-first-write left only
+      // `_temporary`) is an empty table, and no read infers a schema
       val existing: Option[DataFrame] = {
         val p = new org.apache.hadoop.fs.Path(sigPath)
         if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-          try Some(spark.read.parquet(sigPath))
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("Unable to infer schema") => None
-          }
+          Some(spark.read.schema(batchSigs.schema).parquet(sigPath))
         else None
       }
       def dupsAgainst(candidates: DataFrame, reference: DataFrame,

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ingest.LineParser
 import graft.model.{MetricPoint, MetricStatus, TreeLimits, TreeNode}
 import graft.names.MetricNames
-import graft.search.MetricSearchOps
+import graft.search.MetricTrie
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,18 +25,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   at-least-once insert + version collapse).
   * - No watermark: arbitrarily-late points are accepted by design
   *   (reference T3, `server/BaseMetricFactory.java:70-73`).
-  * - The tree upsert is one lookup plus driver decisions: the batch's
-  *   distinct names and their ancestor dirs are looked up in the tree
-  *   in one filtered collect of their raw rows (latest status kept per
-  *   name on the driver, `MetricSearchOps.currentStatus`), and the ban
-  *   gate, the new nodes, the per-dir caps and the AUTO_HIDDEN revivals
-  *   are decided on the driver (the reference's in-memory `MetricTree`
-  *   check). Driver memory is bounded by the tree rows (every status
-  *   version) of the batch's distinct names plus their ancestors, never
-  *   by the tree; with caps on, the same lookup also returns the rows of
-  *   the existing children of the batch's dirs and of the root, so the
-  *   bound grows by those children. Status semantics stay
-  *   read-side.
+  * - The tree upsert reads the pipeline's serving snapshot
+  *   ([[graft.search.MetricTrie]], the reference's in-memory
+  *   `MetricTree`): each batch first refreshes it from the tree table's
+  *   committed files (no Spark job when no file is new, else one collect
+  *   of the new files, usually the previous batch's own delta), and the
+  *   ban gate, the new nodes, the per-dir caps and the AUTO_HIDDEN
+  *   revivals are decided on the driver from it (the reference's
+  *   `MetricTree.modify` check). An `updated` tie between tree files goes
+  *   to the later-written file, as in every other snapshot read. Driver
+  *   memory holds the whole tree as of the last refresh, as the
+  *   reference's does, guarded by the trie's `maxNodes`. Status
+  *   semantics stay read-side.
   */
 final class IngestPipeline(
     parser: LineParser = new LineParser(),
@@ -45,6 +45,11 @@ final class IngestPipeline(
     limits: TreeLimits = TreeLimits.none,
     limitStatsPath: Option[String] = None
 ) extends Serializable {
+
+  /** The tree as of the last batch's refresh. Batches run one at a time
+    * on the driver, so one snapshot serves them all.
+    */
+  @transient private var trie: MetricTrie = MetricTrie.empty
 
   /** Append a per-batch tree-limit refusal count to the stats table
     * (same self-metric schema as [[IngestStatsListener]], so a full-dir
@@ -104,32 +109,19 @@ final class IngestPipeline(
     * refused (the reference returns the existing entry before the size
     * check).
     *
-    * Returns the refused names, dirs and metrics. `existing` is the
-    * current child count per (parent, is-dir), from the status lookup.
+    * Returns the refused names, dirs and metrics; existing children are
+    * counted in the snapshot, of any status.
     */
-  private def refusedByLimits(existing: Map[(String, Boolean), Int], fresh: Seq[String]): Set[String] = {
+  private def refusedByLimits(fresh: Seq[String]): Set[String] = {
     // existing + rank > max ⟺ the reference's size() >= max gate
     val over = fresh.groupBy(n => (MetricNames.parent(n), MetricNames.isDir(n))).flatMap {
-      case (key @ (_, isDir), siblings) =>
+      case ((parent, isDir), siblings) =>
         val max = if (isDir) limits.maxSubDirsPerDir else limits.maxMetricsPerDir
-        val children = existing.getOrElse(key, 0)
+        val (dirs, metrics) = trie.childCounts(parent)
+        val children = if (isDir) dirs else metrics
         siblings.sorted.zipWithIndex.collect { case (n, i) if max > 0 && children + i + 1 > max => n }
     }.toSet
     fresh.filter(n => ancestors(n).exists(over.contains)).toSet
-  }
-
-  /** The tree table, or None before its first committed write.
-    * Explicit existence check, NOT a catch-all: a transient read error
-    * (corrupt file, FS hiccup) must fail the batch so streaming retry
-    * semantics stay visible, instead of silently re-appending the whole
-    * tree every batch. Read with the model's schema, a dir that holds no
-    * committed parquet (a crash mid-first-write left only `_temporary`)
-    * is an empty table: a first batch.
-    */
-  private def readTree(spark: SparkSession): Option[DataFrame] = {
-    val treeP = new org.apache.hadoop.fs.Path(treePath)
-    if (!treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)) None
-    else Some(spark.read.schema(TreeNode.tableSchema).parquet(treePath))
   }
 
   /** One micro-batch: drop banned metrics, append points, upsert new
@@ -142,45 +134,27 @@ final class IngestPipeline(
     * the transition graph where AUTO_HIDDEN → SIMPLE is allowed (T6
     * "reopens on new data").
     *
-    * The tree is read once: the current status of the batch's names and
-    * their ancestor dirs comes back in one collect, and every per-name
-    * decision is made on the driver. A first batch is an empty status map.
-    * With per-dir caps on, the same collect also returns the existing
-    * children of the batch's dirs, which the caps count.
+    * The snapshot is refreshed first, and every per-name decision reads
+    * it on the driver. Before the tree's first committed write it is
+    * empty: a first batch.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
     import spark.implicits._
+    trie = trie.refresh(spark, treePath)
     val df = points.toDF().cache()
     try {
       // per-partition distinct, merged on the driver: one job, no shuffle
       val names = df.select("metric").as[String].mapPartitions(_.toSet.iterator).collect().distinct.toSeq
       val paths = names.map(n => n -> ancestors(n)).toMap
-      val lookup = paths.values.flatten.toSeq.distinct
-      // the batch's paths as a set filter: the aggregation is bounded by
-      // the batch, not the tree. With caps on, the lookup also returns
-      // the existing children of the batch's dirs and of the root, so
-      // the per-dir counts come from the same collect
-      val wanted =
-        if (limits.enabled) col("name").isin(lookup: _*) ||
-          col("parent").isin("" +: lookup.filter(MetricNames.isDir): _*)
-        else col("name").isin(lookup: _*)
-      // name → (parent, status) in the current tree
-      val current: Map[String, (String, String)] =
-        readTree(spark).fold(Map.empty[String, (String, String)])(MetricSearchOps.currentStatus(_, wanted))
-      val status: Map[String, String] = current.map { case (n, (_, st)) => n -> st }
       // the reference ban gate rejects a metric when ANY dir on its path
       // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
       // new children too, not just exact names
       val (banned, accepted) =
-        names.partition(n => paths(n).exists(status.get(_).contains(MetricStatus.Ban.name)))
+        names.partition(n => paths(n).exists(trie.statusOf(_).contains(MetricStatus.Ban.name)))
       val nodes = accepted.flatMap(paths).distinct
-      val fresh = nodes.filterNot(status.contains)
-      val refused =
-        if (limits.enabled && fresh.nonEmpty)
-          refusedByLimits(current.groupBy { case (n, (p, _)) => (p, MetricNames.isDir(n)) }
-            .map { case (key, children) => key -> children.size }, fresh)
-        else Set.empty[String]
+      val fresh = nodes.filter(trie.statusOf(_).isEmpty)
+      val refused = if (limits.enabled && fresh.nonEmpty) refusedByLimits(fresh) else Set.empty[String]
       // points of refused metrics are dropped like the reference's
       // factory path (a null tree add drops the point,
       // `server/BaseMetricFactory.java`)
@@ -194,7 +168,7 @@ final class IngestPipeline(
         (if (dropped.isEmpty) df else df.filter(!col("metric").isin(dropped: _*)))
           .sortWithinPartitions("metric", "timestamp")
           .write.mode("append").partitionBy("date").parquet(dataPath)
-      val revived = nodes.filter(status.get(_).contains(MetricStatus.AutoHidden.name))
+      val revived = nodes.filter(trie.statusOf(_).contains(MetricStatus.AutoHidden.name))
       val now = System.currentTimeMillis() / 1000
       // the trie-node creation of `MetricTree.modify`
       // (`search/tree/MetricTree.java:300-328`) as SIMPLE rows

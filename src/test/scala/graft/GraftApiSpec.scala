@@ -176,6 +176,14 @@ class GraftApiSpec extends AnyFunSuite {
     assert(g.searchCached("a.*").isEmpty)
   }
 
+  test("a store before its first tree write answers search and searchCached with nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_empty").toString
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    assert(g.search("*").collect().isEmpty)
+    assert(g.search("one_min.*").collect().isEmpty)
+    assert(g.searchCached("*").isEmpty)
+  }
+
   test("graphite lines pushed over TCP are searchable and readable") {
     val dir = java.nio.file.Files.createTempDirectory("graft_api_tcp").toString
     val g = new Graft(spark, s"$dir/data", s"$dir/tree")

@@ -51,4 +51,17 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val sigIds = spark.read.parquet(s"$dir/sigs").select("id").distinct().as[Long].collect().toSet
     assert(sigIds === ids)
   }
+
+  test("a sigs dir holding only a crashed first write reads as a first batch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_crash").toString
+    // a crashed task's staging dir and no committed part file
+    val staged = java.nio.file.Paths.get(s"$dir/sigs/_temporary/0/_temporary/attempt_0_0000_m_000000_0")
+    java.nio.file.Files.createDirectories(staged)
+    java.nio.file.Files.write(staged.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    val pipe = new IncrementalDedup(s"$dir/corpus", s"$dir/sigs", minhashSim = 0.5)
+    pipe.processBatch(Seq((1L, base), (2L, base + "!!"),
+      (3L, "entirely different content about query engines " * 10)).toDF("doc_id", "text"), 0L)
+    assert(spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long].collect().toSet === Set(1L, 3L))
+    assert(spark.read.parquet(s"$dir/sigs").select("id").distinct().as[Long].collect().toSet === Set(1L, 3L))
+  }
 }

@@ -128,6 +128,12 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(res.passed, res.toString)
   }
 
+  /** The Spark jobs, stages and time `body` takes. */
+  private def probed(body: => Unit): Dev.Measured = {
+    val probe = new Dev.Probe(spark.sparkContext)
+    try probe.measure(body) finally probe.close()
+  }
+
   test("a batch against an existing tree runs a pinned number of Spark jobs") {
     val dir = Files.createTempDirectory("graft_ingest_jobs").toString
     val pipe = pipeFor(dir)
@@ -135,10 +141,34 @@ class IngestPipelineSpec extends AnyFunSuite {
     // half the names exist, half are new; points span two dates
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
-    val probe = new Dev.Probe(spark.sparkContext)
-    val m = try probe.measure(pipe.processBatch(next, 1L)) finally probe.close()
+    val m = probed(pipe.processBatch(next, 1L))
     assert(m.jobs === 4L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 20 * 3, "20 new hosts: a dir and 2 metrics each")
+    // known names only: the refresh folds the last delta in, and no tree
+    // file is written
+    val known = probed(pipe.processBatch(pipe.parseBatch(lines(30 until 50).toDS(), 1700000002), 2L))
+    assert(known.jobs === 3L, known.toString)
+    // after a batch with no tree write the refresh runs no job
+    val after = probed(pipe.processBatch(pipe.parseBatch(lines(60 until 70).toDS(), 1700000003), 3L))
+    assert(after.jobs === 3L, after.toString)
+  }
+
+  test("an updated tie between tree files goes to the later file in ingest and search alike") {
+    val dir = Files.createTempDirectory("graft_ingest_tie").toString
+    def append(rows: Seq[(String, Int, String, String, Long)]): Unit =
+      rows.toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(s"$dir/tree")
+    // an earlier, small file, then a later and larger one that a Spark
+    // scan reads first; both stamp `tie.` in the same second
+    append(Seq(("tie.", 1, "", "SIMPLE", 100L), ("tie.metric", 2, "tie.", "SIMPLE", 100L)))
+    append(("tie.", 1, "", "BAN", 100L) +: (0 until 3000).map(i => (s"pad.metric$i", 2, "pad.", "SIMPLE", 100L)))
+    val pipe = pipeFor(dir)
+    pipe.processBatch(pipe.parseBatch(Seq("tie.metric 1.0 1700000000", "pad.metric1 2.0 1700000000").toDS(),
+      1700000000), 0L)
+    assert(spark.read.parquet(s"$dir/data").select("metric").as[String].collect().toSet === Set("pad.metric1"))
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    val searched = g.search("*").select("name").as[String].collect().toSet
+    assert(searched === Set("pad."))
+    assert(g.searchCached("*").map(_._1).toSet === searched)
   }
 
   test("a batch with per-dir caps on runs a pinned number of Spark jobs") {
@@ -151,8 +181,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     // new host only its first metric (cpu) fits under the metric cap
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
-    val probe = new Dev.Probe(spark.sparkContext)
-    val m = try probe.measure(pipe.processBatch(next, 1L)) finally probe.close()
+    val m = probed(pipe.processBatch(next, 1L))
     assert(m.jobs === 4L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 4 * 2 * 2, "8 new hosts: a dir and a metric each")
   }

@@ -73,62 +73,85 @@ class SearchSpec extends AnyFunSuite {
       s"glob_match is still above the Aggregate:\n$plan")
   }
 
-  test("currentStatus equals currentTree, updated ties included") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_current_status").toString + "/tree"
-    // a batch's SIMPLE rows, then a status file: BAN in the same second
-    // (a tie), APPROVED a second later, HIDDEN older than the batch
-    (0 until 3000).map(i => (s"a.m$i", 2, "a.", "SIMPLE", 100L)).toDF("name", "level", "parent", "status", "updated")
-      .coalesce(1).write.parquet(dir)
-    ((0 until 16).map(i => (s"a.m$i", 2, "a.", "BAN", 100L)) ++
-      Seq(("a.m20", 2, "a.", "APPROVED", 101L), ("a.m30", 2, "a.", "HIDDEN", 50L)))
-      .toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(dir)
-    val t = spark.read.parquet(dir)
-    val rows = col("name").isin((0 until 40).map(i => s"a.m$i"): _*)
-    val want = MetricSearchOps.currentTree(t).filter(rows).select("name", "parent", "status")
-      .as[(String, String, String)].collect().map { case (n, p, st) => n -> ((p, st)) }.toMap
-    val got = MetricSearchOps.currentStatus(t, rows)
-    assert(got === want)
-    assert(got("a.m0") === (("a.", "BAN")) && got("a.m20")._2 === "APPROVED" && got("a.m30")._2 === "SIMPLE")
+  private type Row5 = (String, Int, String, String, Long)
+
+  /** An explicit model of the tree state a list of files gives, in the
+    * order they were written: per name, the row with the latest
+    * `updated`, and on a tie the row of the later file.
+    */
+  private def fileOrderModel(files: Seq[Seq[Row5]]): Map[String, Row5] =
+    files.flatten.foldLeft(Map.empty[String, Row5]) { (state, row) =>
+      if (state.get(row._1).forall(_._5 <= row._5)) state.updated(row._1, row) else state
+    }
+
+  /** The same-second BAN fixture: a batch's SIMPLE rows, then a status
+    * file with BAN in the same second (a tie), APPROVED a second later
+    * and HIDDEN older than the batch.
+    */
+  private val batchFile: Seq[Row5] =
+    ("a.", 1, "", "SIMPLE", 100L) +: (0 until 3000).map(i => (s"a.m$i", 2, "a.", "SIMPLE", 100L))
+  private val statusFile: Seq[Row5] = (0 until 16).map(i => (s"a.m$i", 2, "a.", "BAN", 100L)) ++
+    Seq(("a.m20", 2, "a.", "APPROVED", 101L), ("a.m30", 2, "a.", "HIDDEN", 50L))
+
+  private def appendFile(dir: String, rows: Seq[Row5]): Unit =
+    rows.toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(dir)
+
+  test("the snapshot resolves updated ties by file order; currentTree pinned on the same files") {
+    import graft.search.MetricTrie
+    val dir = java.nio.file.Files.createTempDirectory("graft_tie_order").toString + "/tree"
+    appendFile(dir, batchFile)
+    appendFile(dir, statusFile)
+    val model = fileOrderModel(Seq(batchFile, statusFile))
+    val trie = MetricTrie.empty.refresh(spark, dir)
+    (0 until 40).map(i => s"a.m$i").foreach { n =>
+      assert(trie.statusOf(n) === model.get(n).map(_._4), n)
+    }
+    assert(trie.statusOf("a.m0") === Some("BAN") && trie.statusOf("a.m20") === Some("APPROVED") &&
+      trie.statusOf("a.m30") === Some("SIMPLE") && trie.statusOf("a.") === Some("SIMPLE"))
+    assert(trie.statusOf("a.m3000") === None && trie.statusOf("b.") === None)
+    // currentTree's scan order keeps BAN on this fixture too
+    val cur = MetricSearchOps.currentTree(spark.read.parquet(dir))
+      .filter(col("name").isin("a.m0", "a.m20", "a.m30")).select("name", "status").as[(String, String)].collect().toMap
+    assert(cur === Map("a.m0" -> "BAN", "a.m20" -> "APPROVED", "a.m30" -> "SIMPLE"))
   }
 
-  test("snapshot expansion equals currentStatus over a multi-file tree") {
+  test("snapshot expansion equals a file-order model over a multi-file tree") {
     import graft.search.MetricTrie
     val dir = java.nio.file.Files.createTempDirectory("graft_snapshot_expansion").toString + "/tree"
-    def append(rows: Seq[(String, Int, String, String, Long)], to: String = dir): Unit =
-      rows.toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(to)
     val patterns = Seq("a.m1", "a.m2?", "a.m3*", "a.*", "b.*", "b.x", "*", "a.m[0-9]")
     // the visible non-dir names the patterns match: from the snapshot,
-    // and from currentStatus over a Spark read of the same files
-    def check(trie: MetricTrie): Unit = {
+    // and from the model's rows through the relational glob filter
+    def check(trie: MetricTrie, files: Seq[Seq[Row5]]): Unit = {
       val got = patterns.flatMap(trie.search).map(_._1).filterNot(_.endsWith(".")).toSet
-      val want = MetricSearchOps.currentStatus(spark.read.parquet(dir), MetricSearchOps.matchesAny(patterns))
-        .collect { case (n, (_, st)) if MetricSearchOps.visibleStatus(st) && !n.endsWith(".") => n }.toSet
+      val want = fileOrderModel(files).values.toSeq.toDF("name", "level", "parent", "status", "updated")
+        .filter(MetricSearchOps.visibleCol(col("status")) && MetricSearchOps.matchesAny(patterns) &&
+          !col("name").endsWith("."))
+        .select("name").as[String].collect().toSet
       assert(got === want)
     }
-    // the same-second BAN fixture: a batch's SIMPLE rows, then a status
-    // file with BAN in the same second (a tie), APPROVED a second later
-    // and HIDDEN older than the batch
-    append(("a.", 1, "", "SIMPLE", 100L) +: (0 until 3000).map(i => (s"a.m$i", 2, "a.", "SIMPLE", 100L)))
-    append((0 until 16).map(i => (s"a.m$i", 2, "a.", "BAN", 100L)) ++
-      Seq(("a.m20", 2, "a.", "APPROVED", 101L), ("a.m30", 2, "a.", "HIDDEN", 50L)))
+    appendFile(dir, batchFile)
+    appendFile(dir, statusFile)
     val t1 = MetricTrie.empty.refresh(spark, dir)
-    check(t1)
+    check(t1, Seq(batchFile, statusFile))
     assert(t1.search("a.m0").isEmpty, "the later file's BAN wins the tie")
     assert(t1.search("a.m30").nonEmpty, "an older HIDDEN loses")
     // a new subtree, then a BAN back-dated far behind the newest stamp,
     // an APPROVED lifting a tied BAN, and a crashed writer's staging dir
-    append(Seq(("b.", 1, "", "SIMPLE", 10000L), ("b.x", 2, "b.", "SIMPLE", 1000L), ("b.y", 2, "b.", "SIMPLE", 10000L)))
-    append(Seq(("b.x", 2, "b.", "BAN", 2000L), ("a.m1", 2, "a.", "APPROVED", 200L)))
-    append(Seq(("a.m2", 2, "a.", "APPROVED", 999999L)), to = dir + "/_temporary/0")
+    val subtree: Seq[Row5] = Seq(("b.", 1, "", "SIMPLE", 10000L), ("b.x", 2, "b.", "SIMPLE", 1000L),
+      ("b.y", 2, "b.", "SIMPLE", 10000L))
+    val lifts: Seq[Row5] = Seq(("b.x", 2, "b.", "BAN", 2000L), ("a.m1", 2, "a.", "APPROVED", 200L))
+    appendFile(dir, subtree)
+    appendFile(dir, lifts)
+    appendFile(dir + "/_temporary/0", Seq(("a.m2", 2, "a.", "APPROVED", 999999L)))
     val t2 = t1.refresh(spark, dir)
-    check(t2)
+    check(t2, Seq(batchFile, statusFile, subtree, lifts))
     assert(t2.search("b.*").map(_._1) === Seq("b.y") && t2.search("a.m1").nonEmpty && t2.search("a.m2").isEmpty)
     // delete the status file: the snapshot is rebuilt without its rows
-    val statusFile = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    val deleted = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
       .find(f => spark.read.parquet(f.getPath).filter($"name" === "a.m20" && $"status" === "APPROVED").count() > 0).get
-    assert(statusFile.delete())
+    assert(deleted.delete())
     val t3 = t2.refresh(spark, dir)
-    check(t3)
+    check(t3, Seq(batchFile, subtree, lifts))
     assert(t3.search("a.m0").nonEmpty)
   }
 

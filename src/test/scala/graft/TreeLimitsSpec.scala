@@ -1,7 +1,8 @@
 package graft
 
 import graft.model.{MetricPoint, TreeLimits}
-import graft.search.{MetricSearchOps, MetricTrie}
+import graft.api.Graft
+import graft.search.MetricTrie
 import graft.streaming.IngestPipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,14 +114,15 @@ class TreeLimitsSpec extends AnyFunSuite {
       "old-schema rows must keep their own batch identity, not collapse into one null group")
   }
 
-  test("limit notifications surface on trailing-* searches, relational and trie alike") {
+  test("limit notifications surface on trailing-* searches, facade and trie alike") {
     val dir = java.nio.file.Files.createTempDirectory("graft_limit_notif").toString
     val limits = TreeLimits(maxSubDirsPerDir = 1, maxMetricsPerDir = 2)
     val p = new IngestPipeline(dataPath = s"$dir/data", treePath = s"$dir/tree", limits = limits)
     p.processBatch(points("dir.subdir_a.m", "dir.subdir_b.m",
       "dir.metric_a", "dir.metric_b", "dir.metric_c", "dir.metric_d", "dir.metric_e"), 0L)
 
-    val tree = spark.read.parquet(s"$dir/tree")
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree", treeLimits = limits)
+    def names(q: String): Set[String] = g.search(q).select("name").as[String].collect().toSet
     // reference golden (MetricTreeTest.testLimitNotifications): both
     // notifications plus the admitted children
     val expected = Set(
@@ -129,38 +131,41 @@ class TreeLimitsSpec extends AnyFunSuite {
       "dir.subdir_a.",
       "dir.metric_a",
       "dir.metric_b")
-    val rel = MetricSearchOps.searchWithLimits(tree, "dir.*", limits)
-      .select("name").as[String].collect().toSet
-    assert(rel === expected)
+    assert(names("dir.*") === expected)
+    assert(g.searchCached("dir.*").map(_._1).toSet === expected)
 
     // notification pseudo-rows are APPROVED (NotificationMetric.java:12),
     // not SIMPLE — a consumer filtering on status must match the reference
-    val relStatuses = MetricSearchOps.searchWithLimits(tree, "dir.*", limits)
-      .filter(col("name").contains("_LIMIT_REACHED_"))
+    val statuses = g.search("dir.*").filter(col("name").contains("_LIMIT_REACHED_"))
       .select("status").as[String].collect().toSet
-    assert(relStatuses === Set("APPROVED"))
+    assert(statuses === Set("APPROVED"))
 
-    // trie twin returns the same rows
+    // a snapshot built straight from the files returns the same rows
     val trie = MetricTrie.empty.refresh(spark, s"$dir/tree")
     assert(trie.searchWithLimits("dir.*", limits).map(_._1).toSet === expected)
     assert(trie.searchWithLimits("dir.*", limits)
       .filter(_._1.contains("_LIMIT_REACHED_")).map(_._2).toSet === Set("APPROVED"))
 
     // root query: root holds 1 dir >= maxSubDirs → root-level notification
-    val root = MetricSearchOps.searchWithLimits(tree, "*", limits)
-      .select("name").as[String].collect().toSet
-    assert(root === Set("_SUBDIRS_LIMIT_REACHED_MAX_1", "dir."))
+    val root = Set("_SUBDIRS_LIMIT_REACHED_MAX_1", "dir.")
+    assert(names("*") === root)
     assert(trie.searchWithLimits("*", limits).map(_._1).toSet === root)
 
     // non-* last level emits no notifications (reference: only ALL_PATTERN)
-    val glob = MetricSearchOps.searchWithLimits(tree, "dir.metric_?", limits)
-      .select("name").as[String].collect().toSet
-    assert(glob === Set("dir.metric_a", "dir.metric_b"))
+    val glob = Set("dir.metric_a", "dir.metric_b")
+    assert(names("dir.metric_?") === glob)
     assert(trie.searchWithLimits("dir.metric_?", limits).map(_._1).toSet === glob)
 
     // caps off → plain search, no pseudo-rows
-    val off = MetricSearchOps.searchWithLimits(tree, "dir.*", TreeLimits.none)
-      .select("name").as[String].collect().toSet
-    assert(off === Set("dir.subdir_a.", "dir.metric_a", "dir.metric_b"))
+    val off = Set("dir.subdir_a.", "dir.metric_a", "dir.metric_b")
+    assert(new Graft(spark, s"$dir/data", s"$dir/tree").search("dir.*").select("name").as[String]
+      .collect().toSet === off)
+    assert(trie.searchWithLimits("dir.*", TreeLimits.none).map(_._1).toSet === off)
+
+    // the caps count children of any status: a banned child still fills
+    // its dir, so the notification stays
+    g.setStatus("dir.metric_a", graft.model.MetricStatus.Ban, nowSeconds = 2000000000L)
+    assert(names("dir.*") === expected - "dir.metric_a")
+    assert(trie.refresh(spark, s"$dir/tree").childCounts("dir.") === ((1, 2)))
   }
 }
