@@ -96,7 +96,7 @@ class SearchSpec extends AnyFunSuite {
   private def appendFile(dir: String, rows: Seq[Row5]): Unit =
     rows.toDF("name", "level", "parent", "status", "updated").coalesce(1).write.mode("append").parquet(dir)
 
-  test("the snapshot resolves updated ties by file order; currentTree pinned on the same files") {
+  test("the snapshot resolves updated ties by file order; currentTree pinned alike") {
     import graft.search.MetricTrie
     val dir = java.nio.file.Files.createTempDirectory("graft_tie_order").toString + "/tree"
     appendFile(dir, batchFile)
