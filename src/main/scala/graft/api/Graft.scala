@@ -80,14 +80,15 @@ final class Graft(
 
   /** Brings the serving snapshot up to the tree table's committed files:
     * no Spark job when no tree file is new, one collect of the new
-    * files' rows otherwise. Writes from other processes and back-dated
-    * [[setStatus]] stamps are seen like any other write.
+    * files' rows otherwise. Writes from other processes (or other
+    * facades) and back-dated stamps are seen like any other write; this
+    * facade's own [[setStatus]] writes are folded in as they commit.
     */
   def refreshSearchCache(): Unit = refreshedTrie()
 
   /** [[search]] without the refresh: no Spark job, the same rows as
     * [[search]] as of the last refresh (or of the first call, which
-    * builds the snapshot).
+    * builds the snapshot), plus this facade's [[setStatus]] writes since.
     */
   def searchCached(query: String): Seq[(String, String)] =
     trie.getOrElse(refreshedTrie()).searchWithLimits(query, treeLimits)
@@ -106,6 +107,8 @@ final class Graft(
     * group's one shuffle in [[MetricQuery.metricData]] (which also
     * carries the padding), and one for the result: 2 for a single group,
     * plus one collect when the refresh has new tree files to fold in.
+    * This facade's own [[setStatus]] files are folded in as they are
+    * written, so they never count as new here.
     * The data table is read with the model's schema, so no read infers
     * one.
     */
@@ -161,7 +164,14 @@ final class Graft(
                  nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame =
     MetricSearchOps.setStatus(tree, pattern, status, nowSeconds)
 
-  /** NOTE: on an `updated` tie (same-second writes) the serving
+  /** Persists [[statusRows]]: collects them (the one Spark job, the
+    * transitions against [[currentTree]]), commits them as one tree file
+    * from the driver ([[MetricTrie.append]]) and folds them into this
+    * facade's serving snapshot from memory, once it is built, so
+    * [[searchCached]] and the next [[metricData]] see them without a
+    * Spark job. A pattern that matches no transition writes no file.
+    *
+    * NOTE: on an `updated` tie (same-second writes) the serving
     * snapshot, and so ingest, [[search]], [[searchCached]] and
     * [[metricData]], keeps the row of the later-written tree file; the
     * Spark path ([[currentTree]], and with it [[setStatus]]'s own
@@ -171,7 +181,12 @@ final class Graft(
     */
   def setStatus(pattern: String, status: MetricStatus,
                 nowSeconds: Long = System.currentTimeMillis() / 1000): Unit = {
-    statusRows(pattern, status, nowSeconds).write.mode("append").parquet(treePath)
+    import spark.implicits._
+    val rows = statusRows(pattern, status, nowSeconds).as[TreeNode].collect().toSeq
+    if (rows.nonEmpty) synchronized {
+      val file = MetricTrie.append(spark, treePath, rows)
+      trie = trie.map(_.refresh(spark, treePath, Map(file -> rows)))
+    }
   }
 
   /** §3.3 — streaming ingest of graphite plaintext lines. */

@@ -2,10 +2,15 @@ package graft.search
 
 import scala.collection.mutable
 
-import graft.model.TreeLimits
+import graft.model.{TreeLimits, TreeNode}
 import graft.names.{Glob, MetricNames}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions.col
 
 /** Driver-side in-memory trie over the current metric tree — the
@@ -33,6 +38,12 @@ import org.apache.spark.sql.functions.col
   * and back-dated `updated` stamps included. Files are folded in
   * (modification time, path) order and a row overwrites an older or
   * equal `updated`, so an `updated` tie goes to the later-written file.
+  *
+  * The engine's own tree writes go through [[MetricTrie.append]], which
+  * commits one file from the driver; its writer passes the rows to
+  * [[refresh]], which folds them from memory in the same file order, so
+  * no Spark job writes the file or reads it back (the reference's
+  * `MetricTree.modify` likewise never re-reads what it saves).
   *
   * Scale: one node per tree path (~10M names is the reference's design
   * center); segments are interned by the child map, lookups are
@@ -108,12 +119,18 @@ final class MetricTrie private (root: MetricTrie.Node,
   /** This snapshot brought up to date with the committed files of the
     * tree table at `treePath`. The directory is listed with Spark's
     * rule for a table's files: plain files, minus names starting with
-    * `_` or `.` (so `_temporary` and `_SUCCESS` are never read).
+    * `_` or `.` (so `_temporary`, [[append]]'s staging dir and
+    * `_SUCCESS` are never read). `written` holds the rows of files the
+    * caller has just committed with [[append]], keyed by the path it
+    * returned: those fold from memory, and only the other new files are
+    * read.
     *   - No new file: returns this instance, and runs no Spark job.
-    *   - New files that all sort after the ones folded in: one collect
-    *     reads their raw (name, status, updated) rows, which are folded
-    *     into a path-copied trie that shares every untouched subtree
-    *     with this one (this instance is never mutated).
+    *   - New files that all sort after the ones folded in: they fold, in
+    *     (modification time, path) order, into a path-copied trie that
+    *     shares every untouched subtree with this one (this instance is
+    *     never mutated). One collect reads the raw (name, status,
+    *     updated) rows of the new files not in `written`; when every new
+    *     file is in `written`, no Spark job runs.
     *   - A folded file no longer listed (a merge, a replaced store), or
     *     a new file that sorts before the last one folded (a commit that
     *     landed late): the snapshot is rebuilt from all listed files.
@@ -121,25 +138,34 @@ final class MetricTrie private (root: MetricTrie.Node,
     * the same shape (>10M names ⇒ raise the 4 GB default heap,
     * `doc/config.md:17-19`).
     */
-  def refresh(spark: SparkSession, treePath: String, maxNodes: Long = 20000000L): MetricTrie = {
+  def refresh(spark: SparkSession, treePath: String, written: Map[String, Seq[TreeNode]] = Map.empty,
+              maxNodes: Long = 20000000L): MetricTrie = {
     val listed = MetricTrie.committedFiles(spark, treePath)
     val known = files.map(_.path).toSet
     val fresh = listed.filterNot(f => known.contains(f.path))
     val appendOnly = known.subsetOf(listed.map(_.path).toSet) &&
       files.lastOption.forall(last => fresh.forall(f => MetricTrie.order.lt(last, f)))
-    if (!appendOnly) MetricTrie.empty.fold(spark, treePath, listed, maxNodes)
+    if (!appendOnly) MetricTrie.empty.fold(spark, treePath, listed, written, maxNodes)
     else if (fresh.isEmpty) this
-    else fold(spark, treePath, fresh, maxNodes)
+    else fold(spark, treePath, fresh, written, maxNodes)
   }
 
-  /** `fresh` files' rows folded, in order, into a path copy of this trie. */
+  /** `fresh` files' rows folded, in order, into a path copy of this
+    * trie: rows of a file in `written` from memory, the others' from one
+    * collect.
+    */
   private def fold(spark: SparkSession, treePath: String, fresh: Seq[MetricTrie.TreeFile],
-                   maxNodes: Long): MetricTrie = {
+                   written: Map[String, Seq[TreeNode]], maxNodes: Long): MetricTrie = {
     import spark.implicits._
-    val rows = spark.read.schema(graft.model.TreeNode.tableSchema).parquet(treePath)
-      .filter(col("_metadata.file_path").isin(fresh.map(_.path): _*))
-      .select(col("_metadata.file_path"), col("name"), col("status"), col("updated"))
-      .as[(String, String, String, Long)].collect().groupBy(_._1)
+    val unread = fresh.map(_.path).filterNot(written.contains)
+    val read: Map[String, Seq[(String, String, Long)]] =
+      if (unread.isEmpty) Map.empty
+      else spark.read.schema(TreeNode.tableSchema).parquet(treePath)
+        .filter(col("_metadata.file_path").isin(unread: _*))
+        .select(col("_metadata.file_path"), col("name"), col("status"), col("updated"))
+        .as[(String, String, String, Long)].collect().toSeq.groupMap(_._1)(r => (r._2, r._3, r._4))
+    def rowsOf(path: String): Seq[(String, String, Long)] =
+      written.get(path).fold(read.getOrElse(path, Nil))(_.map(n => (n.name, n.status, n.updated)))
     val owned = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[MetricTrie.Node, java.lang.Boolean]())
     def copyOf(n: MetricTrie.Node): MetricTrie.Node = {
@@ -151,7 +177,7 @@ final class MetricTrie private (root: MetricTrie.Node,
     }
     val newRoot = copyOf(root)
     var nodes = size
-    for (f <- fresh; (_, name, status, upd) <- rows.getOrElse(f.path, Array.empty)) {
+    for (f <- fresh; (name, status, upd) <- rowsOf(f.path)) {
       var node = newRoot
       MetricNames.splitToLevels(name).foreach { seg =>
         node = node.children.get(seg) match {
@@ -238,6 +264,50 @@ object MetricTrie {
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       .map(s => TreeFile(s.getPath.toString, s.getModificationTime))
       .toVector.sorted(order)
+  }
+
+  /** Where [[append]] writes a file before committing it: a `_`-prefixed
+    * dir that Spark's reads and [[committedFiles]] both skip. It is not
+    * `_temporary`, which a Spark write to the same dir deletes when it
+    * commits.
+    */
+  val StagingDir = "_staging"
+
+  /** Commits `rows` to the tree table at `treePath` as one parquet file,
+    * written on the driver in name order (siblings share their parent
+    * and level, which then compress to runs), and returns its path as
+    * [[committedFiles]] spells it: the key [[refresh]]'s `written` takes.
+    * The file has the schema and footer a Spark write of
+    * [[TreeNode.tableSchema]] gives it, in the session's parquet codec.
+    * It is written under [[StagingDir]], then renamed into the table
+    * dir, so a crash leaves at most a staged file no reader sees.
+    */
+  def append(spark: SparkSession, treePath: String, rows: Seq[TreeNode]): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sqlConf = spark.sessionState.conf
+    val dir = new Path(treePath)
+    val fs = dir.getFileSystem(conf)
+    val codec = CompressionCodecName.valueOf(new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${codec.getExtension}.parquet"
+    val staged = new Path(new Path(dir, StagingDir), name)
+    val schema = new SparkToParquetSchemaConverter(sqlConf).convert(TreeNode.tableSchema)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(staged, conf))
+      .withConf(conf).withType(schema).withCompressionCodec(codec)
+      .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, TreeNode.tableSchema.json))
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.sortBy(_.name).foreach { n =>
+      val g = groups.newGroup()
+      Option(n.name).foreach(g.append("name", _))
+      g.append("level", n.level)
+      Option(n.parent).foreach(g.append("parent", _))
+      Option(n.status).foreach(g.append("status", _))
+      g.append("updated", n.updated)
+      writer.write(g)
+    } finally writer.close()
+    val committed = new Path(dir, name)
+    if (!fs.rename(staged, committed)) throw new java.io.IOException(s"could not commit $staged as $committed")
+    fs.getFileStatus(committed).getPath.toString
   }
 
   /** Version-guarded row write: only state at least as new as the

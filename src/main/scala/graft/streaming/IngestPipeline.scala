@@ -28,11 +28,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * - The tree upsert reads the pipeline's serving snapshot
   *   ([[graft.search.MetricTrie]], the reference's in-memory
   *   `MetricTree`): each batch first refreshes it from the tree table's
-  *   committed files (no Spark job when no file is new, else one collect
-  *   of the new files, usually the previous batch's own delta), and the
-  *   ban gate, the new nodes, the per-dir caps and the AUTO_HIDDEN
-  *   revivals are decided on the driver from it (the reference's
-  *   `MetricTree.modify` check). An `updated` tie between tree files goes
+  *   committed files (no Spark job unless another writer added a file,
+  *   else one collect of those files), and the ban gate, the new nodes,
+  *   the per-dir caps and the AUTO_HIDDEN revivals are decided on the
+  *   driver from it (the reference's `MetricTree.modify` check). The
+  *   batch's tree delta is committed from the driver as one file
+  *   ([[graft.search.MetricTrie.append]]) and folded into the snapshot
+  *   from memory, so no Spark job writes or re-reads it: a batch runs 2
+  *   Spark jobs, the names collect and the data append. The first batch
+  *   of a pipeline over an existing tree adds one collect, the
+  *   snapshot's first build. An `updated` tie between tree files goes
   *   to the later-written file, as in every other snapshot read. Driver
   *   memory holds the whole tree as of the last refresh, as the
   *   reference's does, guarded by the trie's `maxNodes`. Status
@@ -136,7 +141,8 @@ final class IngestPipeline(
     *
     * The snapshot is refreshed first, and every per-name decision reads
     * it on the driver. Before the tree's first committed write it is
-    * empty: a first batch.
+    * empty: a first batch. The tree delta is then committed and folded
+    * into the snapshot without a Spark job.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
@@ -162,11 +168,14 @@ final class IngestPipeline(
       // sort each written part by (metric, timestamp) — MergeTree sorts
       // every inserted part the same way; parquet row-group min/max
       // stats then give key-range skipping on fresh data, not just
-      // compacted partitions. No exchange before the write: hashing by
-      // metric would give every file a min/max range over nearly all names.
+      // compacted partitions. `date` leads the sort because the writer
+      // needs its input ordered by the partition column: a sort without
+      // it gets replaced by the writer's own sort on `date` alone. No
+      // exchange before the write: hashing by metric would give every
+      // file a min/max range over nearly all names.
       if (dropped.size < names.size)
         (if (dropped.isEmpty) df else df.filter(!col("metric").isin(dropped: _*)))
-          .sortWithinPartitions("metric", "timestamp")
+          .sortWithinPartitions("date", "metric", "timestamp")
           .write.mode("append").partitionBy("date").parquet(dataPath)
       val revived = nodes.filter(trie.statusOf(_).contains(MetricStatus.AutoHidden.name))
       val now = System.currentTimeMillis() / 1000
@@ -174,10 +183,11 @@ final class IngestPipeline(
       // (`search/tree/MetricTree.java:300-328`) as SIMPLE rows
       val delta = (fresh.filterNot(refused) ++ revived).map(n =>
         TreeNode(n, MetricNames.level(n), MetricNames.parent(n), MetricStatus.Simple.name, now))
-      // one file per batch, in name order: siblings share their parent
-      // and level, which then compress to runs
+      // one file per batch, committed from the driver and folded into
+      // the snapshot from memory: the reference's in-memory tree never
+      // re-reads what it saves either
       if (delta.nonEmpty)
-        delta.toDS().coalesce(1).sortWithinPartitions("name").write.mode("append").parquet(treePath)
+        trie = trie.refresh(spark, treePath, Map(MetricTrie.append(spark, treePath, delta) -> delta))
       if (limits.enabled && limitStatsPath.nonEmpty)
         recordRefusals(spark, refused.size.toLong, batchId)
     } finally df.unpersist()

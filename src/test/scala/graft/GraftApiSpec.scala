@@ -133,10 +133,11 @@ class GraftApiSpec extends AnyFunSuite {
     val (warm, warmRows) = request()
     assert(warm.jobs === 2L, warm.toString)
     assert(warmRows === want)
-    // a status write adds a tree file: one collect folds it in
+    // a facade status write folds its own file into the snapshot, so
+    // the next request's refresh finds no new file and runs no job
     g.setStatus("one_min.app.host1.cpu", MetricStatus.Ban, nowSeconds = 2000000001L)
     val (afterBan, banRows) = request()
-    assert(afterBan.jobs === 3L, afterBan.toString)
+    assert(afterBan.jobs === 2L, afterBan.toString)
     assert(banRows === want - "one_min.app.host1.cpu", "a glob no longer matches a banned name")
     val probe = new Dev.Probe(spark.sparkContext)
     val refresh = try probe.measure(g.refreshSearchCache()) finally probe.close()
@@ -156,14 +157,22 @@ class GraftApiSpec extends AnyFunSuite {
     Seq(graft.model.MetricPoint("a.y", 1.0, 0, new java.sql.Date(0L), 1)).toDS()
       .write.partitionBy("date").parquet(s"$dir/data")
     val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    val other = new Graft(spark, s"$dir/data", s"$dir/tree")
     assert(g.searchCached("a.*").map(_._1).toSet === Set("a.x", "a.y"))
 
-    // ban a.x stamped 2000: NEWER than a.x's row (so it wins the
-    // latest-status collapse) but far older than anything else folded in
-    g.setStatus("a.x", MetricStatus.Ban, nowSeconds = 2000L)
+    // another writer bans a.x stamped 2000: NEWER than a.x's row (so it
+    // wins the latest-status collapse) but far older than anything else
+    // folded in
+    other.setStatus("a.x", MetricStatus.Ban, nowSeconds = 2000L)
     assert(g.searchCached("a.*").map(_._1).toSet === Set("a.x", "a.y"),
       "searchCached answers from the snapshot until a refresh")
     g.refreshSearchCache()
+    assert(g.searchCached("a.*").map(_._1).toSet === Set("a.y"))
+    // a back-dated write through the facade itself folds in at once
+    g.setStatus("a.x", MetricStatus.Approved, nowSeconds = 2001L)
+    assert(g.searchCached("a.*").map(_._1).toSet === Set("a.x", "a.y"),
+      "a facade setStatus folds into its own snapshot")
+    g.setStatus("a.x", MetricStatus.Ban, nowSeconds = 2002L)
     assert(g.searchCached("a.*").map(_._1).toSet === Set("a.y"))
 
     // metricData refreshes on its own: a glob stops matching a name as

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import graft.api.Graft
-import graft.model.{MetricPoint, TreeLimits}
+import graft.model.{MetricPoint, TreeLimits, TreeNode}
 import graft.names.MetricNames
+import graft.search.MetricTrie
 import graft.streaming.IngestPipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -141,16 +142,21 @@ class IngestPipelineSpec extends AnyFunSuite {
     // half the names exist, half are new; points span two dates
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
+    // the names collect and the data append; the tree delta is
+    // committed from the driver and folded in from memory
     val m = probed(pipe.processBatch(next, 1L))
-    assert(m.jobs === 4L, m.toString)
+    assert(m.jobs === 2L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 20 * 3, "20 new hosts: a dir and 2 metrics each")
-    // known names only: the refresh folds the last delta in, and no tree
-    // file is written
+    // known names only: no tree file is new, and none is written
     val known = probed(pipe.processBatch(pipe.parseBatch(lines(30 until 50).toDS(), 1700000002), 2L))
-    assert(known.jobs === 3L, known.toString)
-    // after a batch with no tree write the refresh runs no job
+    assert(known.jobs === 2L, known.toString)
+    // new names after a batch with no tree write
     val after = probed(pipe.processBatch(pipe.parseBatch(lines(60 until 70).toDS(), 1700000003), 3L))
-    assert(after.jobs === 3L, after.toString)
+    assert(after.jobs === 2L, after.toString)
+    // a fresh pipeline over the same tree: its first build is one collect
+    val restarted = pipeFor(dir)
+    val first = probed(restarted.processBatch(restarted.parseBatch(lines(65 until 75).toDS(), 1700000004), 4L))
+    assert(first.jobs === 3L, first.toString)
   }
 
   test("an updated tie between tree files goes to the later file in ingest and search alike") {
@@ -182,8 +188,22 @@ class IngestPipelineSpec extends AnyFunSuite {
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
     val m = probed(pipe.processBatch(next, 1L))
-    assert(m.jobs === 4L, m.toString)
+    assert(m.jobs === 2L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 4 * 2 * 2, "8 new hosts: a dir and a metric each")
+  }
+
+  test("every data file a batch writes is sorted by metric and timestamp") {
+    val dir = Files.createTempDirectory("graft_ingest_sorted").toString
+    val rnd = new scala.util.Random(7)
+    // 20k lines in random order over 4 dates, in 4 input partitions
+    val batch = Seq.fill(20000)(s"s.m${rnd.nextInt(500)} ${rnd.nextDouble()} ${1699920000 + rnd.nextInt(4 * 86400)}")
+    val pipe = pipeFor(dir)
+    pipe.processBatch(pipe.parseBatch(batch.toDS().repartition(4), 1700000000), 0L)
+    val rows = spark.read.parquet(s"$dir/data")
+      .select(col("_metadata.file_path"), col("metric"), col("timestamp")).as[(String, String, Int)].collect()
+    val files = rows.toSeq.groupMap(_._1)(r => (r._2, r._3))
+    assert(files.size === 16, "a file per input partition and date")
+    files.foreach { case (file, keys) => assert(keys === keys.sorted, file) }
   }
 
   /** Graphite lines for hosts `hosts`: two metrics each, points either
@@ -234,11 +254,15 @@ class IngestPipelineSpec extends AnyFunSuite {
     answers(dir)
   }
 
-  /** Makes the next tree append fail: the committer cannot create its
-    * staging dir where a plain file sits. Readers skip `_`-prefixed names.
+  /** Makes the next tree append fail: the appender cannot stage its
+    * file where a plain file stands in for its (empty) staging dir.
+    * Readers skip `_`-prefixed names.
     */
-  private def blockTreeAppend(dir: String): Path =
-    Files.write(Paths.get(s"$dir/tree/_temporary"), Array[Byte](1))
+  private def blockTreeAppend(dir: String): Path = {
+    val staging = Paths.get(s"$dir/tree/${MetricTrie.StagingDir}")
+    Files.deleteIfExists(staging)
+    Files.write(staging, Array[Byte](1))
+  }
 
   private def dataCount(dir: String): Long = spark.read.parquet(s"$dir/data").count()
 
@@ -268,8 +292,32 @@ class IngestPipelineSpec extends AnyFunSuite {
     Files.createDirectories(staged)
     val bytes = Files.readAllBytes(part)
     Files.write(staged.resolve(part.getFileName), bytes.take(bytes.length / 2))
+    // and a truncated file in the appender's own staging dir
+    val ownStaging = Files.createDirectories(Paths.get(s"$dir/tree/${MetricTrie.StagingDir}"))
+    Files.write(ownStaging.resolve(part.getFileName), bytes.take(bytes.length / 2))
     ingest(dir, 1)
     assert(answers(dir) === clean)
+  }
+
+  test("replay after a crash between a staged tree file's write and its rename") {
+    val dir = seeded("graft_replay_staged")
+    ingest(dir, 0)
+    val block = blockTreeAppend(dir)
+    intercept[Exception](ingest(dir, 1))
+    Files.delete(block)
+    // a complete staged file, as the appender leaves it when it dies
+    // before the rename; its rows would change every answer if read
+    val elsewhere = Files.createTempDirectory("graft_staged_rows").toString + "/tree"
+    val written = Paths.get(new java.net.URI(MetricTrie.append(spark, elsewhere, Seq(
+      TreeNode("one_min.", 1, "", "BAN", 5000000000L),
+      TreeNode("one_min.ghost", 2, "one_min.", "SIMPLE", 5000000000L)))))
+    val staged = Files.createDirectories(Paths.get(s"$dir/tree/${MetricTrie.StagingDir}"))
+      .resolve(written.getFileName)
+    Files.move(written, staged)
+    ingest(dir, 1)
+    assert(answers(dir) === clean)
+    assert(Files.exists(staged), "the staged file is never committed")
+    assert(!spark.read.parquet(s"$dir/tree").select("name").as[String].collect().contains("one_min.ghost"))
   }
 
   test("a tree dir holding only a crashed first write reads as a first batch") {

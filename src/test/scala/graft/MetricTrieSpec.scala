@@ -1,6 +1,8 @@
 package graft
 
+import graft.model.TreeNode
 import graft.search.{MetricSearchOps, MetricTrie}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The trie cache's contract is exact agreement with the relational
@@ -103,6 +105,60 @@ class MetricTrieSpec extends AnyFunSuite {
     // a folded file is gone: the snapshot is rebuilt from what is listed
     assert(second.delete())
     assert(trie.refresh(spark, dir).search("s.*").map(_._1).toSet === Set("s.a"))
+  }
+
+  /** `body`'s result, its Spark jobs, and the rows its tasks read. */
+  private def probed[T](body: => T): (T, Dev.Measured, Long) = {
+    val sc = spark.sparkContext
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val probe = new Dev.Probe(sc)
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      var out: Option[T] = None
+      val m = probe.measure { out = Some(body) }
+      (out.get, m, records.get)
+    } finally { probe.close(); sc.removeSparkListener(listener) }
+  }
+
+  /** A snapshot's whole state over the names on disk at `dir`. */
+  private def state(t: MetricTrie, dir: String): (Long, Seq[(String, Option[String])], Seq[(String, String)]) = {
+    val names = spark.read.parquet(dir).select("name").as[String].collect().distinct.sorted.toSeq
+    (t.size, names.map(n => n -> t.statusOf(n)), Seq("*", "*.*").flatMap(t.search).sorted)
+  }
+
+  test("own files fold from memory, in file order with another writer's") {
+    val dir = newTree()
+    append(dir, Seq(("o.", 1, "", "SIMPLE", 100L), ("o.a", 2, "o.", "SIMPLE", 100L)))
+    val base = MetricTrie.empty.refresh(spark, dir)
+    // another writer's Spark write lands between this writer's refresh
+    // and its own append; both stamp `tie.` in the same second
+    val before = committed(dir).toSet
+    append(dir, Seq(("tie.", 1, "", "SIMPLE", 500L), ("o.b", 2, "o.", "SIMPLE", 500L)))
+    val foreign = (committed(dir).toSet -- before).head
+    val own = Seq(TreeNode("tie.", 1, "", "BAN", 500L), TreeNode("o.c", 2, "o.", "SIMPLE", 500L),
+      TreeNode("o.a", 2, "o.", "HIDDEN", 400L))
+    val ownPath = MetricTrie.append(spark, dir, own)
+    val ownFile = committed(dir).find(f => ownPath.endsWith("/" + f.getName)).get
+    val (next, m, rowsRead) = probed(base.refresh(spark, dir, Map(ownPath -> own)))
+    assert(m.jobs === 1L, m.toString)
+    assert(rowsRead === 2L, "the one collect reads the foreign file's rows only")
+    val rebuilt = MetricTrie.empty.refresh(spark, dir)
+    assert(state(next, dir) === state(rebuilt, dir))
+    // the tie goes to the later file in (modification time, path) order
+    val later = Seq(foreign, ownFile).maxBy(f => (f.lastModified(), f.getName))
+    assert(next.statusOf("tie.") === Some(if (later == ownFile) "BAN" else "SIMPLE"))
+    assert(next.statusOf("o.a") === Some("HIDDEN"))
+    // the caller's own file as the only new one: no Spark job
+    val more = Seq(TreeNode("o.d", 2, "o.", "SIMPLE", 600L))
+    val morePath = MetricTrie.append(spark, dir, more)
+    val (after, m2, _) = probed(next.refresh(spark, dir, Map(morePath -> more)))
+    assert(m2.jobs === 0L, m2.toString)
+    assert(state(after, dir) === state(MetricTrie.empty.refresh(spark, dir), dir))
   }
 
   test("snapshot soak: chained file refreshes race-free against readers") {

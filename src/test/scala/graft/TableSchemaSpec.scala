@@ -2,9 +2,15 @@ package graft
 
 import graft.api.Graft
 import graft.model.{MetricPoint, MetricStatus, TreeNode}
+import graft.search.MetricTrie
 import graft.streaming.IngestPipeline
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fixed read schemas of the two tables (`MetricPoint.tableSchema`,
@@ -44,5 +50,52 @@ class TableSchemaSpec extends AnyFunSuite {
     sameRead(g.tree, s"$dir/tree", "setStatus tree")
     assert(g.compactAuto(ageDays = -100000).nonEmpty)
     sameRead(g.data, s"$dir/data", "compactAuto data")
+  }
+
+  /** The distinct (parquet schema, footer row schema) pairs of the
+    * committed files at `dir`.
+    */
+  private def footers(dir: String): Set[(String, StructType)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().toSeq.filter(f => f.isFile && f.getName.startsWith("part-")).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema.toString,
+          DataType.fromJson(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType])
+      } finally reader.close()
+    }.toSet
+  }
+
+  test("driver-written and Spark-written tree files read alike") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_tree_parity").toString
+    // distinct stamps per name: the scan-order tie rule plays no part
+    val first = Seq(TreeNode("a.", 1, "", "SIMPLE", 1L), TreeNode("a.x", 2, "a.", "SIMPLE", 1L))
+    val later = Seq(
+      Seq(TreeNode("a.y", 2, "a.", "SIMPLE", 2L), TreeNode("a.x", 2, "a.", "BAN", 3L)),
+      Seq(TreeNode("b.", 1, "", "HIDDEN", 4L), TreeNode("b.z", 2, "b.", "SIMPLE", 4L), TreeNode("a.y", 2, "a.", "APPROVED", 5L)))
+    val sparkOnly = s"$base/spark/tree"
+    val mixed = s"$base/mixed/tree"
+    first.toDS().coalesce(1).write.parquet(sparkOnly)
+    later.foreach(r => r.toDS().coalesce(1).write.mode("append").parquet(sparkOnly))
+    first.toDS().coalesce(1).write.parquet(mixed)
+    later.foreach(MetricTrie.append(spark, mixed, _))
+    // Spark's file reads make every column nullable, so nullability is
+    // checked where it is written: each file's parquet schema and the
+    // row schema its footer stores
+    assert(footers(mixed) === footers(sparkOnly))
+    assert(footers(mixed).map(_._2) === Set(TreeNode.tableSchema))
+    assert(spark.read.parquet(mixed).schema === spark.read.parquet(sparkOnly).schema)
+    assert(spark.read.parquet(mixed).schema === StructType(TreeNode.tableSchema.map(_.copy(nullable = true))))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def seen(tree: String) = {
+      val g = new Graft(spark, s"$base/data", tree)
+      val trie = MetricTrie.empty.refresh(spark, tree)
+      val names = rows(g.tree.select("name")).distinct
+      (rows(g.tree), rows(g.currentTree), names.map(n => n -> trie.statusOf(n)), trie.size)
+    }
+    assert(seen(mixed) === seen(sparkOnly))
+    assert(seen(mixed)._2.size === 5)
   }
 }
