@@ -29,6 +29,11 @@ object MetricPoint {
     val fields = Encoders.product[MetricPoint].schema
     StructType(fields.filterNot(_.name == "date") :+ fields("date"))
   }
+
+  /** The columns a data file holds: [[tableSchema]] without `date`,
+    * which the file's `date=` dir names.
+    */
+  val fileSchema: StructType = StructType(tableSchema.filterNot(_.name == "date"))
 }
 
 /** One node of the metric-name tree (reference `doc/install.md:158-170`).

@@ -2,15 +2,11 @@ package graft.search
 
 import scala.collection.mutable
 
-import graft.model.{TreeLimits, TreeNode}
+import graft.model.{MetricStatus, TreeLimits, TreeNode}
 import graft.names.{Glob, MetricNames}
+import graft.sources.PartWriter
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions.col
 
 /** Driver-side in-memory trie over the current metric tree — the
@@ -40,10 +36,13 @@ import org.apache.spark.sql.functions.col
   * equal `updated`, so an `updated` tie goes to the later-written file.
   *
   * The engine's own tree writes go through [[MetricTrie.append]], which
-  * commits one file from the driver; its writer passes the rows to
+  * commits one file from the driver through the shared table writer
+  * ([[graft.sources.PartWriter]]); its caller passes the rows to
   * [[refresh]], which folds them from memory in the same file order, so
   * no Spark job writes the file or reads it back (the reference's
-  * `MetricTree.modify` likewise never re-reads what it saves).
+  * `MetricTree.modify` likewise never re-reads what it saves). The fold
+  * also keeps the set of BAN names ([[banned]]), so the ingest ban gate
+  * needs no walk of the trie.
   *
   * Scale: one node per tree path (~10M names is the reference's design
   * center); segments are interned by the child map, lookups are
@@ -55,7 +54,12 @@ import org.apache.spark.sql.functions.col
 final class MetricTrie private (root: MetricTrie.Node,
                                 files: Vector[MetricTrie.TreeFile],
                                 /** Node count: one node per distinct path. */
-                                val size: Long) {
+                                val size: Long,
+                                /** The names, dirs and metrics, whose latest
+                                  * status is BAN, kept as rows fold in: the
+                                  * ingest ban gate ships them to its tasks.
+                                  */
+                                val banned: Set[String]) {
 
   /** All (name, status) rows matching the glob query; visibility applied
     * at emit. Invalid globs return empty, matching the reference.
@@ -177,6 +181,7 @@ final class MetricTrie private (root: MetricTrie.Node,
     }
     val newRoot = copyOf(root)
     var nodes = size
+    var ban = banned
     for (f <- fresh; (name, status, upd) <- rowsOf(f.path)) {
       var node = newRoot
       MetricNames.splitToLevels(name).foreach { seg =>
@@ -188,11 +193,12 @@ final class MetricTrie private (root: MetricTrie.Node,
             node.children.update(seg, c2); c2
         }
       }
-      MetricTrie.setRow(node, name, status, upd)
+      if (MetricTrie.setRow(node, name, status, upd))
+        ban = if (status == MetricStatus.Ban.name) ban + name else ban - name
     }
     require(nodes <= maxNodes,
       s"metric tree has $nodes names > maxNodes=$maxNodes; raise the limit (and driver memory)")
-    new MetricTrie(newRoot, files ++ fresh, nodes)
+    new MetricTrie(newRoot, files ++ fresh, nodes, ban)
   }
 
   /** [[search]] plus limit-notification pseudo-rows (reference
@@ -249,7 +255,7 @@ object MetricTrie {
   private val order: Ordering[TreeFile] = Ordering.by((f: TreeFile) => (f.modified, f.path))
 
   /** The snapshot of a tree with no files; [[MetricTrie.refresh]] builds from it. */
-  val empty: MetricTrie = new MetricTrie(new Node, Vector.empty, 0L)
+  val empty: MetricTrie = new MetricTrie(new Node, Vector.empty, 0L, Set.empty)
 
   /** The files a read of the tree table sees, in fold order; none before
     * the table's first committed write. An explicit existence check, not
@@ -266,58 +272,28 @@ object MetricTrie {
       .toVector.sorted(order)
   }
 
-  /** Where [[append]] writes a file before committing it: a `_`-prefixed
-    * dir that Spark's reads and [[committedFiles]] both skip. It is not
-    * `_temporary`, which a Spark write to the same dir deletes when it
-    * commits.
+  /** Commits `rows` to the tree table at `treePath` as one parquet file
+    * through [[graft.sources.PartWriter.append]], written on the driver
+    * in name order (siblings share their parent and level, which then
+    * compress to runs), and returns its path as [[committedFiles]]
+    * spells it: the key [[refresh]]'s `written` takes. A crash leaves at
+    * most a staged file no reader sees.
     */
-  val StagingDir = "_staging"
-
-  /** Commits `rows` to the tree table at `treePath` as one parquet file,
-    * written on the driver in name order (siblings share their parent
-    * and level, which then compress to runs), and returns its path as
-    * [[committedFiles]] spells it: the key [[refresh]]'s `written` takes.
-    * The file has the schema and footer a Spark write of
-    * [[TreeNode.tableSchema]] gives it, in the session's parquet codec.
-    * It is written under [[StagingDir]], then renamed into the table
-    * dir, so a crash leaves at most a staged file no reader sees.
-    */
-  def append(spark: SparkSession, treePath: String, rows: Seq[TreeNode]): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sqlConf = spark.sessionState.conf
-    val dir = new Path(treePath)
-    val fs = dir.getFileSystem(conf)
-    val codec = CompressionCodecName.valueOf(new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
-    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${codec.getExtension}.parquet"
-    val staged = new Path(new Path(dir, StagingDir), name)
-    val schema = new SparkToParquetSchemaConverter(sqlConf).convert(TreeNode.tableSchema)
-    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(staged, conf))
-      .withConf(conf).withType(schema).withCompressionCodec(codec)
-      .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, TreeNode.tableSchema.json))
-      .build()
-    val groups = new SimpleGroupFactory(schema)
-    try rows.sortBy(_.name).foreach { n =>
-      val g = groups.newGroup()
-      Option(n.name).foreach(g.append("name", _))
-      g.append("level", n.level)
-      Option(n.parent).foreach(g.append("parent", _))
-      Option(n.status).foreach(g.append("status", _))
-      g.append("updated", n.updated)
-      writer.write(g)
-    } finally writer.close()
-    val committed = new Path(dir, name)
-    if (!fs.rename(staged, committed)) throw new java.io.IOException(s"could not commit $staged as $committed")
-    fs.getFileStatus(committed).getPath.toString
-  }
+  def append(spark: SparkSession, treePath: String, rows: Seq[TreeNode]): String =
+    PartWriter.append(spark, treePath, TreeNode.tableSchema, rows.sortBy(_.name).map(_.productIterator.toSeq))
 
   /** Version-guarded row write: only state at least as new as the
     * stored row wins, and a tie overwrites, so of two rows with equal
-    * `updated` the one folded later wins.
+    * `updated` the one folded later wins. True when the row was written.
     */
-  private[search] def setRow(node: Node, name: String, status: String, updated: Long): Unit =
+  private[search] def setRow(node: Node, name: String, status: String, updated: Long): Boolean =
     if (MetricNames.isDir(name)) {
-      if (updated >= node.dirUpd) { node.dirRow = Some((name, status)); node.dirUpd = updated }
+      val wins = updated >= node.dirUpd
+      if (wins) { node.dirRow = Some((name, status)); node.dirUpd = updated }
+      wins
     } else {
-      if (updated >= node.metricUpd) { node.metricRow = Some((name, status)); node.metricUpd = updated }
+      val wins = updated >= node.metricUpd
+      if (wins) { node.metricRow = Some((name, status)); node.metricUpd = updated }
+      wins
     }
 }

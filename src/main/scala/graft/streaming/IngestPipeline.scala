@@ -1,12 +1,18 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import graft.ingest.LineParser
 import graft.model.{MetricPoint, MetricStatus, TreeLimits, TreeNode}
 import graft.names.MetricNames
 import graft.search.MetricTrie
+import graft.sources.PartWriter
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Structured-Streaming ingest (SURVEY.md §3.3): graphite plaintext
   * lines → validated, enriched points appended to the data table, plus
@@ -19,29 +25,37 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Design notes for scale:
   * - Parsing is a typed `flatMap` at the boundary (per SURVEY §1.4) —
   *   the one place imperative validation logic lives.
-  * - The data sink is an idempotent append partitioned by `date` so
-  *   replays of a batch overwrite-or-duplicate safely: duplicates
-  *   collapse at read time via A1 dedup (reference T4 semantics —
-  *   at-least-once insert + version collapse).
+  * - The data sink is the reference's one bulk INSERT per batch
+  *   (`cacher/MetricCacher.java:305-319`) as one Spark job: each task
+  *   sorts its rows by (date, metric, timestamp) with Spark's spillable
+  *   sort, drops the rows under a banned path, streams the rest into one
+  *   parquet part per date under the batch's staging dir and returns its
+  *   part paths and its distinct metric names. The driver commits each
+  *   part by renaming it into `date=D/` ([[graft.sources.PartWriter]]),
+  *   so no commit protocol, `_SUCCESS` or job rename runs. Appends are
+  *   idempotent in effect: a replayed batch re-appends, and the
+  *   duplicates collapse at read time via A1 dedup (reference T4
+  *   semantics — at-least-once insert + version collapse).
   * - No watermark: arbitrarily-late points are accepted by design
   *   (reference T3, `server/BaseMetricFactory.java:70-73`).
   * - The tree upsert reads the pipeline's serving snapshot
   *   ([[graft.search.MetricTrie]], the reference's in-memory
   *   `MetricTree`): each batch first refreshes it from the tree table's
   *   committed files (no Spark job unless another writer added a file,
-  *   else one collect of those files), and the ban gate, the new nodes,
-  *   the per-dir caps and the AUTO_HIDDEN revivals are decided on the
-  *   driver from it (the reference's `MetricTree.modify` check). The
+  *   else one collect of those files). Its BAN names ride in the data
+  *   job's closure, and the new nodes, the per-dir caps and the
+  *   AUTO_HIDDEN revivals are decided on the driver from it and the
+  *   job's names (the reference's `MetricTree.modify` check). The
   *   batch's tree delta is committed from the driver as one file
-  *   ([[graft.search.MetricTrie.append]]) and folded into the snapshot
-  *   from memory, so no Spark job writes or re-reads it: a batch runs 2
-  *   Spark jobs, the names collect and the data append. The first batch
-  *   of a pipeline over an existing tree adds one collect, the
-  *   snapshot's first build. An `updated` tie between tree files goes
-  *   to the later-written file, as in every other snapshot read. Driver
-  *   memory holds the whole tree as of the last refresh, as the
-  *   reference's does, guarded by the trie's `maxNodes`. Status
-  *   semantics stay read-side.
+  *   ([[graft.search.MetricTrie.append]]), after the data parts, and
+  *   folded into the snapshot from memory, so no Spark job writes or
+  *   re-reads it: a batch runs 1 Spark job. The first batch of a
+  *   pipeline over an existing tree adds one collect, the snapshot's
+  *   first build; a batch whose caps refuse a name adds one more data
+  *   job. An `updated` tie between tree files goes to the later-written
+  *   file, as in every other snapshot read. Driver memory holds the
+  *   whole tree as of the last refresh, as the reference's does, guarded
+  *   by the trie's `maxNodes`. Status semantics stay read-side.
   */
 final class IngestPipeline(
     parser: LineParser = new LineParser(),
@@ -50,6 +64,7 @@ final class IngestPipeline(
     limits: TreeLimits = TreeLimits.none,
     limitStatsPath: Option[String] = None
 ) extends Serializable {
+  import IngestPipeline._
 
   /** The tree as of the last batch's refresh. Batches run one at a time
     * on the driver, so one snapshot serves them all.
@@ -60,7 +75,9 @@ final class IngestPipeline(
     * (same self-metric schema as [[IngestStatsListener]], so a full-dir
     * ingest pathology is visible on a dashboard, not just in logs —
     * the reference counts these through its statistics service). Only
-    * called when limits are on AND a stats path is configured.
+    * called when limits are on AND a stats path is configured. The one
+    * row is committed from the driver into `date=D/` through the shared
+    * writer, so it runs no Spark job.
     *
     * `timestamp` is WALL CLOCK (so timestamp-ranged reads and
     * timestamp-based retention see the series at its true age) and the
@@ -68,27 +85,15 @@ final class IngestPipeline(
     * batch (T4 at-least-once) re-appends the same (metric, batch_id)
     * and a reader collapses with `max_by(value, updated)` per
     * (metric, batch_id) — the A1 idiom, keyed on the batch instead of
-    * the timestamp. (An earlier design wrote `timestamp = batchId` to
-    * reuse the stock A1 key, but that rendered the series at 1970 on
-    * any time-axis consumer and mis-aged it under retention.)
-    *
-    * MIGRATION (pre-round-6 stats paths): old refusal rows have no
-    * `batch_id` column and carry the batch id IN `timestamp`. Read a
-    * mixed directory with `option("mergeSchema", true)` and key the
-    * dedup on `coalesce(batch_id, timestamp)` — exactly the batch id
-    * under both schemas (`TreeLimitsSpec` pins the mixed read).
+    * the timestamp.
     */
   private def recordRefusals(spark: SparkSession, nRefused: Long, batchId: Long): Unit =
     limitStatsPath.foreach { path =>
-      import spark.implicits._
       val now = (System.currentTimeMillis() / 1000).toInt
-      Seq(("one_min.graft.ingest.tree_limit_refused", nRefused.toDouble))
-        .toDF("metric", "value")
-        .select(col("metric"), col("value"), lit(now).as("timestamp"),
-          to_date(from_unixtime(lit(now.toLong))).as("date"), lit(now).as("updated"),
-          lit(batchId).as("batch_id"))
-        .coalesce(1)
-        .write.mode("append").partitionBy("date").parquet(path)
+      val date = java.time.Instant.ofEpochSecond(now)
+        .atZone(java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)).toLocalDate
+      PartWriter.append(spark, path, statsSchema,
+        Seq(Seq("one_min.graft.ingest.tree_limit_refused", nRefused.toDouble, now, now, batchId)), s"date=$date")
     }
 
   /** Parse a micro-batch of raw lines into points. */
@@ -97,10 +102,6 @@ final class IngestPipeline(
     val p = parser
     lines.flatMap(l => p.parse(l, updatedSeconds))
   }
-
-  /** The dir prefixes of a name, then the name: "a.b.c" → ["a.", "a.b.", "a.b.c"]. */
-  def ancestors(name: String): Seq[String] =
-    name.indices.collect { case i if name.charAt(i) == '.' => name.substring(0, i + 1) } :+ name
 
   /** Per-dir growth caps on the batch's NEW tree nodes (reference
     * `MetricDir.getOrCreateDir/getOrCreateMetric`,
@@ -139,58 +140,54 @@ final class IngestPipeline(
     * the transition graph where AUTO_HIDDEN → SIMPLE is allowed (T6
     * "reopens on new data").
     *
-    * The snapshot is refreshed first, and every per-name decision reads
-    * it on the driver. Before the tree's first committed write it is
-    * empty: a first batch. The tree delta is then committed and folded
-    * into the snapshot without a Spark job.
+    * The snapshot is refreshed first. Before the tree's first committed
+    * write it is empty: a first batch. Then one Spark job ([[stageParts]])
+    * drops the rows under the snapshot's BAN names, stages the rest as
+    * sorted data parts and returns the batch's names; every other
+    * per-name decision reads the snapshot on the driver. A batch whose
+    * caps refuse a name deletes its staged parts and stages once more
+    * without the refused metrics. The driver then commits the parts by
+    * rename, before the tree delta, so a crash leaves at most data with
+    * no tree rows, which a replay completes. The tree delta is committed
+    * and folded into the snapshot without a Spark job. The batch's
+    * staging dir is deleted on success and on failure alike.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
-    import spark.implicits._
     trie = trie.refresh(spark, treePath)
-    val df = points.toDF().cache()
-    try {
-      // per-partition distinct, merged on the driver: one job, no shuffle
-      val names = df.select("metric").as[String].mapPartitions(_.toSet.iterator).collect().distinct.toSeq
-      val paths = names.map(n => n -> ancestors(n)).toMap
-      // the reference ban gate rejects a metric when ANY dir on its path
-      // is banned (`MetricTree.java:300-328`), so a banned subtree blocks
-      // new children too, not just exact names
-      val (banned, accepted) =
-        names.partition(n => paths(n).exists(trie.statusOf(_).contains(MetricStatus.Ban.name)))
-      val nodes = accepted.flatMap(paths).distinct
+    val banned = trie.banned
+    val (nodes, fresh, refused) = PartWriter.staged(spark, dataPath) { stage =>
+      val staged = stageParts(points, stage, banned, Set.empty)
+      val names = staged.flatMap(_.names).distinct.toSeq
+      val nodes = names.flatMap(ancestors).distinct
       val fresh = nodes.filter(trie.statusOf(_).isEmpty)
       val refused = if (limits.enabled && fresh.nonEmpty) refusedByLimits(fresh) else Set.empty[String]
       // points of refused metrics are dropped like the reference's
       // factory path (a null tree add drops the point,
       // `server/BaseMetricFactory.java`)
-      val dropped = banned ++ accepted.filter(refused)
-      // sort each written part by (metric, timestamp) — MergeTree sorts
-      // every inserted part the same way; parquet row-group min/max
-      // stats then give key-range skipping on fresh data, not just
-      // compacted partitions. `date` leads the sort because the writer
-      // needs its input ordered by the partition column: a sort without
-      // it gets replaced by the writer's own sort on `date` alone. No
-      // exchange before the write: hashing by metric would give every
-      // file a min/max range over nearly all names.
-      if (dropped.size < names.size)
-        (if (dropped.isEmpty) df else df.filter(!col("metric").isin(dropped: _*)))
-          .sortWithinPartitions("date", "metric", "timestamp")
-          .write.mode("append").partitionBy("date").parquet(dataPath)
-      val revived = nodes.filter(trie.statusOf(_).contains(MetricStatus.AutoHidden.name))
-      val now = System.currentTimeMillis() / 1000
-      // the trie-node creation of `MetricTree.modify`
-      // (`search/tree/MetricTree.java:300-328`) as SIMPLE rows
-      val delta = (fresh.filterNot(refused) ++ revived).map(n =>
-        TreeNode(n, MetricNames.level(n), MetricNames.parent(n), MetricStatus.Simple.name, now))
-      // one file per batch, committed from the driver and folded into
-      // the snapshot from memory: the reference's in-memory tree never
-      // re-reads what it saves either
-      if (delta.nonEmpty)
-        trie = trie.refresh(spark, treePath, Map(MetricTrie.append(spark, treePath, delta) -> delta))
-      if (limits.enabled && limitStatsPath.nonEmpty)
-        recordRefusals(spark, refused.size.toLong, batchId)
-    } finally df.unpersist()
+      val dropped = names.filter(refused).toSet
+      val parts =
+        if (dropped.isEmpty) staged
+        else {
+          stage.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stage, true)
+          stageParts(points, stage, banned, dropped)
+        }
+      PartWriter.commit(spark, stage, dataPath, parts.flatMap(_.files).toSeq)
+      (nodes, fresh, refused)
+    }
+    val revived = nodes.filter(trie.statusOf(_).contains(MetricStatus.AutoHidden.name))
+    val now = System.currentTimeMillis() / 1000
+    // the trie-node creation of `MetricTree.modify`
+    // (`search/tree/MetricTree.java:300-328`) as SIMPLE rows
+    val delta = (fresh.filterNot(refused) ++ revived).map(n =>
+      TreeNode(n, MetricNames.level(n), MetricNames.parent(n), MetricStatus.Simple.name, now))
+    // one file per batch, committed from the driver and folded into
+    // the snapshot from memory: the reference's in-memory tree never
+    // re-reads what it saves either
+    if (delta.nonEmpty)
+      trie = trie.refresh(spark, treePath, Map(MetricTrie.append(spark, treePath, delta) -> delta))
+    if (limits.enabled && limitStatsPath.nonEmpty)
+      recordRefusals(spark, refused.size.toLong, batchId)
   }
 
   /** Wire a (line, updated) stream — the shape [[GraphiteSourceProvider]]
@@ -221,5 +218,54 @@ final class IngestPipeline(
     import lines.sparkSession.implicits._
     startStamped(lines.map(l => (l, (System.currentTimeMillis() / 1000).toInt)).toDF("line", "updated"),
       checkpoint, trigger)
+  }
+}
+
+object IngestPipeline {
+
+  /** The dir prefixes of a name, then the name: "a.b.c" → ["a.", "a.b.", "a.b.c"]. */
+  def ancestors(name: String): Seq[String] =
+    name.indices.collect { case i if name.charAt(i) == '.' => name.substring(0, i + 1) } :+ name
+
+  /** The refusal-stats table's columns, `date` aside. */
+  private val statsSchema = StructType(MetricPoint.fileSchema :+ StructField("batch_id", LongType, nullable = false))
+
+  /** One task's output: its staged parts, as paths relative to the
+    * staging dir, and the distinct metrics it kept.
+    */
+  private final case class Staged(files: Seq[String], names: Seq[String])
+
+  /** The batch's Spark job. Each task sorts its rows by (date, metric,
+    * timestamp) — MergeTree sorts every inserted part the same way, and
+    * parquet row-group min/max stats then give key-range skipping on
+    * fresh data, not just compacted partitions. It drops the rows of a
+    * metric in `dropped` or under a name in `banned` (the reference ban
+    * gate rejects a metric when ANY dir on its path is banned,
+    * `MetricTree.java:300-328`, so a banned subtree blocks new children
+    * too), and streams the rest into one part per date at
+    * `date=D/part-…` under `stage`. No exchange comes before it: hashing
+    * by metric would give every part a min/max range over nearly all
+    * names.
+    */
+  private def stageParts(points: Dataset[MetricPoint], stage: Path, banned: Set[String],
+                         dropped: Set[String]): Array[Staged] = {
+    val fmt = PartWriter.format(points.sparkSession, MetricPoint.fileSchema)
+    val dir = stage.toString
+    points.sortWithinPartitions("date", "metric", "timestamp").rdd.mapPartitions { rows =>
+      val kept = mutable.HashMap.empty[String, Boolean]
+      val in = rows.filter(p => kept.getOrElseUpdate(p.metric,
+        !dropped(p.metric) && !(banned.nonEmpty && ancestors(p.metric).exists(banned)))).buffered
+      val files = mutable.ArrayBuffer.empty[String]
+      while (in.hasNext) {
+        val date = in.head.date
+        val file = s"date=${date.toLocalDate}/${fmt.partName(TaskContext.getPartitionId())}"
+        fmt.write(new Path(dir, file), new Iterator[Seq[Any]] {
+          def hasNext: Boolean = in.hasNext && in.head.date == date
+          def next(): Seq[Any] = { val p = in.next(); Seq(p.metric, p.value, p.timestamp, p.updated) }
+        })
+        files += file
+      }
+      Iterator.single(Staged(files.toSeq, kept.collect { case (m, true) => m }.toSeq))
+    }.collect()
   }
 }

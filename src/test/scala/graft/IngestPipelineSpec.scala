@@ -6,6 +6,7 @@ import graft.api.Graft
 import graft.model.{MetricPoint, TreeLimits, TreeNode}
 import graft.names.MetricNames
 import graft.search.MetricTrie
+import graft.sources.PartWriter
 import graft.streaming.IngestPipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -18,8 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * model, the per-dir cap admission against an independent model, the
   * batch's Spark job count against an existing
   * tree (caps off and on), and the same `search` /
-  * `metricData` answers after a failed, half-written or replayed batch
-  * as after a clean run.
+  * `metricData` answers after a failed, half-written, crashed or
+  * replayed batch as after a clean run.
   */
 class IngestPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -62,14 +63,13 @@ class IngestPipelineSpec extends AnyFunSuite {
   }
 
   test("driver ancestors and tree nodes equal ancestorsCol / levelCol / parentCol") {
-    val pipe = pipeFor("/tmp/unused")
     val segment = Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(Gen.alphaNumChar, Gen.oneOf('_', '-'))))
       .map(_.mkString)
     val name = Gen.choose(1, 5).flatMap(n => Gen.listOfN(n, segment)).map(_.mkString("."))
     // the tree node processBatch writes for a new path
     def node(p: String) = (p, MetricNames.level(p), MetricNames.parent(p))
     val driver = Prop.forAll(Gen.listOfN(40, name)) { names =>
-      names.forall(n => pipe.ancestors(n) == modelPaths(n)) &&
+      names.forall(n => IngestPipeline.ancestors(n) == modelPaths(n)) &&
         names.flatMap(modelPaths).forall(p => node(p) == ((p, modelLevel(p), modelParent(p))))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), driver)
@@ -80,11 +80,11 @@ class IngestPipelineSpec extends AnyFunSuite {
       val colNodes = names.toDF("metric").select(explode(ancestorsCol(col("metric"))).as("name"))
         .select(col("name"), levelCol(col("name")), parentCol(col("name")))
         .as[(String, Int, String)].collect().toSet
-      names.forall(n => cols(n) == pipe.ancestors(n)) && names.flatMap(pipe.ancestors).map(node).toSet == colNodes
+      names.forall(n => cols(n) == IngestPipeline.ancestors(n)) && names.flatMap(IngestPipeline.ancestors).map(node).toSet == colNodes
     }
     val colRes = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), columns)
     assert(colRes.passed, colRes.toString)
-    assert(pipe.ancestors("solo") === Seq("solo"))
+    assert(IngestPipeline.ancestors("solo") === Seq("solo"))
   }
 
   test("per-dir caps admit exactly what an independent model admits") {
@@ -119,9 +119,12 @@ class IngestPipelineSpec extends AnyFunSuite {
       val wantTree = fresh.filterNot(refused).map(p => (p, modelLevel(p), modelParent(p), "SIMPLE")).toSet
       val gotTree = spark.read.parquet(s"$dir/tree").filter(col("updated") =!= 1L)
         .select("name", "level", "parent", "status").as[(String, Int, String, String)].collect().toSet
+      // read as `Graft.data` reads: a batch whose caps refuse every name
+      // commits no part, and leaves only an empty staging dir
       val gotData =
         if (!Files.exists(Paths.get(s"$dir/data"))) Set.empty[String]
-        else spark.read.parquet(s"$dir/data").select("metric").as[String].collect().toSet
+        else spark.read.schema(MetricPoint.tableSchema).parquet(s"$dir/data").select("metric").as[String]
+          .collect().toSet
       ((gotTree == wantTree) :| s"tree rows $gotTree, model $wantTree") &&
         ((gotData == batch.toSet -- refused) :| s"written metrics $gotData, refused $refused")
     }
@@ -142,21 +145,21 @@ class IngestPipelineSpec extends AnyFunSuite {
     // half the names exist, half are new; points span two dates
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
-    // the names collect and the data append; the tree delta is
-    // committed from the driver and folded in from memory
+    // the one data job; the data parts and the tree delta are committed
+    // from the driver, and the delta is folded in from memory
     val m = probed(pipe.processBatch(next, 1L))
-    assert(m.jobs === 2L, m.toString)
+    assert(m.jobs === 1L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 20 * 3, "20 new hosts: a dir and 2 metrics each")
     // known names only: no tree file is new, and none is written
     val known = probed(pipe.processBatch(pipe.parseBatch(lines(30 until 50).toDS(), 1700000002), 2L))
-    assert(known.jobs === 2L, known.toString)
+    assert(known.jobs === 1L, known.toString)
     // new names after a batch with no tree write
     val after = probed(pipe.processBatch(pipe.parseBatch(lines(60 until 70).toDS(), 1700000003), 3L))
-    assert(after.jobs === 2L, after.toString)
+    assert(after.jobs === 1L, after.toString)
     // a fresh pipeline over the same tree: its first build is one collect
     val restarted = pipeFor(dir)
     val first = probed(restarted.processBatch(restarted.parseBatch(lines(65 until 75).toDS(), 1700000004), 4L))
-    assert(first.jobs === 3L, first.toString)
+    assert(first.jobs === 2L, first.toString)
   }
 
   test("an updated tie between tree files goes to the later file in ingest and search alike") {
@@ -187,9 +190,17 @@ class IngestPipelineSpec extends AnyFunSuite {
     // new host only its first metric (cpu) fits under the metric cap
     val next = pipe.parseBatch(lines(20 until 60).toDS(), 1700000001)
     val treeRows = spark.read.parquet(s"$dir/tree").count()
+    // the batch refuses names: its first parts are discarded, and a
+    // second data job stages the batch without the refused metrics
     val m = probed(pipe.processBatch(next, 1L))
     assert(m.jobs === 2L, m.toString)
     assert(spark.read.parquet(s"$dir/tree").count() - treeRows === 4 * 2 * 2, "8 new hosts: a dir and a metric each")
+    assert(!spark.read.parquet(s"$dir/data").select("metric").as[String].collect().exists(_.endsWith(".mem")),
+      "no point of a refused metric lands in the data")
+    // admitted names only: nothing is refused, and one data job runs
+    val admitted = (0 until 40).map(h => s"one_min.app${h % 4}.host$h.cpu 3.0 1699920120")
+    val known = probed(pipe.processBatch(pipe.parseBatch(admitted.toDS(), 1700000002), 2L))
+    assert(known.jobs === 1L, known.toString)
   }
 
   test("every data file a batch writes is sorted by metric and timestamp") {
@@ -259,7 +270,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     * Readers skip `_`-prefixed names.
     */
   private def blockTreeAppend(dir: String): Path = {
-    val staging = Paths.get(s"$dir/tree/${MetricTrie.StagingDir}")
+    val staging = Paths.get(s"$dir/tree/${PartWriter.StagingDir}")
     Files.deleteIfExists(staging)
     Files.write(staging, Array[Byte](1))
   }
@@ -293,7 +304,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val bytes = Files.readAllBytes(part)
     Files.write(staged.resolve(part.getFileName), bytes.take(bytes.length / 2))
     // and a truncated file in the appender's own staging dir
-    val ownStaging = Files.createDirectories(Paths.get(s"$dir/tree/${MetricTrie.StagingDir}"))
+    val ownStaging = Files.createDirectories(Paths.get(s"$dir/tree/${PartWriter.StagingDir}"))
     Files.write(ownStaging.resolve(part.getFileName), bytes.take(bytes.length / 2))
     ingest(dir, 1)
     assert(answers(dir) === clean)
@@ -311,13 +322,58 @@ class IngestPipelineSpec extends AnyFunSuite {
     val written = Paths.get(new java.net.URI(MetricTrie.append(spark, elsewhere, Seq(
       TreeNode("one_min.", 1, "", "BAN", 5000000000L),
       TreeNode("one_min.ghost", 2, "one_min.", "SIMPLE", 5000000000L)))))
-    val staged = Files.createDirectories(Paths.get(s"$dir/tree/${MetricTrie.StagingDir}"))
+    val staged = Files.createDirectories(Paths.get(s"$dir/tree/${PartWriter.StagingDir}"))
       .resolve(written.getFileName)
     Files.move(written, staged)
     ingest(dir, 1)
     assert(answers(dir) === clean)
     assert(Files.exists(staged), "the staged file is never committed")
     assert(!spark.read.parquet(s"$dir/tree").select("name").as[String].collect().contains("one_min.ghost"))
+  }
+
+  /** The entries left under `table`'s staging dir (none when it is absent). */
+  private def staging(table: String): Seq[Path] = {
+    val dir = Paths.get(s"$table/${PartWriter.StagingDir}")
+    if (!Files.exists(dir)) Nil else Files.list(dir).toArray.toSeq.map(_.asInstanceOf[Path])
+  }
+
+  test("a failed data commit leaves nothing staged, and a replay answers cleanly") {
+    val dir = seeded("graft_replay_commit")
+    // a plain file where one of batch 0's date dirs belongs
+    val block = Files.createDirectories(Paths.get(s"$dir/data"))
+      .resolve(s"date=${new java.sql.Date(1699920060L * 1000).toLocalDate}")
+    Files.write(block, Array[Byte](1))
+    intercept[Exception](ingest(dir, 0))
+    assert(staging(s"$dir/data").isEmpty && staging(s"$dir/tree").isEmpty)
+    assert(!spark.read.parquet(s"$dir/tree").select("name").as[String].collect()
+      .exists(_.contains("host0")), "the tree append did not run")
+    Files.delete(block)
+    batches.indices.foreach(ingest(dir, _))
+    assert(answers(dir) === clean)
+  }
+
+  test("replay after a crash between data parts' write and their commit") {
+    val dir = seeded("graft_replay_parts")
+    ingest(dir, 0)
+    // complete parts staged by a batch that died before its renames;
+    // read, they would add a name and outrank a written point
+    val fmt = PartWriter.format(spark, MetricPoint.fileSchema)
+    val part = new org.apache.hadoop.fs.Path(s"$dir/data/${PartWriter.StagingDir}/crashed/" +
+      s"date=${new java.sql.Date(1699920060L * 1000).toLocalDate}/${fmt.partName(0)}")
+    fmt.write(part, Iterator(Seq("one_min.app1.host1.cpu", 1e9, 1699920060, Int.MaxValue),
+      Seq("one_min.ghost", 1.0, 1699920060, 1700000000)))
+    def unread(g: Graft) = {
+      val rows = g.data.select("metric", "value").as[(String, Double)].collect()
+      !rows.exists(r => r._1 == "one_min.ghost" || r._2 == 1e9)
+    }
+    ingest(dir, 1)
+    assert(answers(dir) === clean)
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    assert(unread(g))
+    assert(MetricTrie.empty.refresh(spark, s"$dir/tree").statusOf("one_min.ghost").isEmpty)
+    assert(g.compactAuto(ageDays = -100000).nonEmpty)
+    assert(unread(g))
+    assert(Files.exists(Paths.get(part.toString)), "the staged part is never committed")
   }
 
   test("a tree dir holding only a crashed first write reads as a first batch") {

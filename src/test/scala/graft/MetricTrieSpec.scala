@@ -89,6 +89,14 @@ class MetricTrieSpec extends AnyFunSuite {
     append(dir, Seq(("b.cpu", 2, "b.", "APPROVED", 3L)))
     assert(next.refresh(spark, dir).search("b.cpu").isEmpty,
       "older APPROVED row must not undo the newer HIDDEN")
+    // the BAN names follow the same fold: a ban, its newer lift, and an
+    // older row that cannot lift one
+    assert(trie.banned.isEmpty, "b.cpu's BAN at 2 was lifted at 3")
+    append(dir, Seq(("a.", 1, "", "BAN", 7L), ("b.cpu", 2, "b.", "BAN", 8L)))
+    append(dir, Seq(("a.", 1, "", "APPROVED", 9L), ("b.cpu", 2, "b.", "SIMPLE", 4L)))
+    val after = next.refresh(spark, dir)
+    assert(after.banned === Set("b.cpu"))
+    assert(MetricTrie.empty.refresh(spark, dir).banned === after.banned)
   }
 
   test("refresh skips _temporary and _SUCCESS, and rebuilds after a file is deleted") {

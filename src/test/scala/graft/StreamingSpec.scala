@@ -123,9 +123,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ancestor/level/parent name arithmetic") {
-    val pipe = new IngestPipeline(dataPath = "/tmp/x", treePath = "/tmp/y")
-    assert(pipe.ancestors("a.b.c") == Seq("a.", "a.b.", "a.b.c"))
-    assert(pipe.ancestors("solo") == Seq("solo"))
+    assert(IngestPipeline.ancestors("a.b.c") == Seq("a.", "a.b.", "a.b.c"))
+    assert(IngestPipeline.ancestors("solo") == Seq("solo"))
     assert(MetricNames.level("a.b.c") == 3 && MetricNames.level("solo") == 1)
     val par = Seq("a.b.c", "a.b.", "a.", "a").map(n => n -> MetricNames.parent(n)).toMap
     assert(par("a.b.c") == "a.b." && par("a.b.") == "a." && par("a.") == "" && par("a") == "")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.api.Graft
 import graft.model.{MetricPoint, MetricStatus, TreeNode}
 import graft.search.MetricTrie
@@ -15,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The fixed read schemas of the two tables (`MetricPoint.tableSchema`,
   * `TreeNode.tableSchema`) read what every writer leaves on disk exactly
-  * as parquet's schema inference reads it.
+  * as parquet's schema inference reads it, and the engine's own writer
+  * (`PartWriter`) leaves files a reader cannot tell from Spark's.
   */
 class TableSchemaSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -52,17 +55,18 @@ class TableSchemaSpec extends AnyFunSuite {
     sameRead(g.data, s"$dir/data", "compactAuto data")
   }
 
-  /** The distinct (parquet schema, footer row schema) pairs of the
-    * committed files at `dir`.
+  /** The distinct (parquet schema, footer row schema, footer keys)
+    * triples of the committed files at `dir`.
     */
-  private def footers(dir: String): Set[(String, StructType)] = {
+  private def footers(dir: String): Set[(String, StructType, Set[String])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     new java.io.File(dir).listFiles().toSeq.filter(f => f.isFile && f.getName.startsWith("part-")).map { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
       try {
         val meta = reader.getFooter.getFileMetaData
         (meta.getSchema.toString,
-          DataType.fromJson(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType])
+          DataType.fromJson(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType],
+          meta.getKeyValueMetaData.keySet.asScala.toSet)
       } finally reader.close()
     }.toSet
   }
@@ -83,7 +87,7 @@ class TableSchemaSpec extends AnyFunSuite {
     later.foreach(MetricTrie.append(spark, mixed, _))
     // Spark's file reads make every column nullable, so nullability is
     // checked where it is written: each file's parquet schema and the
-    // row schema its footer stores
+    // row schema its footer stores; its footer keys are Spark's too
     assert(footers(mixed) === footers(sparkOnly))
     assert(footers(mixed).map(_._2) === Set(TreeNode.tableSchema))
     assert(spark.read.parquet(mixed).schema === spark.read.parquet(sparkOnly).schema)
@@ -97,5 +101,41 @@ class TableSchemaSpec extends AnyFunSuite {
     }
     assert(seen(mixed) === seen(sparkOnly))
     assert(seen(mixed)._2.size === 5)
+  }
+
+  test("task-written and Spark-written data parts read alike") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_data_parity").toString
+    val tree = s"$base/tree"
+    // 3 metrics on 5 hosts either side of a midnight; the later batch
+    // rewrites two thirds of the first one's points
+    def lines(range: Range, bump: Double) =
+      range.map(i => s"one_min.app.host${i % 5}.m${i % 3} ${i * 0.5 + bump} ${1699919700 + i * 30}")
+    val pipe = new IngestPipeline(dataPath = s"$base/scratch", treePath = tree)
+    val first = pipe.parseBatch(lines(0 until 30, 0.0).toDS(), 1700000000)
+    val later = pipe.parseBatch(lines(10 until 40, 100.0).toDS(), 1700000100)
+    pipe.processBatch(first.union(later), 0L) // the tree, so later adds no tree file
+    def sparkWrite(batch: org.apache.spark.sql.Dataset[MetricPoint], data: String): Unit =
+      batch.sortWithinPartitions("date", "metric", "timestamp").write.mode("append").partitionBy("date").parquet(data)
+    val sparkOnly = s"$base/spark/data"
+    val mixed = s"$base/mixed/data"
+    Seq(first, later).foreach(sparkWrite(_, sparkOnly))
+    sparkWrite(first, mixed)
+    new IngestPipeline(dataPath = mixed, treePath = tree).processBatch(later, 1L)
+    val dates = new java.io.File(sparkOnly).list().filter(_.startsWith("date=")).toSeq.sorted
+    assert(dates.size === 2)
+    dates.foreach { d =>
+      assert(footers(s"$mixed/$d") === footers(s"$sparkOnly/$d"), d)
+      assert(footers(s"$mixed/$d").map(_._2) === Set(MetricPoint.fileSchema), d)
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val names = lines(0 until 40, 0.0).map(_.split(' ')(0)).distinct
+    def seen(data: String) = {
+      val g = new Graft(spark, data, tree)
+      val read = (rows(g.data), rows(g.metricData(names, 1699919700, 1699920900, nowSeconds = 1699921000)))
+      assert(g.compactAuto(ageDays = -100000).size === 2)
+      (read, rows(g.data))
+    }
+    assert(seen(mixed) === seen(sparkOnly))
   }
 }

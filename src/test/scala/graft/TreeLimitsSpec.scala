@@ -99,19 +99,6 @@ class TreeLimitsSpec extends AnyFunSuite {
       .agg(max_by(col("value"), col("updated")).as("value"))
       .select("value").as[Double].collect().toSeq.sorted
     assert(logical === Seq(0.0, 2.0), "replay must not double-count")
-
-    // migration: a PRE-round-6 stats file (no batch_id; the batch id
-    // rode in `timestamp`) next to the new-schema files — mergeSchema +
-    // coalesce(batch_id, timestamp) keys both generations correctly
-    Seq(("one_min.graft.ingest.tree_limit_refused", 7.0, 5, java.sql.Date.valueOf("2026-08-13"), 1700000000))
-      .toDF("metric", "value", "timestamp", "date", "updated")
-      .coalesce(1).write.mode("append").partitionBy("date").parquet(s"$dir/stats")
-    val mixed = spark.read.option("mergeSchema", "true").parquet(s"$dir/stats")
-      .groupBy(col("metric"), coalesce(col("batch_id"), col("timestamp")).as("bid"))
-      .agg(max_by(col("value"), col("updated")).as("value"))
-      .select("value").as[Double].collect().toSeq.sorted
-    assert(mixed === Seq(0.0, 2.0, 7.0),
-      "old-schema rows must keep their own batch identity, not collapse into one null group")
   }
 
   test("limit notifications surface on trailing-* searches, facade and trie alike") {
