@@ -25,7 +25,8 @@ final class TooManyMetricsException(val provided: Int, val max: Int)
   * `/search` → [[search]], `/metricData` → [[metricData]], status
   * management → [[setStatus]], TCP ingest → [[ingest]], plus the
   * background jobs ([[compact]], [[autoHide]]). A graphouse user's
-  * workflow maps 1:1; everything executes as Spark plans.
+  * workflow maps 1:1. Point reads and rewrites run as Spark plans; tree
+  * state, status writes included, resolves in one driver-side snapshot.
   */
 final class Graft(
     val spark: SparkSession,
@@ -63,8 +64,8 @@ final class Graft(
   /** The serving snapshot: a driver-side trie of the current tree (the
     * reference's in-memory `MetricTree`), keyed by the tree table's
     * committed files, so it is exact as of its last refresh
-    * ([[MetricTrie.refresh]]). None until first built. [[search]],
-    * [[searchCached]] and [[metricData]] read it.
+    * ([[MetricTrie.refresh]]). None until first built. Every read and
+    * status write of the tree goes through it.
     */
   @volatile private var trie: Option[MetricTrie] = None
 
@@ -82,13 +83,13 @@ final class Graft(
     * no Spark job when no tree file is new, one collect of the new
     * files' rows otherwise. Writes from other processes (or other
     * facades) and back-dated stamps are seen like any other write; this
-    * facade's own [[setStatus]] writes are folded in as they commit.
+    * facade's own status writes are folded in as they commit.
     */
   def refreshSearchCache(): Unit = refreshedTrie()
 
   /** [[search]] without the refresh: no Spark job, the same rows as
     * [[search]] as of the last refresh (or of the first call, which
-    * builds the snapshot), plus this facade's [[setStatus]] writes since.
+    * builds the snapshot), plus this facade's status writes since.
     */
   def searchCached(query: String): Seq[(String, String)] =
     trie.getOrElse(refreshedTrie()).searchWithLimits(query, treeLimits)
@@ -107,7 +108,7 @@ final class Graft(
     * group's one shuffle in [[MetricQuery.metricData]] (which also
     * carries the padding), and one for the result: 2 for a single group,
     * plus one collect when the refresh has new tree files to fold in.
-    * This facade's own [[setStatus]] files are folded in as they are
+    * This facade's own status writes are folded in as they are
     * written, so they never count as new here.
     * The data table is read with the model's schema, so no read infers
     * one.
@@ -156,37 +157,32 @@ final class Graft(
     frames.reduce(_ unionByName _)
   }
 
-  /** Status management (ban/approve/hide/...): appends transition rows
-    * honoring the restricted status graph. [[setStatus]] is the
-    * persisting form (appends these rows to the tree table).
-    */
-  def statusRows(pattern: String, status: MetricStatus,
-                 nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame =
-    MetricSearchOps.setStatus(tree, pattern, status, nowSeconds)
-
-  /** Persists [[statusRows]]: collects them (the one Spark job, the
-    * transitions against [[currentTree]]), commits them as one tree file
-    * from the driver ([[MetricTrie.append]]) and folds them into this
-    * facade's serving snapshot from memory, once it is built, so
-    * [[searchCached]] and the next [[metricData]] see them without a
-    * Spark job. A pattern that matches no transition writes no file.
-    *
-    * NOTE: on an `updated` tie (same-second writes) the serving
-    * snapshot, and so ingest, [[search]], [[searchCached]] and
-    * [[metricData]], keeps the row of the later-written tree file; the
-    * Spark path ([[currentTree]], and with it [[setStatus]]'s own
-    * transitions and [[autoHide]]) keeps the row its scan reads last,
-    * like the reference's ReplacingMergeTree on equal versions. Pass an
-    * explicit monotonic `nowSeconds` when ordering matters.
+  /** Status management (ban/approve/hide/...), the reference's
+    * `MetricTree.modify`: the names `pattern` selects in the refreshed
+    * snapshot ([[MetricTrie.matching]]) move to `status` through the
+    * restricted graph ([[MetricTrie.transitions]]). No Spark job runs on
+    * a built snapshot with no new file; a write that changes nothing,
+    * before the tree's first write too, commits nothing. An `updated` tie
+    * goes to the later-written file; pass a monotonic `nowSeconds` when
+    * ordering matters.
     */
   def setStatus(pattern: String, status: MetricStatus,
-                nowSeconds: Long = System.currentTimeMillis() / 1000): Unit = {
-    import spark.implicits._
-    val rows = statusRows(pattern, status, nowSeconds).as[TreeNode].collect().toSeq
-    if (rows.nonEmpty) synchronized {
+                nowSeconds: Long = System.currentTimeMillis() / 1000): Unit =
+    transition(_.matching(pattern), status, nowSeconds)
+
+  /** One status write, decided and committed under the facade's lock so
+    * two writes never decide from one snapshot: the rows are appended as
+    * one tree file and folded into the snapshot from memory.
+    */
+  private def transition(select: MetricTrie => Seq[String], status: MetricStatus,
+                         nowSeconds: Long): Seq[TreeNode] = synchronized {
+    val t = refreshedTrie()
+    val rows = t.transitions(select(t), status, nowSeconds)
+    if (rows.nonEmpty) {
       val file = MetricTrie.append(spark, treePath, rows)
-      trie = trie.map(_.refresh(spark, treePath, Map(file -> rows)))
+      trie = Some(t.refresh(spark, treePath, Map(file -> rows)))
     }
+    rows
   }
 
   /** §3.3 — streaming ingest of graphite plaintext lines. */
@@ -218,14 +214,16 @@ final class Graft(
   def compactAuto(ageDays: Int): Seq[String] =
     new Compaction(resolver).runAuto(spark, dataPath, ageDays)
 
-  /** Autohide sweep: junk metrics (few points, stale) → AUTO_HIDDEN rows. */
+  /** Autohide sweep (reference `AutoHideService.java:129-137`): the
+    * metrics one aggregate over the data finds junk (few points, stale)
+    * move to AUTO_HIDDEN like a [[setStatus]], persisted; ingest revives
+    * one that sends again. Returns the rows written, as a local frame.
+    */
   def autoHide(maxValues: Long, missingSeconds: Long,
                nowSeconds: Long = System.currentTimeMillis() / 1000): DataFrame = {
-    val candidates = MetricSearchOps.autoHideCandidates(
-      data, maxValues, nowSeconds - missingSeconds)
-    MetricSearchOps.transitionRows(
-      MetricSearchOps.currentTree(tree)
-        .join(candidates.select(col("metric").as("name")), Seq("name"), "left_semi"),
-      MetricStatus.AutoHidden, nowSeconds)
+    import spark.implicits._
+    val candidates = MetricSearchOps.autoHideCandidates(data, maxValues, nowSeconds - missingSeconds)
+      .select("metric").as[String].collect().toSeq
+    transition(_ => candidates, MetricStatus.AutoHidden, nowSeconds).toDF()
   }
 }

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.model.MetricPoint
 import graft.query.MetricQuery
 import graft.retention.RetentionResolver
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -132,7 +133,8 @@ final class Compaction(resolver: RetentionResolver) extends Serializable {
       val src = new Path(rootPath, s"date=$d")
       val stage = new Path(rootPath, s".compact_tmp_date=$d")
       val aside = new Path(rootPath, s".compact_old_date=$d")
-      val compacted = compact(spark.read.parquet(src.toString), java.time.LocalDate.parse(d))
+      val part = spark.read.schema(MetricPoint.fileSchema).parquet(src.toString) // no inference job
+      val compacted = compact(part, java.time.LocalDate.parse(d))
         .sortWithinPartitions("metric", "timestamp")
       compacted.write.mode(SaveMode.Overwrite).parquet(stage.toString)
       // swap: originals go aside first, staged dir renames into place,

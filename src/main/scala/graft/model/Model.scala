@@ -121,7 +121,7 @@ object MetricStatus {
     * silently reopened by automatic SIMPLE/AUTO_HIDDEN updates — only an
     * explicit APPROVED (or HIDDEN) lifts a ban.
     */
-  private[graft] val restricted: Map[MetricStatus, Set[MetricStatus]] = Map(
+  private val restricted: Map[MetricStatus, Set[MetricStatus]] = Map(
     Ban      -> Set[MetricStatus](Simple, AutoHidden),
     AutoBan  -> Set[MetricStatus](Simple, AutoHidden),
     Hidden   -> Set[MetricStatus](AutoHidden),

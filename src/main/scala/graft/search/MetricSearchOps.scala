@@ -1,18 +1,17 @@
 package graft.search
 
 import graft.model.MetricStatus
-import graft.names.{Glob, MetricNames}
+import graft.names.MetricNames
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Metric-tree search and status management over the append-only tree
-  * table (SURVEY.md §3.2), as Spark plans over the current tree state
-  * ([[currentTree]]): the oracle queries, status transitions
-  * ([[setStatus]], autohide) and [[dirVisibility]] run here. The facade's
-  * serving reads (`search`, `metricData` expansion) and the ingest path
-  * resolve names in [[MetricTrie]] instead, the reference's in-memory
-  * `search/tree/MetricTree.java`; its contract is [[search]]'s rows over
-  * the same tree state.
+/** Metric-tree search over the append-only tree table (SURVEY.md §3.2)
+  * as Spark plans over [[currentTree]], and the autohide candidate
+  * aggregate: the oracle queries and `Graft.currentTree` run here. The
+  * facade's reads and status writes and the ingest path resolve names in
+  * [[MetricTrie]] instead (the reference's in-memory
+  * `search/tree/MetricTree.java`), whose search contract is [[search]]'s
+  * rows over the same tree state.
   */
 object MetricSearchOps {
 
@@ -62,58 +61,6 @@ object MetricSearchOps {
     currentTree(tree)
       .filter(visibleCol(col("status")) && matchesAny(queries))
       .select("name", "status")
-
-  /** Status change (ban/approve/hide...): returns the rows to APPEND to the
-    * tree table for the names matching `namePattern`.
-    */
-  def setStatus(tree: DataFrame, namePattern: String, newStatus: MetricStatus,
-                updatedSeconds: Long): DataFrame = {
-    val re = Glob.queryToRegex(namePattern)
-      .getOrElse("^" + java.util.regex.Pattern.quote(namePattern) + "$")
-    transitionRows(currentTree(tree).filter(col("name").rlike(re)), newStatus, updatedSeconds)
-  }
-
-  /** Tree rows moving each node of `target` (rows of [[currentTree]])
-    * to `newStatus`. The restricted transition graph
-    * (`MetricStatus.selectStatus`) is applied against each node's
-    * current status, so e.g. a BAN survives an automatic SIMPLE update.
-    * No-op transitions (effective status unchanged) append nothing:
-    * repeated sweeps over a stable set must not grow the append-only
-    * tree table.
-    */
-  private[graft] def transitionRows(target: DataFrame, newStatus: MetricStatus,
-                                    updatedSeconds: Long): DataFrame =
-    target.select(
-      col("name"), col("level"), col("parent"),
-      col("status").as("__old"),
-      selectStatusCol(col("status"), lit(newStatus.name)).as("status"),
-      lit(updatedSeconds).as("updated")
-    )
-      .filter(col("status") =!= col("__old"))
-      .drop("__old")
-
-  /** Column form of [[MetricStatus.selectStatus]], folded from the same
-    * restricted-edge table (reference `MetricStatus.java:48-57`).
-    */
-  def selectStatusCol(oldStatus: Column, newStatus: Column): Column =
-    MetricStatus.restricted.foldLeft(when(oldStatus === newStatus, oldStatus)) {
-      case (c, (from, to)) =>
-        c.when(oldStatus === from.name && newStatus.isin(to.map(_.name).toSeq: _*), oldStatus)
-    }.otherwise(newStatus)
-
-  /** T6 — declarative dir visibility: a directory is auto-hidden when all
-    * of its children are invisible (reference counter-based
-    * `search/tree/MetricDir.java:106-168`, derived here with one
-    * aggregation instead of mutable per-dir counters).
-    */
-  def dirVisibility(tree: DataFrame): DataFrame =
-    currentTree(tree)
-      .groupBy(col("parent").as("dir"))
-      .agg(
-        sum(visibleCol(col("status")).cast("int")).as("visible_children"),
-        count(lit(1)).as("children")
-      )
-      .withColumn("auto_hide", col("visible_children") === 0)
 
   /** A4/F4/F5 — autohide candidate detection (reference
     * `AutoHideService.java:129-137`): metrics with fewer than `maxValues`

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions.col
   *
   * It is the one place the engine resolves tree state: the ingest path
   * (ban gate, new nodes, per-dir caps, AUTO_HIDDEN revivals), `search`,
-  * `searchCached` and `/metricData` expansion all read a snapshot.
+  * `searchCached`, `/metricData` expansion and status writes
+  * ([[matching]], [[transitions]]) all read a snapshot.
   *
   * CONTRACT: `search(q)` returns exactly what
   * [[MetricSearchOps.search]] returns over the same tree state
@@ -83,6 +84,34 @@ final class MetricTrie private (root: MetricTrie.Node,
     nodeOf(name).flatMap { n =>
       if (MetricNames.isDir(name)) n.dirRow else n.metricRow
     }.map(_._2)
+
+  /** The names of any status `pattern` selects for a status write: those
+    * [[graft.names.Glob.queryToRegex]] matches (trailing dot optional; an
+    * empty-matching last level also selects its dir, "a.*" selects "a."),
+    * found by a level walk with no level-count cut, so a class admitting
+    * a dot ("[!x]") never spans two levels. An invalid glob is a literal.
+    */
+  def matching(pattern: String): Seq[String] =
+    if (Glob.queryToRegex(pattern).isEmpty) statusOf(pattern).map(_ => pattern).toSeq
+    else {
+      val levels = MetricNames.splitToLevels(pattern).toSeq
+      val parents =
+        if (Glob.levelToRegex(levels.last).exists("".matches)) walk(levels.init).flatMap(_.dirRow) else Nil
+      parents.map(_._1) ++ walk(levels).flatMap(n => n.metricRow.map(_._1) ++ n.dirRow.map(_._1))
+    }
+
+  /** The rows moving each of `names` to `to` through the restricted
+    * graph ([[MetricStatus.selectStatus]]); unknown names and no-ops give
+    * none, so a repeated sweep does not grow the table.
+    */
+  def transitions(names: Seq[String], to: MetricStatus, updated: Long): Seq[TreeNode] =
+    names.distinct.flatMap { name =>
+      statusOf(name).flatMap { old =>
+        val next = MetricStatus.selectStatus(MetricStatus.of(old), to).name
+        if (next == old) None
+        else Some(TreeNode(name, MetricNames.level(name), MetricNames.parent(name), next, updated))
+      }
+    }
 
   /** The children of dir `dir` ("" is the root), of any status: (dirs,
     * metrics). The reference's per-dir caps count the same raw sizes,

@@ -86,6 +86,30 @@ class CompactionSpec extends AnyFunSuite {
     assert(got == Set(("one_min.x.y", 0, 2.0), ("one_min.x.y", 300, 4.0)))
   }
 
+  test("runAuto reads each aged partition with the model's schema: no schema-inference job") {
+    val root = java.nio.file.Files.createTempDirectory("graft_compact_jobs").toString
+    val dataRoot = s"$root/data"
+    val dates = Seq("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04")
+    dates.flatMap(d => Seq(("one_min.x.y", 2.0, 100, java.sql.Date.valueOf(d), 1),
+      ("one_min.x.y", 4.0, 350, java.sql.Date.valueOf(d), 2), ("one_hour.c.d", 5.0, 100, java.sql.Date.valueOf(d), 1)))
+      .toDF("metric", "value", "timestamp", "date", "updated")
+      .write.partitionBy("date").parquet(dataRoot)
+    val comp = new Compaction(Retention.defaultResolver)
+    val now = java.sql.Timestamp.valueOf("2024-02-01 00:00:00").getTime
+    val probe = new Dev.Probe(spark.sparkContext)
+    try {
+      val fixed = probe.measure(spark.read.schema(graft.model.MetricPoint.fileSchema).parquet(s"$dataRoot/date=${dates.head}"))
+      assert(fixed.jobs === 0L, fixed.toString)
+      // 5 jobs per partition; inferring each partition's schema on read
+      // cost one more (24)
+      val run = probe.measure(assert(comp.runAuto(spark, dataRoot, ageDays = 7, nowMillis = now) === dates))
+      assert(run.jobs === 20L, run.toString)
+    } finally probe.close()
+    val got = spark.read.parquet(dataRoot)
+      .select("metric", "timestamp", "value").as[(String, Int, Double)].collect().toSet
+    assert(got === Set(("one_min.x.y", 0, 2.0), ("one_min.x.y", 300, 4.0), ("one_hour.c.d", 0, 5.0)))
+  }
+
   test("compactPartition of an empty partition yields an empty frame, not an error") {
     val comp = new Compaction(Retention.defaultResolver)
     val empty = Seq.empty[(String, Double, Int, Int)]

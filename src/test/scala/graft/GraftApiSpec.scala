@@ -105,7 +105,9 @@ class GraftApiSpec extends AnyFunSuite {
       "one_min.app.host1.cpu 1.5 1700000000", "one_min.app.host2.cpu 2.5 1700000120",
       "one_min.app.host2.requests 7.0 1700000000").toDS(), 1700000000), 0L)
     val g = new Graft(spark, s"$dir/data", s"$dir/tree")
-    g.setStatus("one_min.app.host2.requests", MetricStatus.Ban, nowSeconds = 2000000000L)
+    // banned through another facade: this one's snapshot stays cold
+    new Graft(spark, s"$dir/data", s"$dir/tree")
+      .setStatus("one_min.app.host2.requests", MetricStatus.Ban, nowSeconds = 2000000000L)
     // an exact name, a glob, a banned name and an unknown name, all in
     // one retention group
     val patterns = Seq("one_min.app.host1.requests", "one_min.app.*.cpu",
@@ -191,6 +193,117 @@ class GraftApiSpec extends AnyFunSuite {
     assert(g.search("*").collect().isEmpty)
     assert(g.search("one_min.*").collect().isEmpty)
     assert(g.searchCached("*").isEmpty)
+  }
+
+  test("setStatus before the tree's first write writes nothing, like search") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_empty_status").toString
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    g.setStatus("one_min.*", MetricStatus.Ban, nowSeconds = 1000L)
+    g.setStatus("one_min.app.host1.cpu", MetricStatus.Approved, nowSeconds = 1001L)
+    assert(!new java.io.File(s"$dir/tree").exists)
+    assert(g.search("*").collect().isEmpty && g.searchCached("one_min.*").isEmpty)
+  }
+
+  /** The committed files of the tree table at `tree`. */
+  private def treeFiles(tree: String): Int =
+    new java.io.File(tree).listFiles().count(f => f.isFile && f.getName.startsWith("part-"))
+
+  test("setStatus honors the restricted transition graph") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_transitions").toString
+    Seq(
+      ("five_sec.", 1, "", "SIMPLE", 1L),
+      ("five_sec.int_8742.", 2, "five_sec.", "SIMPLE", 1L),
+      ("five_sec.int_8742.x1", 3, "five_sec.int_8742.", "SIMPLE", 1L),
+      ("five_sec.int_8742.x2", 3, "five_sec.int_8742.", "HIDDEN", 5L),
+      ("five_sec.int_8743.", 2, "five_sec.", "BAN", 2L),
+      ("five_sec.int_8743.x1", 3, "five_sec.int_8743.", "SIMPLE", 1L)
+    ).toDF("name", "level", "parent", "status", "updated").coalesce(1).write.parquet(s"$dir/tree")
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    def written(at: Long): Map[String, String] =
+      g.tree.filter($"updated" === at).select("name", "status").as[(String, String)].collect().toMap
+    g.setStatus("five_sec.int_874?.x?", MetricStatus.AutoHidden, nowSeconds = 10L)
+    // HIDDEN is handmade: an automatic AUTO_HIDDEN keeps it
+    assert(written(10L) === Map(
+      "five_sec.int_8742.x1" -> "AUTO_HIDDEN", "five_sec.int_8743.x1" -> "AUTO_HIDDEN"))
+    // SIMPLE must not reopen the BAN on the dir: the restricted edge is a
+    // no-op, and a no-op appends nothing, not even an empty file
+    val files = treeFiles(s"$dir/tree")
+    g.setStatus("five_sec.int_8743.", MetricStatus.Simple, nowSeconds = 11L)
+    assert(written(11L).isEmpty && treeFiles(s"$dir/tree") === files)
+    assert(g.searchCached("five_sec.*").map(_._1) === Seq("five_sec.int_8742."))
+    // APPROVED lifts it
+    g.setStatus("five_sec.int_8743.", MetricStatus.Approved, nowSeconds = 12L)
+    assert(written(12L) === Map("five_sec.int_8743." -> "APPROVED"))
+    assert(g.searchCached("five_sec.*").map(_._1).toSet === Set("five_sec.int_8742.", "five_sec.int_8743."))
+  }
+
+  test("status writes run no Spark job on a warm snapshot; autoHide runs only its candidate aggregate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_status_jobs").toString
+    val pipe = new graft.streaming.IngestPipeline(dataPath = s"$dir/data", treePath = s"$dir/tree")
+    pipe.processBatch(pipe.parseBatch(Seq(
+      "one_min.app.host1.requests 10.0 1700000000", "one_min.app.host1.requests 20.0 1700000060",
+      "one_min.app.host1.cpu 1.5 1700000000", "one_min.app.host2.cpu 2.5 1700000120",
+      "one_min.app.host2.requests 7.0 1700000000").toDS(), 1700000000), 0L)
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    g.refreshSearchCache()
+    val probe = new Dev.Probe(spark.sparkContext)
+    try {
+      val ban = probe.measure(g.setStatus("one_min.app.host2.*", MetricStatus.Ban, nowSeconds = 2000000000L))
+      assert(ban.jobs === 0L, ban.toString)
+      assert(g.searchCached("one_min.app.*.*").map(_._1).toSet ===
+        Set("one_min.app.host1.requests", "one_min.app.host1.cpu"))
+      val files = treeFiles(s"$dir/tree")
+      val noop = probe.measure(g.setStatus("one_min.app.host2.cpu", MetricStatus.Simple, nowSeconds = 2000000001L))
+      assert(noop.jobs === 0L, noop.toString)
+      assert(treeFiles(s"$dir/tree") === files, "a no-op status write commits no file")
+      // stamped past the batch's wall-clock tree rows; every point is stale
+      val (now, missing) = (2000000200L, 1000L)
+      // the sweep's one aggregate alone: 2 jobs, the map stage of its
+      // shuffle and the result
+      val aggregate = probe.measure(graft.search.MetricSearchOps.autoHideCandidates(g.data, 2, now - missing)
+        .select("metric").collect())
+      assert(aggregate.jobs === 2L, aggregate.toString)
+      var hidden = Array.empty[(String, String)]
+      val sweep = probe.measure {
+        hidden = g.autoHide(maxValues = 2, missingSeconds = missing, nowSeconds = now)
+          .select("name", "status").as[(String, String)].collect()
+      }
+      assert(sweep.jobs === aggregate.jobs, sweep.toString)
+      // host2's two metrics are BAN (kept); host1.cpu has one point
+      assert(hidden.toMap === Map("one_min.app.host1.cpu" -> "AUTO_HIDDEN"))
+      assert(g.searchCached("one_min.app.*.*").map(_._1) === Seq("one_min.app.host1.requests"))
+      val refresh = probe.measure(g.refreshSearchCache())
+      assert(refresh.jobs === 0L, "the sweep's file is folded in as it commits")
+    } finally probe.close()
+  }
+
+  test("an autoHide sweep persists and new points revive the metric (T6)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_autohide").toString
+    val g = new Graft(spark, s"$dir/data", s"$dir/tree")
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[String]
+    val q = g.ingest(source.toDS(), s"$dir/ckpt")
+    def visible(): Set[String] = g.search("one_min.app.*.requests").select("name").as[String].collect().toSet
+    try {
+      source.addData(
+        "one_min.app.host1.requests 10.0 1700000000",
+        "one_min.app.host1.requests 20.0 1700000060",
+        "one_min.app.host2.requests 5.0 1700000000")
+      q.processAllAvailable()
+      assert(visible() === Set("one_min.app.host1.requests", "one_min.app.host2.requests"))
+      // at the wall clock, with every point counted as stale: host2 has
+      // one point (< 2), host1 two
+      val hidden = g.autoHide(maxValues = 2, missingSeconds = -1000L)
+        .select("name", "status").as[(String, String)].collect().toMap
+      assert(hidden === Map("one_min.app.host2.requests" -> "AUTO_HIDDEN"))
+      assert(visible() === Set("one_min.app.host1.requests"))
+      assert(new Graft(spark, s"$dir/data", s"$dir/tree").search("one_min.app.host2.requests").count() === 0,
+        "the sweep persists: a new facade sees it")
+      // host2 sends again: ingest revives it (AUTO_HIDDEN -> SIMPLE)
+      source.addData("one_min.app.host2.requests 6.0 1700000120")
+      q.processAllAvailable()
+      assert(visible() === Set("one_min.app.host1.requests", "one_min.app.host2.requests"))
+    } finally q.stop()
   }
 
   test("graphite lines pushed over TCP are searchable and readable") {

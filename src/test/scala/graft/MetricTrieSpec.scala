@@ -61,6 +61,34 @@ class MetricTrieSpec extends AnyFunSuite {
     }
   }
 
+  test("matching selects names of any status per level; an invalid glob selects its literal name") {
+    val dir = newTree()
+    treeRows.coalesce(1).write.parquet(dir)
+    val trie = MetricTrie.empty.refresh(spark, dir)
+    def names(p: String): Set[String] = trie.matching(p).toSet
+    // a node's metric and dir both match, whether or not the pattern ends in a dot
+    assert(names("a.cpu") === Set("a.cpu", "a.cpu.") && names("a.cpu.") === names("a.cpu"))
+    // no level-count cut: search finds nothing for "a.cpu.." but a status write selects
+    assert(trie.search("a.cpu..").isEmpty && names("a.cpu..") === names("a.cpu"))
+    // any status: HIDDEN, AUTO_HIDDEN and APPROVED (over an older BAN) are selected
+    assert(names("a.mem") === Set("a.mem", "a.mem."))
+    // a last level that matches the empty string selects its dir too
+    assert(names("a.cpu.*") === Set("a.cpu.", "a.cpu.load1", "a.cpu.load5", "a.cpu.io_wait"))
+    assert(names("a.cpu.load?") === Set("a.cpu.load1", "a.cpu.load5"))
+    assert(names("?.cpu") === Set("a.cpu", "a.cpu.", "b.cpu"))
+    assert(names("a.{cpu,mem}.") === Set("a.cpu", "a.cpu.", "a.mem", "a.mem."))
+    // an invalid glob is one literal name, absent here
+    assert(names("a.cpu.[").isEmpty && names("nope.*").isEmpty)
+    // each level matches on its own: the whole-name regex of "a[!x]cpu"
+    // matches "a.cpu" across the dot, the level walk does not
+    assert(graft.names.Glob.queryToRegex("a[!x]cpu").exists("a.cpu".matches) && names("a[!x]cpu").isEmpty)
+    val at = trie.transitions(Seq("a.cpu", "a.mem.", "b.cpu", "a.cpu.io_wait", "nope.x", "a.cpu"),
+      graft.model.MetricStatus.AutoHidden, 7L)
+    // SIMPLE moves, HIDDEN and APPROVED are kept, AUTO_HIDDEN is a no-op,
+    // an unknown name and a repeated one add nothing
+    assert(at === Seq(TreeNode("a.cpu", 2, "a.", "AUTO_HIDDEN", 7L)))
+  }
+
   test("file-fed refresh: new files fold in, original untouched, rebuild parity") {
     val dir = newTree()
     treeRows.coalesce(1).write.parquet(dir)

@@ -1,8 +1,11 @@
 package graft
 
-import graft.model.MetricStatus
+import graft.model.{MetricStatus, TreeNode}
+import graft.names.{Glob, MetricNames}
 import graft.search.MetricSearchOps
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tree search + status workflow over the append-only tree table
@@ -155,16 +158,114 @@ class SearchSpec extends AnyFunSuite {
     assert(t3.search("a.m0").nonEmpty)
   }
 
-  test("setStatus honors the restricted transition graph") {
-    val updates = MetricSearchOps.setStatus(tree, "five_sec.int_874?.x1", MetricStatus.AutoHidden, 10L)
-    val got = updates.select("name", "status").as[(String, String)].collect().toMap
-    assert(got("five_sec.int_8742.x1") == "AUTO_HIDDEN")
-    // BAN on the dir: SIMPLE must not reopen it — the restricted edge is
-    // a no-op and a no-op appends NOTHING (the ban persists because
-    // nothing newer is written)
-    val banned = MetricSearchOps.setStatus(tree, "five_sec.int_8743.", MetricStatus.Simple, 11L)
-    assert(banned.count() == 0)
+  /** The transitions a status write of `to` at `updated` makes over the
+    * current rows `current`, decided as the Spark path decided them: the
+    * whole-name regex of [[Glob.queryToRegex]], or the quoted literal for
+    * an invalid glob, then [[MetricStatus.selectStatus]] per row, no-ops
+    * dropped.
+    */
+  private def modelTransitions(current: Seq[Row5], pattern: String, to: MetricStatus,
+                               updated: Long): Set[TreeNode] = {
+    val re = java.util.regex.Pattern.compile(Glob.queryToRegex(pattern)
+      .getOrElse("^" + java.util.regex.Pattern.quote(pattern) + "$"))
+    current.filter(r => re.matcher(r._1).find()).flatMap { case (name, level, parent, status, _) =>
+      val next = MetricStatus.selectStatus(MetricStatus.of(status), to).name
+      if (next == status) None else Some(TreeNode(name, level, parent, next, updated))
+    }.toSet
   }
+
+  /** Metrics and dirs over three levels: a metric and a dir on one node
+    * ("a.x" and "a.x."), and a name only an invalid glob's literal
+    * fallback selects ("a.[").
+    */
+  private val nodes: Seq[String] = {
+    val metrics = Seq("a.x", "a.y", "a.x.m1", "a.x.m2", "a.x.n", "a.y.m1", "b.x", "b.z1.m1", "a.[")
+    def dirs(n: String): Seq[String] = {
+      val p = MetricNames.parent(n)
+      if (p.isEmpty) Nil else p +: dirs(p)
+    }
+    (metrics ++ metrics.flatMap(dirs)).distinct
+  }
+
+  private val patternGen: Gen[String] = {
+    // literal, wildcard and invalid levels ("[", "{x", "}", a trailing
+    // backslash); no character class that can match a dot, which the
+    // whole-name regex lets span two levels and a level walk does not
+    val level = Gen.oneOf("a", "b", "x", "y", "z1", "m1", "n", "q", "*", "?", "m?", "[xy]",
+      "{x,z1}", "m[0-9]", "z*", "[", "{x", "}", "x\\")
+    val globs = for {
+      k <- Gen.choose(1, 3)
+      levels <- Gen.listOfN(k, level)
+      dots <- Gen.oneOf("", "", ".", "..")
+    } yield levels.mkString(".") + dots
+    Gen.frequency(8 -> globs, 1 -> Gen.oneOf("a.[", "a.[.", "a.x.", "a.x..", "*.*.*"))
+  }
+
+  private val filesGen: Gen[Seq[Seq[Row5]]] = for {
+    // a narrow stamp range makes updated ties common, a wide one rare
+    maxStamp <- Gen.oneOf(4L, 1000000L)
+    row = for {
+      n <- Gen.oneOf(nodes)
+      st <- Gen.oneOf(MetricStatus.persisted)
+      u <- Gen.choose(1L, maxStamp)
+    } yield (n, MetricNames.level(n), MetricNames.parent(n), st.name, u)
+    k <- Gen.choose(1, 4)
+    files <- Gen.listOfN(k, Gen.choose(1, 12).flatMap(Gen.listOfN(_, row)))
+  } yield files
+
+  test("snapshot status transitions equal the Spark path's where no updated tie exists, file order on a tie") {
+    import graft.search.MetricTrie
+    import org.scalacheck.{Prop, Test => SCTest}
+    var tiedCases, untiedCases = 0
+    /** The snapshot's transitions over `files`, committed in that order,
+      * equal the file-order model's; with no tie, also the Spark path's
+      * over the same table.
+      */
+    def agrees(files: Seq[Seq[Row5]], pattern: String, to: MetricStatus): Boolean = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_transitions").toString + "/tree"
+      files.zipWithIndex.foreach { case (rows, i) =>
+        val path = MetricTrie.append(spark, dir, rows.map((TreeNode.apply _).tupled))
+        // pin the fold order to the commit order
+        new java.io.File(new java.net.URI(path)).setLastModified(1000000000000L + i * 1000L)
+      }
+      val trie = MetricTrie.empty.refresh(spark, dir)
+      val got = trie.transitions(trie.matching(pattern), to, 5000000L).toSet
+      val byFileOrder = modelTransitions(fileOrderModel(files).values.toSeq, pattern, to, 5000000L)
+      val tied = files.flatten.groupBy(_._1).values.exists(rs => rs.map(_._5).distinct.size < rs.size)
+      if (tied) { tiedCases += 1; got == byFileOrder }
+      else {
+        untiedCases += 1
+        val current = MetricSearchOps.currentTree(spark.read.schema(TreeNode.tableSchema).parquet(dir))
+          .as[Row5].collect().toSeq
+        got == byFileOrder && got == modelTransitions(current, pattern, to, 5000000L)
+      }
+    }
+    // the same-second BAN fixture: the later file's BAN wins the tie
+    assert(agrees(Seq(batchFile, statusFile), "a.m1?", MetricStatus.AutoHidden))
+    assert(agrees(Seq(statusFile, batchFile), "a.m1?", MetricStatus.AutoHidden))
+    tiedCases = 0
+    // no shrinking: each case writes a table and runs Spark jobs
+    val prop = Prop.forAllNoShrink(filesGen, patternGen, Gen.oneOf(MetricStatus.persisted)) { (files, pattern, to) =>
+      agrees(files, pattern, to)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, res.toString)
+    assert(tiedCases > 5 && untiedCases > 5, s"$tiedCases tied, $untiedCases untied cases")
+  }
+
+  /** T6 — declarative dir visibility: a directory is auto-hidden when all
+    * of its children are invisible (reference counter-based
+    * `search/tree/MetricDir.java:106-168`, derived here with one
+    * aggregation instead of mutable per-dir counters).
+    */
+  private def dirVisibility(tree: DataFrame): DataFrame =
+    MetricSearchOps.currentTree(tree)
+      .groupBy(col("parent").as("dir"))
+      .agg(
+        sum(MetricSearchOps.visibleCol(col("status")).cast("int")).as("visible_children"),
+        count(lit(1)).as("children")
+      )
+      .withColumn("auto_hide", col("visible_children") === 0)
 
   test("dir visibility derives auto-hide from children") {
     val hiddenKids = Seq(
@@ -174,7 +275,7 @@ class SearchSpec extends AnyFunSuite {
       ("e.", 1, "", "SIMPLE", 1L),
       ("e.m1", 2, "e.", "SIMPLE", 1L)
     ).toDF("name", "level", "parent", "status", "updated")
-    val vis = MetricSearchOps.dirVisibility(hiddenKids)
+    val vis = dirVisibility(hiddenKids)
     val byDir = vis.filter($"dir" =!= "").select("dir", "auto_hide").as[(String, Boolean)].collect().toMap
     assert(byDir("d.") && !byDir("e."))
   }
